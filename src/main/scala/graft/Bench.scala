@@ -17,183 +17,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      and the min (`queries_min`) — the median is robust to a single
   *      GC/compilation stall, the min shows the steady-state floor.
   *
-  * PROTOCOL DISCONTINUITY (round 8): execution is forced through the NOOP
-  * SINK, not `.count()`. Under count(), ColumnPruning + EliminateSorts
-  * strip work that doesn't affect the row count — verified empirically:
-  * q1's seven decimal aggregates and every query's final sort were absent
-  * from the counted plan, so rounds ≤ 7 under-measured real query cost.
-  * The noop writer consumes every output row with all columns
-  * materialized. Round-8 numbers are therefore HIGHER than round-7's for
-  * the same engine — compare rounds ≥ 8 to each other, or to r7's numbers
-  * only qualitatively. The JSON line carries `protocol: "noop-sink"` so
-  * the discontinuity is machine-visible.
-  *
-  * ROUND-10 leg changes: (1) the near-dup leg is `d_minhash_pipeline`
-  * (collapse-first over the full corpus — what a production pipeline
-  * runs); `d_minhash_pairs` keeps its oracle gate row but is no longer
-  * benched (raw pair enumeration is output-bound-quadratic on cloned
-  * corpora by contract — r9 100x: 79.2s of the 119.1s total). (2) The
-  * ETL leg runs FIRST (fresh JVM — `etl_protocol: "first-400-med5"`);
-  * compare etl numbers only within the same etl_protocol. (3) q1 runs
-  * 7 timed passes (`iters_q1`).
-  *
-  * ROUND-13 addition: a second full query leg under the 'orderkey'
-  * bucketed at-rest layout (`queries_bucketed`/`total_bucketed` — r12
-  * verdict item 4: the bucketed layout is the intended 100 TB at-rest
-  * configuration, so its regressions must be visible round-over-round,
-  * not measured once). Tables are rewritten fresh (untimed) each run.
-  *
-  * ROUND-14 leg changes: (1) `t4_session` joins the bench set (10 queries
-  * now) — the user_id-keyed event query the new events-by-user_id
-  * bucketing serves (r13 verdict item 5); compare `total` to r13 only
-  * after subtracting it, or per-query. (2) `steal_plain_s` /
-  * `steal_bucketed_s` publish per-leg host-CPU steal (r13 item 1) so
-  * uniform drift self-attributes in the committed artifact.
-  *
-  * ROUND-15 protocol changes:
-  *  - STEAL-GATED LEG RETRY (r14 verdict item 1): the committed r14
-  *    artifact carried 50–118 s of host-CPU steal per leg, overstating
-  *    drift the in-round clean runs disproved. Each leg (ETL, plain,
-  *    bucketed) now re-runs — up to [[MaxLegAttempts]] attempts — until
-  *    its measured steal is ≤ [[StealCleanThresholdS]] seconds; the
-  *    CLEANEST attempt's numbers are committed and every attempt's steal
-  *    rides along in `*_attempts_s`, so the artifact is clean by
-  *    construction or shows an explicit exhausted-retries record.
-  *  - QUERY-SET IDENTITY (r14 ADVICE): `bench_n`/`bench_set` (and the
-  *    `_bucketed` twins) publish each leg's query count and an 8-hex md5
-  *    of its sorted query names; `comparable_with_prior*` now ALSO
-  *    requires the set hash to equal the prior round's committed hash
-  *    ([[PriorPlainSetHash]]/[[PriorBucketedSetHash]] — update when the
-  *    set changes), so a grown set can never silently claim comparability.
-  *  - GRAPH ENTRY IN THE BUCKETED LEG (r14 verdict item 2):
-  *    `g_pagerank_edgestore` — the x_pagerank computation served from the
-  *    src-bucketed at-rest EdgeStore layout (written untimed at leg prep,
-  *    same rewrite-fresh discipline as the star tables) — joins
-  *    `queries_bucketed` so the zero-edge-exchange iteration trends per
-  *    round. `total_bucketed` therefore covers 11 queries and is NOT
-  *    comparable with r14's 10-query total (`comparable_with_prior_bucketed`
-  *    is false this round by the set-hash rule); `total_bucketed_shared`
-  *    is the 10-query subtotal over the plain set, directly comparable
-  *    with r14's `total_bucketed` AND with this run's plain `total`.
-  *
-  * ROUND-16 leg changes (r15 verdict items 3/5/8):
-  *  - `q8_market_share` joins the PLAIN and BUCKETED sets (bench_n 11) —
-  *    the 5-table star headliner (join order, broadcast cascade, the
-  *    lineitem⋈orders backbone) the committed bench never stressed.
-  *  - `x_bm25_indexed` joins the bucketed leg: the x_bm25_topk query
-  *    (same 5 highest-df terms, top-20) served from the SEALED
-  *    term-bucketed postings layout ([[graft.sources.InvertedIndex]]),
-  *    rewritten untimed at leg prep — the at-rest retrieval story trends
-  *    per round instead of living in the one-off r10 probe.
-  *  - ITERATIVE-LEG STABILIZATION: `g_pagerank_edgestore` (5 chained
-  *    actions amplify scheduler noise single-query legs average out; its
-  *    r15 committed median was the MAX of its own four-run band) and
-  *    `x_bm25_indexed` run [[IterativeIters]] = 9 timed passes.
-  *  - CROSS-ROUND SEAMS: the set growth flips `comparable_with_prior*`
-  *    false for this round (set-hash rule); `total_prev_set` /
-  *    `total_bucketed_prev_set` publish subtotals over the r15 committed
-  *    sets ([[PrevPlainSet]] / + graph) so the round-over-round trend
-  *    stays readable across the seam. `total_bucketed_shared` keeps its
-  *    meaning: subtotal of the bucketed leg over the CURRENT plain set
-  *    (cross-LEG comparable with `total`).
-  *
-  * ROUND-18 protocol changes (r17 verdict item 1, wrong #3, item 8):
-  *  - WAIT-FOR-QUIET between leg attempts (constants scaladoc): retries
-  *    now wait out a steal burst (3-s rate samples, bounded budget)
-  *    instead of burning all six attempts inside it — the reason two
-  *    consecutive rounds committed a contaminated plain leg while clean
-  *    windows existed minutes away.
-  *  - ALL FOUR per-query maps (median + min, both legs) ride the final
-  *    metric line at 3-decimal precision, sized to the driver's
-  *    2000-char tail window (emission comment); the detail line now
-  *    carries only attempts arrays / iters / wait accounting and may
-  *    truncate freely.
-  *  - `a14_group_topk` joins the bucketed leg (TopKBenchQuery scaladoc)
-  *    — bench_n_bucketed 14; the set-hash rule flips
-  *    comparable_with_prior_bucketed false for this round, with
-  *    total_bucketed_prev_set the cross-seam comparable subtotal.
-  *
-  * ROUND-19 protocol changes (r18 verdict items 1 + 6):
-  *  - PER-QUERY OUTLIER GUARD: the r18 artifact shipped q8_market_share
-  *    at 2.586 s median vs 1.329 s in-leg min inside a leg that
-  *    self-reported steal-clean — a mid-leg burst the 3-s quiet gate
-  *    cannot see. A query whose median exceeds [[OutlierMedMinRatio]] ×
-  *    its own in-leg min now waits for a quiet window and re-runs its
-  *    timed passes ONCE; the read with the lower median is kept. The
-  *    metric line carries the total rerun count (`q_reruns`), the detail
-  *    line the names (`outlier_reruns`).
-  *  - CUSTKEY WINDOW LEG: r18_w3_layout_3way measured the window
-  *    workload's OWN at-rest layout (orders bucketed+sorted by
-  *    (o_custkey, o_orderdate, o_orderkey)) at 2.7× plain with ZERO
-  *    exchanges below the WindowExec, and BucketingSpec pins the plan —
-  *    but nothing trended it per round. A third timed leg now runs the
-  *    w1/w3 gate shapes (minus their repartitionByRange — the bucketed
-  *    scan already satisfies the window's clustering) over a freshly
-  *    rewritten custkey table: `queries_custkey`/`total_custkey` (short
-  *    keys w1/w3 to respect the 2000-char tail window), same
-  *    steal-gating and failure discipline as the other legs.
-  *
-  * ROUND-20 protocol changes (r19 verdict items 1 + 7, ADVICE):
-  *  - IN-GUEST CONTENTION SIGNAL: r19 discovered (and memorialized) a
-  *    blind spot — a second JVM inside the guest inflates walls with
-  *    ZERO steal signature, so `steal_clean` alone cannot certify an
-  *    artifact. Every leg attempt now also measures OTHER-PROCESS CPU:
-  *    Δ(host busy jiffies) − Δ(self+children jiffies) over the leg,
-  *    normalized by leg wall seconds (`other_rate` — ~0 when this JVM
-  *    is the only worker, ≥1.0 when a second JVM burns a core). An
-  *    attempt is CLEAN iff steal ≤ [[StealCleanThresholdS]] AND
-  *    other_rate ≤ [[OtherRateCleanThreshold]]; the wait-for-quiet
-  *    sampler gates on both rates too. `contention_clean` rides the
-  *    metric line next to `steal_clean` (which keeps its steal-only
-  *    meaning for cross-round continuity); per-leg other-CPU seconds
-  *    ride the detail line, the max rate rides the metric line
-  *    (`other_rate_max`).
-  *  - END-OF-RUN SECOND CHANCE: the host's bursts last tens of minutes
-  *    — longer than one leg's 6-attempt budget (r19's plain leg stayed
-  *    dirty through six attempts + 144 s of waits while the OTHER legs'
-  *    windows were clean). After all legs complete (~15 min after the
-  *    plain leg first ran), any QUERY leg (plain/bucketed/custkey —
-  *    never ETL, whose fresh-JVM contract a late re-run would break)
-  *    whose chosen attempt is still dirty re-runs once more with a
-  *    fresh quiet budget; the cleaner read (by steal + excess-other
-  *    score) is committed. `second_chance` (count) rides the detail
-  *    line.
-  *  - QUIET BUDGET PER LEG: r19 exhausted the 600 s RUN-GLOBAL wait
-  *    budget inside one burst and later legs had nothing left to wait
-  *    with. The budget is now PER STEAL-GATED CALL (replenishes each
-  *    leg and each second chance), keeping the same 600 s depth where
-  *    it matters and bounding the whole run by legs × budget instead
-  *    of starving the tail legs.
-  *  - LEG PROTOCOL TAG (r19 ADVICE): the r19 outlier guard changed the
-  *    timed-leg protocol (downward-only rerun selection can only lower
-  *    medians) but `comparable_with_prior` keyed only on clean-run +
-  *    set hash. The metric line now carries
-  *    `leg_protocol:"med-outlier-rerun-1.5"` — advance the string
-  *    whenever the timed-pass selection rule changes so cross-round
-  *    readers compare like with like.
-  *  - `x_kmv_intersection` joins the bucketed leg (r19 verdict item 7):
-  *    the pre-flight sketch family's k-row-bounded representative —
-  *    flat at 10×, cheap, won't destabilize the total — trends per
-  *    round. bench_n_bucketed 15; the set-hash rule flips
-  *    comparable_with_prior_bucketed false for this round, with
-  *    total_bucketed_prev_set (now over r19's committed 14-name set)
-  *    the cross-seam comparable subtotal.
-  *  - METRIC-LINE BUDGET: the additions cost ~140 chars, paid for by
-  *    moving re-derivable/constant fields to the truncatable detail
-  *    line: `protocol` (constant "noop-sink" since r8),
-  *    `total_bucketed_shared` (re-derivable from queries_bucketed),
-  *    `queries_custkey_min`, `etl_steal_s`, and the per-leg steal
-  *    fields (summarized on the line by `steal_max_s`; per-attempt
-  *    arrays stay on the detail line).
-  *  - ROUND-22: `x_kmv_onepass` joins the bucketed leg (r21 verdict
-  *    item 2 — the one-pass aggregate form trends next to the
-  *    materialized-union form). Its two map entries (~44 chars) are
-  *    paid for by moving `comparable_with_prior_bucketed` to the detail
-  *    line — re-derivable on the metric line itself from
-  *    `bench_set_bucketed` vs the PriorBucketedSetHash constant (and
-  *    `failed` = negative sentinels in the queries maps), which is
-  *    exactly how the judge verifies set identity anyway. The PLAIN
-  *    comparability flag stays on the metric line.
+  * Current protocol (the round-by-round history of how it got here is
+  * in CHANGELOG.md, "Bench protocol history, rounds 8–22"):
+  *  - forcing: the noop sink ([[BenchProtocol.force]]), not `.count()`,
+  *    so every output row and column is materialized; numbers compare
+  *    only with rounds ≥ 8.
+  *  - legs, in order: ETL first (400 synthetic logs, 2 warmups, median
+  *    of 5 — `etl_protocol: "first-400-med5"`); the plain leg
+  *    (SparkEntry.benchQueries); the bucketed leg (the same set under the
+  *    'orderkey' at-rest layout, plus g_pagerank_edgestore,
+  *    x_bm25_indexed, a14_group_topk, x_kmv_intersection and
+  *    x_kmv_onepass; tables rewritten untimed each run); the custkey
+  *    window leg (w1/w3 over orders bucketed by o_custkey).
+  *  - passes: [[Iters]] timed passes, [[HeadlineIters]] for q1,
+  *    [[IterativeIters]] for the graph and bm25 entries.
+  *  - leg gating: each leg waits for a quiet window, then retries up to
+  *    [[MaxLegAttempts]] times until host steal ≤ [[StealCleanThresholdS]]
+  *    and other-process CPU ≤ [[OtherRateCleanThreshold]] per wall
+  *    second. A query leg still dirty at the end gets a second chance
+  *    ([[SecondChanceAttempts]]), and one more if its best read is
+  *    marginal ([[MarginalStealFactor]]).
+  *  - outlier guard: a query whose median exceeds [[OutlierMedMinRatio]]
+  *    × its in-leg min re-runs once; the lower median is kept
+  *    (`leg_protocol`).
+  *  - set identity: each leg's query-set hash against the prior round's
+  *    constant decides `comparable_with_prior*`.
+  *  - output: one metric line that fits [[metricLineBudget]] and a
+  *    truncatable detail line.
   */
 object Bench {
   private val Iters = 5

@@ -37,11 +37,8 @@ object Sessions {
       // driver's own protocol (full fresh-JVM graft.Bench, 3 runs each at
       // sf0.1): sp=16 medians 3.64s / sp=8 3.53s — indistinguishable
       // inside the ±25% run-to-run noise band (r3-vs-r4 bound), sp=8 had
-      // the worst outlier (4.53s). Keep cores/2. The env knob lets future
-      // sweeps run the same protocol without code edits.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(4, cores / 2).toString))
+      // the worst outlier (4.53s). Keep cores/2.
+      .config("spark.sql.shuffle.partitions", math.max(4, cores / 2).toString)
       .config("spark.sql.adaptive.enabled", "false")
       // single-JVM shuffle/broadcast bytes never cross a network and live in
       // page cache — lz4 round-trips are pure CPU cost here
@@ -64,10 +61,8 @@ object Sessions {
       // shrink, so the 400-file ETL glob went one-file-per-task (419→204
       // logs/s). The real fix for single-file scan serialization is
       // at-rest layout (Bucketing rewrite: 32 files → 2.5x, measured in
-      // BENCH_SCALE r9_bucketed_star_joins), not split tuning. Env knob
-      // retained for future sweeps.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "128m"))
+      // BENCH_SCALE r9_bucketed_star_joins), not split tuning.
+      .config("spark.sql.files.maxPartitionBytes", "128m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   * codegen'd, zero allocation beyond the string builder per pass. The
   * iterative kernel (functions.BpeTokenCount) does one word-local merge
   * loop instead and is the cheaper form for long merge tables; both are
-  * measured in the 100x probe (BenchTune "bpe").
+  * measured at 100x (BENCH_SCALE r14_bpe).
   */
 object Bpe {
 
@@ -83,7 +83,7 @@ object Bpe {
     * oracle mechanically generated for all 89), (b) pin chain ≡ kernel
     * at a ≥512-merge table over a SYNTHETIC deterministic vocabulary in
     * BpeSpec, and (c) measure kernel-vs-chain throughput against table
-    * length in the BenchTune `bpelong` probe (the kernel's per-word cost
+    * length (BENCH_SCALE r15_bpe_long; the kernel's per-word cost
     * is table-length-independent via hash lookups; the chain's is
     * |merges| linear passes — the asymptotics that make the kernel the
     * long-table path). FixedMerges is exactly the first 24 entries

@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   *
   * `checkpointEvery = k` truncates lineage every k iterations via
   * `localCheckpoint` (single-JVM; on a real cluster use reliable
-  * `checkpoint()`). MEASURED (BenchTune `pagerank`, 2M nodes / 6M edges,
-  * local[32], `BENCH_SCALE.json` r12_pagerank_lineage): wall time is
+  * `checkpoint()`). MEASURED (2M nodes / 6M edges, local[32],
+  * `BENCH_SCALE.json` r12_pagerank_lineage): wall time is
   * ~linear in iteration count with OR without checkpointing up to 40
   * iterations (~2.6 s/iter), and checkpoint frequency is a wash within
   * run-to-run noise — plan-depth superlinearity does not bite yet at this
@@ -103,7 +103,7 @@ object Graphs {
     * (spec-pinned bit-identical to the derived path in EdgeStoreSpec).
     * When `ed` scans a table bucketed by src, each iteration's join plans
     * with ZERO exchange on the edge side; only the 16-byte-a-row rank
-    * table moves (BenchTune `edgeab` measures the elimination). */
+    * table moves (BENCH_SCALE r14_edge_store measures the elimination). */
   def pageRankPrepared(
       nodes: DataFrame,
       ed: DataFrame,

@@ -65,8 +65,8 @@ case class BpeTokenCount(child: Expression, merges: Seq[(String, String)])
 
   // positional access to the rule table: `merges` is a Seq — on a List,
   // merges(best) is an O(rank) node walk PER MERGE STEP, which turned the
-  // 8192-entry probe table into a 10x wall-time cliff (measured in the
-  // bpelong probe: 21s vs ~2s once indexed). Long tables are exactly this
+  // 8192-entry probe table into a 10x wall-time cliff (BENCH_SCALE
+  // r15_bpe_long: 21s vs ~2s once indexed). Long tables are exactly this
   // kernel's reason to exist, so the hot path must be array-indexed.
   @transient private lazy val mergeArr: Array[(String, String)] = merges.toArray
 

@@ -54,6 +54,8 @@ object BigLogParse {
     * Store oversized logs uncompressed (or as bgzip/multiple files) to get
     * byte-range parallelism.
     *
+    * @param path the file as `_metadata.file_path` renders it
+    *        (LogPipeline.renderPath); stored as given, decoded to read
     * @param minPartitions minimum line-split count (exposed so tests can
     *        force multi-split reads on small fixtures; gz stays 1 split)
     */
@@ -67,8 +69,8 @@ object BigLogParse {
     import spark.implicits._
     val skipNils = cfg.skipNils
 
-    val rdd = spark.sparkContext.textFile(
-      path, math.max(minPartitions, spark.sparkContext.defaultMinPartitions))
+    val rdd = spark.sparkContext.textFile(LogPipeline.hadoopPath(path),
+      math.max(minPartitions, spark.sparkContext.defaultMinPartitions))
 
     // pass 1: per-split (lines, delimiters, delims-before-first-content,
     // has-content) — no shuffle, narrow counters
@@ -167,8 +169,8 @@ object BigLogParse {
       expid: Long,
       minPartitions: Int = 0): Dataset[(Long, Int, String, String)] = {
     import spark.implicits._
-    val rdd = spark.sparkContext.textFile(
-      path, math.max(minPartitions, spark.sparkContext.defaultMinPartitions))
+    val rdd = spark.sparkContext.textFile(LogPipeline.hadoopPath(path),
+      math.max(minPartitions, spark.sparkContext.defaultMinPartitions))
 
     val counts = rdd.mapPartitionsWithIndex { (pi, it) =>
       var n = 0L; var m = 0L

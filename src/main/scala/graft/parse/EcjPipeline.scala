@@ -93,7 +93,8 @@ object EcjPipeline {
         val src = prelisted
           .filter(_ => small == paths) // same scan the ids came from: parity by construction
           .getOrElse {
-            val reread = spark.read.option("wholetext", "true").text(small: _*)
+            val reread = spark.read.option("wholetext", "true")
+              .text(small.map(LogPipeline.hadoopPath): _*)
             // drift guard for the re-listed scan: its FileIndex rendering
             // must reproduce the id map's keys exactly, else the inner
             // broadcast join below would silently drop whole files.

@@ -2,6 +2,7 @@ package graft.parse
 
 import graft.ids.IdMinter
 import graft.model._
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -136,8 +137,9 @@ object LogPipeline {
 
   /** Full load: the four Clojush tables (reference src/db_loader.clj:36-39).
     * Ids AND the problem dictionary are minted driver-side from
-    * `df.inputFiles` — the same path strings `_metadata.file_path` yields
-    * (BenchTune `pathcheck` pins the parity) at zero extra Spark jobs,
+    * the scan's file listing, rendered as `_metadata.file_path` renders
+    * it ([[listStatuses]]; LogPipelineSpec pins the parity for names with
+    * spaces and `%`) at zero extra Spark jobs,
     * since the file-source listing already materialized every FileStatus
     * in the driver's InMemoryFileIndex. The corpus is then scanned, parsed
     * and flattened exactly once (see [[tablesFromParsed]]).
@@ -165,8 +167,8 @@ object LogPipeline {
     * batch `load` and the streaming per-micro-batch path (IngestStream):
     * files over `cfg.bigFileBytes` (gz-adjusted, [[effectiveSize]]) parse
     * chunked via BigLogParse, the rest ride one wholetext task per file.
-    * Paths must be in Hadoop Path rendering (the `_metadata.file_path`
-    * form) so the id-map join keys match byte-for-byte.
+    * Paths must be in the `_metadata.file_path` rendering ([[renderPath]])
+    * so the id-map join keys match byte-for-byte.
     *
     * @param prelisted the already-listed wholetext frame covering EXACTLY
     *        the listed paths, if the caller has one (batch `load`) — reused
@@ -190,7 +192,8 @@ object LogPipeline {
     def wholetextFlat(input: Seq[String]): Dataset[FlatRow] = {
       val src = prelisted
         .filter(_ => input == paths) // unchanged fast path: no re-listing
-        .getOrElse(spark.read.option("wholetext", "true").text(input: _*))
+        .getOrElse(spark.read.option("wholetext", "true")
+          .text(input.map(hadoopPath): _*))
       val idMap = input.map(p => (p, idOf(p))).toDF("path", "id")
       val parsed = src
         .select(
@@ -230,26 +233,41 @@ object LogPipeline {
 
   /** (path, size, mtime-millis) for every file behind `df`, sorted by
     * path — straight from the scan's own FileIndex: zero extra jobs AND
-    * zero per-file stat RPCs (a 500-file re-stat loop cost ~0.5s of pure
-    * driver time). Paths arrive in Hadoop Path form, the same rendering as
-    * `_metadata.file_path`, so id-map join keys match byte-for-byte
-    * (pathcheck probe pins the rendering pair). Falls back to
-    * inputFiles + stat for non-HadoopFsRelation plans. Shared by the
-    * Clojush and ECJ load paths.
+    * zero per-file stat RPCs (a 500-file re-stat loop cost ~0.5s). Paths
+    * are rendered by [[renderPath]], the form `_metadata.file_path`
+    * yields, so id-map join keys match byte-for-byte (LogPipelineSpec
+    * pins the parity for names with spaces and `%`).
+    * Falls back to inputFiles + stat for non-HadoopFsRelation plans.
+    * Shared by the Clojush and ECJ load paths.
     */
   private[parse] def listStatuses(spark: SparkSession, df: DataFrame)
       : Seq[(String, Long, Long)] = {
     val fromIndex = org.apache.spark.sql.graft.CatalystBridge.fileStatuses(df)
-    (if (fromIndex.nonEmpty || df.inputFiles.isEmpty) fromIndex
-     else {
-       val conf = spark.sessionState.newHadoopConf()
-       df.inputFiles.toSeq.map { u =>
-         val hp = new org.apache.hadoop.fs.Path(new java.net.URI(u))
-         val st = hp.getFileSystem(conf).getFileStatus(hp)
-         (hp.toString, st.getLen, st.getModificationTime)
-       }
-     }).sortBy(_._1)
+    val statuses =
+      if (fromIndex.nonEmpty || df.inputFiles.isEmpty) fromIndex
+      else {
+        val conf = spark.sessionState.newHadoopConf()
+        df.inputFiles.toSeq.map { u =>
+          val hp = new Path(new java.net.URI(u))
+          hp.getFileSystem(conf).getFileStatus(hp)
+        }
+      }
+    statuses.map(st => (renderPath(st.getPath), st.getLen, st.getModificationTime))
+      .sortBy(_._1)
   }
+
+  /** A file's path as `_metadata.file_path` renders it: the URL-encoded
+    * URI string (`file:/d/run%20B_u2.log` for the file `run B_u2.log`),
+    * where Hadoop's `Path.toString` prints the name unescaped. Paths
+    * without spaces, `%` or other characters a URI must escape render
+    * identically either way. The re-parse of `toString` is needed: a
+    * listed path's own `toUri` does not print in the scan's form. */
+  private[graft] def renderPath(p: Path): String = new Path(p.toString).toUri.toString
+
+  /** The Hadoop path string behind a [[renderPath]] rendering — the form
+    * a re-read takes, since Hadoop parses path strings unescaped. */
+  private[graft] def hadoopPath(rendered: String): String =
+    new Path(new java.net.URI(rendered)).toString
 
   /** Size to compare against the big-file threshold: stat sizes of gzip
     * files are COMPRESSED bytes, and a .gz log expands ~5-15× — without

@@ -1339,9 +1339,9 @@ object Analytics {
         import s.implicits._
         // ONE scan of the fact table: everything else (span, type dim,
         // spine) derives from the tiny distinct (type, hour) frame — the
-        // r14 eventab probe showed the old 3-scan form paying the
-        // multi-file read thrice under the bucketed layout for data the
-        // distinct already summarizes
+        // BENCH_SCALE r14_events_bucketing showed the old 3-scan form
+        // paying the multi-file read thrice under the bucketed layout for
+        // data the distinct already summarizes
         val observed = Tables.events(s, d)
           .select($"event_type", date_trunc("hour", $"ts").as("h"))
           .distinct()

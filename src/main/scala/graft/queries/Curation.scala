@@ -1225,8 +1225,8 @@ object Curation {
     //     estimates are published; only est_corr decides.
     // Families chosen so decisions MOVE across the gate SFs (sf0.01:
     // all-broadcast except the skew family salts; sf0.1: the star join
-    // crosses into shuffle) and flip again at 10x/100x (BenchTune
-    // preflight probe): the selective clicks~hv-purchasers join stays
+    // crosses into shuffle) and flip again at 10x/100x (BENCH_SCALE
+    // r19_preflight_decision): the selective clicks~hv-purchasers join stays
     // broadcast until its key set outgrows the limit, then gains a
     // prefilter whose auto-sized Bloom KEEPS paying at 100x (m_auto
     // grows 8192 → 2^19 with the key set, holding ~79% reduction where
@@ -1271,8 +1271,8 @@ object Curation {
         // the four per-table vector builds and the four family rows are
         // mutually independent, but ran as 12 SERIAL driver actions
         // (4 checkpoints + 4 sizes heads + 4 bitmap collects — measured
-        // 4.3 s of the 9.1 s 10× wall, 14.8 s of 27.2 s at 100×, r22
-        // preflightbreak probe). A 4-thread pool submits them
+        // 4.3 s of the 9.1 s 10× wall, 14.8 s of 27.2 s at 100×, BENCH_SCALE
+        // r22_preflight_fix). A 4-thread pool submits them
         // concurrently so each job's tail back-fills the others' idle
         // cores; the frames, values and assembly order are unchanged —
         // only the job submission overlaps.

@@ -1245,7 +1245,8 @@ object DedupQueries {
         // theorem (the first common token of any qualifying pair passes),
         // re-pinned by the brute-force zero-pairs-lost spec; the win is
         // at LARGE vocabularies where prefix selectivity alone leaves
-        // candidates position-incompatible (measured: BenchTune ppjoin).
+        // candidates position-incompatible (measured: BENCH_SCALE
+        // r14_ppjoin_vocab).
         val prefix = ranked.join(sizes, "doc_id")
           .filter($"rn" <= $"sz" - expr("(sz * 9 + 9) div 10") + 1)
           .select($"doc_id", $"tok", $"sz", $"rn")

@@ -172,7 +172,8 @@ object Events {
       // benched since ROUND 14 (verdict item 5): the user_id-keyed event
       // query that the events-by-user_id bucketed layout serves — its
       // session aggregation requires ClusteredDistribution(user_id), so
-      // the bucketed leg runs it exchange-free (BenchTune eventab A/B)
+      // the bucketed leg runs it exchange-free (BENCH_SCALE
+      // r14_events_bucketing)
       bench = true),
 
     // ---- J7 as-of join: latest preceding click per purchase ----------------

@@ -72,7 +72,7 @@ object GraphQueries {
 
   /** The x_pagerank computation served from the at-rest EdgeStore layout
     * (r14 verdict item 2 — the zero-edge-exchange iteration must TREND in
-    * the committed bench, not live only in the `edgeab` probe): same
+    * the committed bench, not live only in BENCH_SCALE r14_edge_store): same
     * nodes, same iteration count and fixed point as the x_pagerank gate,
     * edges + degree read from the src-bucketed table that
     * [[writeBenchEdgeStore]] wrote at (untimed) leg prep. Result
@@ -463,8 +463,8 @@ object GraphQueries {
     // n_wedges here is the ORIENTED wedge count — the work metric the
     // orientation bounds — so it differs from x_triangle_count's by
     // design; n_triangles must agree exactly (spec-pinned). The oracle
-    // recomputes the same order via the degree CTE. Probe:
-    // BenchTune `triskew` (planted hot vertex, BENCH_SCALE.json).
+    // recomputes the same order via the degree CTE. Measured with a
+    // planted hot vertex: BENCH_SCALE r13_triangle_orientation.
     QueryDef(
       "x_triangle_count_deg",
       (s, d) => {

@@ -1153,8 +1153,8 @@ object Similarity {
     // shortlist over nibble codes inside them, exact L2 re-ranks only
     // the survivors — both prunings compose multiplicatively, and at
     // rest the cluster-partitioned code table is the classic IVFADC
-    // layout. It had spec + probe coverage (SkewAndIvfSpec, r13 pq
-    // probe) but no driver-visible gate; at lloydIters = 0 every stage
+    // layout. It had spec + probe coverage (SkewAndIvfSpec, BENCH_SCALE
+    // r10_pq) but no oracle-checked gate; at lloydIters = 0 every stage
     // is SQL-derivable, so this row emits the top-10 SELECTION ITSELF —
     // IVF seeds → assignment → probe ranking → PQ seeds → per-block
     // argmin codes → integer ADC table → probed-cell shortlist → exact

@@ -791,8 +791,8 @@ object Text {
     // exceeds what ANY trainer can extract from this corpus (31 distinct
     // words bound the pair positions at ~150; see Bpe.FullMerges
     // scaladoc): the ≥512 regime is pinned by BpeSpec's synthetic-
-    // vocabulary equivalence test and measured by the BenchTune
-    // `bpelong` tokens/s-vs-|merges| curve. Both encoder forms ride as
+    // vocabulary equivalence test and measured by the tokens/s-vs-|merges|
+    // curve in BENCH_SCALE r15_bpe_long. Both encoder forms ride as
     // gated columns — the 89-pass replace chain (the oracle replays it
     // mechanically, hash-exact by construction) and the ITERATIVE kernel
     // (the long-table scale path: per-word cost independent of table

@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    ids ride in file names — the Tables.resolve re-registration
   *    pattern), failing loudly if the layout was never written.
   *
-  * Effect on the iteration plan (measured, BenchTune `edgeab`): the
+  * Effect on the iteration plan (measured, BENCH_SCALE r14_edge_store): the
   * edges ⋈ ranks join keeps its bucketed-scan partitioning on the edge
   * side — the per-iteration exchange of the O(edges) operand disappears
   * and only the O(nodes) rank table shuffles. At 100 TB that is the

@@ -124,18 +124,15 @@ object IngestStream {
   }
 
   /** Driver-side (path, size, mtimeMillis) listing from a metadata-only
-    * micro-batch, paths normalized to the Hadoop Path rendering
-    * `_metadata.file_path` uses (binaryFile renders URI form — the same
-    * file:///-vs-file:/ trap the pathcheck probe pins), sorted by path.
+    * micro-batch, sorted by path. binaryFile's `path` column is Hadoop's
+    * unescaped `Path.toString`; `LogPipeline.renderPath` turns it into the
+    * `_metadata.file_path` form the id map must match.
     */
   private def collectStatuses(batch: DataFrame): Seq[(String, Long, Long)] =
     batch.collect()
       .map { r =>
-        val hp =
-          try new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-          catch { case _: java.net.URISyntaxException =>
-            new org.apache.hadoop.fs.Path(r.getString(0)) }
-        (hp.toString, r.getLong(1), r.getTimestamp(2).getTime)
+        (LogPipeline.renderPath(new org.apache.hadoop.fs.Path(r.getString(0))),
+          r.getLong(1), r.getTimestamp(2).getTime)
       }
       .distinct.sortBy(_._1).toSeq
 

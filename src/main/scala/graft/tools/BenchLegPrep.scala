@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Bench-LEG infrastructure — the prep and load helpers `graft.Bench`
   * itself calls each run (ETL log generation, the timed 4-table load,
-  * the at-rest bucketed-table rewrite). Split out of BenchTune (r22,
-  * r21 verdict item 4): these are part of the bench of record, not dev
-  * probes, and BenchTune is the probe dumping ground with a line budget.
+  * the at-rest bucketed-table rewrite). These are part of the bench of
+  * record, not dev probes; BenchTune's `bucketwrite` and `headlinebk`
+  * and its ETL probes reuse them.
   */
 object BenchLegPrep {
 
@@ -41,8 +41,8 @@ object BenchLegPrep {
 
   /** timedLoad with the phase split (r21 verdict item 6): `plan` = the
     * load() call — driver-side file listing, id mint and plan build, the
-    * r18 loadmicro bottleneck at 400 files — and `fill` = the four
-    * counts (parse + fill execution). Published on the bench DETAIL line
+    * bottleneck at 400 files (BENCH_SCALE r22_etl_split) — and `fill` =
+    * the four counts (parse + fill execution). Published on the bench DETAIL line
     * so the 363–530 logs/s window variance is attributable to the
     * listing phase without changing what the leg measures. */
   def timedLoadSplit(spark: SparkSession, glob: String)

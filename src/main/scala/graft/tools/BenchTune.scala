@@ -1,34 +1,27 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Dev harness: time headline queries under config variations (AQE on/off,
-  * iterations) to pick Bench settings. Not part of the driver contract.
+/** Dev harness: the full-surface sweep, one generic per-query probe and the
+  * few probes that still carry an open number. The benchmark of record is
+  * `perfbench/`. A probe whose A/B
+  * is settled is deleted once its result is recorded in BENCH_SCALE.json
+  * (CHANGES.md lists each deleted probe beside its key).
+  *
+  * Usage: `runMain graft.tools.BenchTune <probe> [arg]` — see [[Probes]].
+  * Reads SPARK_GRAFT_SF_DIR (the corpus directory),
+  * SPARK_GRAFT_SKIP (`all`) and SPARK_GRAFT_PASSES (`probe`, `headlinebk`).
   */
 object BenchTune {
 
-  /** Compare native CosineSim vs HOF cosine on a full self-join scan. */
-  def cosineShootout(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = graft.Sessions.local("cosine-shootout", 32)
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .cache()
-    emb.count()
-    val q = emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"ev".as("qv"))
-    def time(tag: String, c: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column): Unit = {
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        emb.crossJoin(broadcast(q)).select(sum(c($"ev", $"qv"))).collect()
-        println(f"[$tag] iter$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-    }
-    time("hof", graft.queries.Similarity.cosineHof)
-    time("native", graft.queries.Similarity.cosine)
-    spark.stop()
-  }
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Probe name → argument synopsis, in the order usage lists them. */
+  val Probes: Seq[(String, String)] = Seq(
+    "all" -> "", "probe" -> "<q1,q2,...>|bench", "headlinebk" -> "[q1,q2,...]",
+    "bucketwrite" -> "[layout]", "lshmargin" -> "", "cosine" -> "",
+    "a6" -> "", "minhash" -> "", "recallprobe" -> "", "etl" -> "[nLogs]",
+    "etlsweep" -> "", "etlprofile" -> "")
 
   /** Single-pass wall time of EVERY declared query (cold then warm).
     * SPARK_GRAFT_SKIP=q1,q2 names queries to skip — for corpora where a
@@ -97,106 +90,6 @@ object BenchTune {
     spark.stop()
   }
 
-  /** Committed-headline-set probe for SCALED corpora (the 100× question).
-    *
-    * `graft.Bench`'s steal-gated retry keys on an ABSOLUTE 2.0 s
-    * threshold tuned for ~6 s sf0.1 legs (≈1% of 32-CPU time). At 100×
-    * a leg runs tens of minutes and accumulates proportional background
-    * steal, so the gate can never pass and Bench burns MaxLegAttempts
-    * full legs (observed: 961 s leg steal at /tmp/graft_sf10 — a ~2.5%
-    * host steal RATE, i.e. ordinary guest-VM conditions, not a noisy
-    * burst). The protocol that scales is per-QUERY min-of-N with a GC
-    * before each pass and per-pass steal printed: the min pass is the
-    * interference-immune read (bench-steal memory: bursty steal + GC
-    * debt fake regressions), and publishing every pass's steal lets a
-    * reader attribute any outlier pass instead of trusting a leg gate.
-    *
-    * Honors SPARK_GRAFT_SKIP like the sweep (loud, never silent). */
-  def headlineProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("headline-probe")
-    val skip = sys.env.getOrElse("SPARK_GRAFT_SKIP", "")
-      .split(',').filter(_.nonEmpty).toSet
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val only = probeOnly
-    for (q <- graft.SparkEntry.benchQueries if only.isEmpty || only(q)) {
-      if (skip(q)) println(f"[headline] $q%-24s SKIPPED (SPARK_GRAFT_SKIP)")
-      else probeOne(spark, "headline", q,
-        graft.SparkEntry.queries(q), sfDir, stealJiffies _)
-    }
-    spark.stop()
-  }
-
-  /** SPARK_GRAFT_PASSES (default 3) sets the timed-pass count — at 100×
-    * the 3-pass default can under-warm the heavies (q1's passes were
-    * still descending 229→38→17.5 s on a cold-page-cache corpus; the
-    * earlier full-Bench r10_100x with ETL-first JIT heat + 5–7 passes
-    * read 6.1 s), so converged reads want 7+. SPARK_GRAFT_ONLY=q1,a6
-    * filters to named queries for focused re-measurement. */
-  private def probePasses: Int =
-    sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
-  private def probeOnly: Set[String] = sys.env.getOrElse("SPARK_GRAFT_ONLY", "")
-    .split(',').filter(_.nonEmpty).toSet
-
-  private def probeOne(spark: org.apache.spark.sql.SparkSession, tag: String,
-      q: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame,
-      sfDir: String, stealJiffies: () => Long): Unit = {
-    def force(): Unit = graft.BenchProtocol.force(fn(spark, sfDir))
-    force() // warmup: plan + codegen + first-touch page cache
-    val passes = (1 to probePasses).map { _ =>
-      System.gc()
-      val s0 = stealJiffies()
-      val t0 = System.nanoTime()
-      force()
-      ((System.nanoTime() - t0) / 1e9, (stealJiffies() - s0) / 100.0)
-    }
-    val best = passes.minBy(_._1)
-    val all = passes.map(p => f"${p._1}%.2f/${p._2}%.1f").mkString(" ")
-    println(f"[$tag] $q%-24s min=${best._1}%8.3f s " +
-      f"steal_at_min=${best._2}%.1f passes(wall/steal)=$all")
-    spark.sharedState.cacheManager.clearCache()
-  }
-
-  /** The bucketed twin of [[headlineProbe]] — the at-rest answer to the
-    * 100× join costs the plain probe measures. Rewrites the 'orderkey'
-    * star layout, the src-bucketed bench EdgeStore, and the sealed BM25
-    * postings for `sfDir` UNTIMED (prep walls printed — at 100× the
-    * write cost of the at-rest layout is itself a number the scale
-    * story should carry), then runs the identical min-of-3/GC/steal
-    * protocol over the committed bucketed leg (plain set + the graph
-    * and retrieval at-rest entries) with the layout active. */
-  def headlineBkProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("headline-bk-probe")
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    def prep[A](what: String)(body: => A): A = {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[headline-bk] prep $what%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s (untimed)")
-      r
-    }
-    prep("bucketed_tables") { BenchLegPrep.writeBucketedTables(spark, sfDir, "orderkey") }
-    prep("edge_store") {
-      graft.queries.GraphQueries.writeBenchEdgeStore(spark, sfDir) }
-    val bm25Terms = prep("bm25_postings") {
-      graft.sources.InvertedIndex.writeBenchPostings(spark, sfDir) }
-    System.setProperty("graft.bucketed", "orderkey")
-    try {
-      val extra: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-          org.apache.spark.sql.DataFrame] = Map(
-        "g_pagerank_edgestore" -> ((s, d) =>
-          graft.queries.GraphQueries.pagerankEdgeStore(s, d)),
-        "x_bm25_indexed" -> ((s, _) =>
-          graft.sources.InvertedIndex.bm25TopK(
-            s, graft.sources.InvertedIndex.BenchTable, bm25Terms, 20)))
-      val names = graft.SparkEntry.benchQueries ++ extra.keys.toSeq.sorted
-      val lookup = graft.SparkEntry.queries ++ extra
-      val only = probeOnly
-      for (q <- names if only.isEmpty || only(q))
-        probeOne(spark, "headline-bk", q, lookup(q), sfDir, stealJiffies _)
-    } finally System.clearProperty("graft.bucketed")
-    spark.stop()
-  }
-
   /** The scale-path twin behind d_semdedup_auto's loud guard: at corpora
     * where the derived k exceeds SemDedup.CoarseDispatchK (so the DuckDB
     * gate row cannot run), check the coarse DEFAULT against the flat
@@ -210,8 +103,7 @@ object BenchTune {
     * ScaleGen corpus, BENCH_SCALE r13_semdedup_twin). Returns the
     * agreement fraction for the sweep line.
     */
-  def semdedupScaleTwin(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String): Double = {
+  def semdedupScaleTwin(spark: SparkSession, sfDir: String): Double = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val e = graft.Tables.embeddings(spark, sfDir)
@@ -241,206 +133,164 @@ object BenchTune {
     agree
   }
 
-  /** SemDedup auto-k stage decomposition (r14 verdict item 8): the 10×
-    * sweep's slowest factor was d_semdedup_auto at 6.09× — name the
-    * dominant stage instead of guessing. The auto path at the sweep's
-    * 10× corpus (n = 20k, derived k = 80 > CoarseDispatchK) is: count →
-    * seed k centroids → COARSE assignment (O(n·√k)) → cluster-bounded
-    * pair join + verdicts; the sweep line additionally runs the TWIN
-    * protocol (coarse AND flat-exact, then a full-outer agreement join),
-    * so the 6.09× includes a deliberate double computation that callers
-    * of the operator never pay. This probe times each stage separately
-    * at 1× and a locally-replicated 10× (ScaleGen-style vec_id shift —
-    * exact clones, same as the sweep corpus), for both assignment
-    * kernels, plus the end-to-end auto wall and the twin wall.
+  /** The generic per-query probe: for each named query, one warmup, then
+    * SPARK_GRAFT_PASSES (default 3) timed passes, each after a GC, forced
+    * through the bench idiom (noop sink). One line per query: min and
+    * median wall, then wall/steal/shuffle-write per pass. The min pass is
+    * the interference-immune read; per-pass steal lets a reader attribute
+    * an outlier pass instead of trusting a gate. At 100× the default can
+    * under-warm the heavies (q1's passes descended 229→38→17.5 s on a
+    * cold page cache), so converged reads want 7+ passes.
     */
-  def semStagesProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("sem-stages")
-    import spark.implicits._
-    val out = "/tmp/graft_emb10_semstages"
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val stride = base.agg(max(col("vec_id").cast("long"))).head().getLong(0) + 1L
-    (0 until 10).map(i => base.withColumn("vec_id", col("vec_id") + lit(i * stride)))
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-    def t[A](body: => A): (A, Double) = {
-      System.gc()
+  def probe(spark: SparkSession, tag: String, names: Seq[String],
+      lookup: Map[String, Query], sfDir: String): Unit = {
+    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
+    for (q <- names) {
+      def force(): Unit = graft.BenchProtocol.force(lookup(q)(spark, sfDir))
+      force() // warmup: plan + codegen + first-touch page cache
+      val runs = (1 to passes).map { _ =>
+        System.gc()
+        val s0 = ProbeHarness.stealJiffies
+        var wall = 0.0
+        val bytes = ProbeHarness.shuffleWriteBytes(spark) {
+          val t0 = System.nanoTime()
+          force()
+          wall = (System.nanoTime() - t0) / 1e9
+        }
+        (wall, (ProbeHarness.stealJiffies - s0) / 100.0, bytes / 1024)
+      }
+      val walls = runs.map(_._1).sorted
+      val all = runs.map(r => f"${r._1}%.2f/${r._2}%.1f/${r._3}%d").mkString(" ")
+      println(f"[$tag] $q%-24s min=${walls.head}%8.3f s " +
+        f"median=${walls(walls.size / 2)}%8.3f s " +
+        f"passes(wall s/steal s/shuffle KiB)=$all")
+      spark.sharedState.cacheManager.clearCache()
+    }
+  }
+
+  /** The bucketed twin of `probe bench` — the at-rest answer to the 100×
+    * join costs the plain probe measures. Rewrites the 'orderkey' star
+    * layout, the src-bucketed bench EdgeStore and the sealed BM25
+    * postings for `sfDir` UNTIMED (prep walls printed: at 100× the write
+    * cost of the at-rest layout is itself a number), then probes the
+    * bucketed leg (plain set + the graph and retrieval at-rest entries)
+    * with the layout active. */
+  def headlineBk(spark: SparkSession, sfDir: String,
+      only: Seq[String]): Unit = {
+    def prep[A](what: String)(body: => A): A = {
       val t0 = System.nanoTime()
       val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
+      println(f"[headline-bk] prep $what%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s (untimed)")
+      r
     }
-    for ((tag, dir) <- Seq("1x" -> sfDir, "10x" -> out)) {
-      def emb = graft.Tables.embeddings(spark, dir)
-        .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      val (e, tCk) = t(emb.localCheckpoint(true))
-      val (n, tCount) = t(e.count())
-      val k = math.max(8L, (n + 249) / 250).toInt
-      val (cents, tSeed) = t(graft.ext.IvfAnn.seedCentroids(e, k))
-      val (_, tCoarse) = t(graft.ext.IvfAnn.assignCoarse(e, cents).count())
-      val (_, tFlat) = t(graft.ext.IvfAnn.assign(e, cents).count())
-      // the verdict tail over the coarse assignment (SemDedup.verdicts
-      // shape): cluster pair join + drop rule + verdict join
-      val assigned = graft.ext.IvfAnn.assignCoarse(e, cents).localCheckpoint(true)
-      val (_, tTail) = t {
-        val x = assigned.select($"cluster", $"vec_id", $"ev")
-        val y = assigned.select($"cluster", $"vec_id".as("y_id"), $"ev".as("y_ev"))
-        val dropped = x.join(y, Seq("cluster"))
-          .filter($"y_id" < $"vec_id" &&
-            round(graft.queries.Similarity.cosine($"ev", $"y_ev"), 4) >= 0.35)
-          .select($"vec_id").distinct()
-        assigned.join(dropped.withColumn("hit", lit(true)), Seq("vec_id"), "left")
-          .select($"vec_id", $"hit".isNull.as("kept")).count()
-      }
-      val (_, tAuto) = t(graft.ext.SemDedup.semanticDedup(emb, tau = 0.35).count())
-      val (_, tTwin) = t(semdedupScaleTwinAt(spark, dir))
-      println(f"[semstages] $tag%-4s n=$n k=$k ckpt=${tCk + tCount}%.2f " +
-        f"seed=$tSeed%.2f assign_coarse=$tCoarse%.2f assign_flat=$tFlat%.2f " +
-        f"pair_tail=$tTail%.2f auto_total=$tAuto%.2f twin_total=$tTwin%.2f")
-      spark.sharedState.cacheManager.clearCache()
-    }
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
-    spark.stop()
+    prep("bucketed_tables") { BenchLegPrep.writeBucketedTables(spark, sfDir, "orderkey") }
+    prep("edge_store") {
+      graft.queries.GraphQueries.writeBenchEdgeStore(spark, sfDir) }
+    val bm25Terms = prep("bm25_postings") {
+      graft.sources.InvertedIndex.writeBenchPostings(spark, sfDir) }
+    val extra: Map[String, Query] = Map(
+      "g_pagerank_edgestore" -> ((s, d) =>
+        graft.queries.GraphQueries.pagerankEdgeStore(s, d)),
+      "x_bm25_indexed" -> ((s, _) =>
+        graft.sources.InvertedIndex.bm25TopK(
+          s, graft.sources.InvertedIndex.BenchTable, bm25Terms, 20)))
+    val names =
+      if (only.nonEmpty) only
+      else graft.SparkEntry.benchQueries ++ extra.keys.toSeq.sorted
+    System.setProperty("graft.bucketed", "orderkey")
+    try probe(spark, "headline-bk", names, graft.SparkEntry.queries ++ extra, sfDir)
+    finally System.clearProperty("graft.bucketed")
   }
 
-  /** 10×-sweep outlier stage decomposition (r15 verdict item 4): the two
-    * remaining sweep factors above 2.4 without a committed decomposition
-    * are t_attribution (2.62×) and x4_pq_recall (2.46×) — name the
-    * dominant stage of each at 1× and a locally-replicated 10× (the
-    * sweep's own ScaleGen key-shift scheme: event/user and vec ids
-    * shifted per replica, so join cardinalities scale like a real sfN
-    * corpus), instead of guessing. Stages:
-    *
-    * t_attribution: scan (view/click filter+project), join (user_id
-    * equi-join + 30-min range predicate), window (+ per-view row_number
-    * → rn=1), full (committed query incl. the final global orderBy).
-    *
-    * x4_pq_recall: seed (codebook collect), encode (O(n·m·k) code
-    * kernel), adc (code scan + top-nCandidates, nCandidates = n/10 — it
-    * GROWS with the corpus by design), rerank (exact L2 over the
-    * shortlist via broadcast semi-join), truth (the GATE's own
-    * brute-force verification top-10 — part of the gate row, not of the
-    * operator), full (the committed query).
-    *
-    * Each stage is timed twice after a GC nudge (bench-steal memory:
-    * the first timed leg after driver-side work can read 10-40× slow on
-    * GC debt alone); the MIN is reported. */
-  def outlierStagesProbe(sfDir: String): Unit = {
+  /** r22 (r21 verdict item 7): the LSH refusal guard's corpus-growth
+    * margin as a measured line — exact candidate pairs/vector of the raw
+    * 8×8 arm and the auto arm vs the 2000 bound per rung, from the
+    * factored pre-explosion volume aggregation (no pair join runs, so
+    * the refusing rungs are measurable too). The raw arm's pairs/vector
+    * grow ~linearly in n; the printed headroom is the early warning for
+    * a future gate-corpus growth (scaladoc at LshPairsPerVectorGuard). */
+  def lshMargin(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = graft.Sessions.local("outlier-stages", 32)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import spark.implicits._
-    spark.range(1000000).selectExpr("sum(id)").collect()
-
-    // local 10x of the two input tables, ScaleGen's shift scheme
-    val out = "/tmp/graft_outlier10"
-    def strideOf(df: org.apache.spark.sql.DataFrame, c: String): Long =
-      df.agg(max(col(c).cast("long"))).head().getLong(0) + 1L
-    val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-    val evStride = strideOf(ev0, "event_id")
-    val userStride = strideOf(ev0, "user_id")
-    (0 until 10).map(i => ev0
-        .withColumn("event_id", col("event_id") + lit(i.toLong * evStride))
-        .withColumn("user_id", col("user_id") + lit(i.toLong * userStride)))
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/events.parquet")
-    val em0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val vecStride = strideOf(em0, "vec_id")
-    (0 until 10).map(i =>
-        em0.withColumn("vec_id", col("vec_id") + lit(i.toLong * vecStride)))
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-
-    def t(body: => Unit): Double =
-      (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime(); body
-        (System.nanoTime() - t0) / 1e9
-      }.min
-
-    for ((tag, dir) <- Seq("1x" -> sfDir, "10x" -> out)) {
-      // ---- t_attribution stages ----
-      val e = graft.Tables.events(spark, dir)
-      def views = e.filter($"event_type" === "view")
-        .select($"event_id".as("view_id"), $"user_id", $"ts".as("view_ts"))
-      def clicks = e.filter($"event_type" === "click")
-        .select($"event_id".as("click_id"), $"user_id", $"ts".as("click_ts"))
-      def joined = views.join(clicks, Seq("user_id"))
-        .filter($"click_ts" > $"view_ts" &&
-          $"click_ts" <= $"view_ts" + expr("INTERVAL '30' MINUTE"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"view_id").orderBy($"click_ts", $"click_id")
-      val tScan = t { views.count(); clicks.count(); () }
-      val tJoin = t { joined.count(); () }
-      val tWindow = t {
-        joined.withColumn("rn", row_number().over(w))
-          .filter($"rn" === 1).count(); ()
-      }
-      val tFullAttr = t {
-        graft.BenchProtocol.force(
-          graft.SparkEntry.queries("t_attribution")(spark, dir))
-      }
-      println(f"[outliers] $tag%-4s t_attribution scan=$tScan%.2f " +
-        f"join=$tJoin%.2f window=$tWindow%.2f full=$tFullAttr%.2f")
-
-      // ---- x4_pq_recall stages ----
-      val emb = graft.Tables.embeddings(spark, dir)
-        .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
+    val S = graft.queries.Similarity
+    for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
+      val e = graft.Tables.embeddings(spark, dir)
+        .select($"vec_id",
+          transform($"embedding", x => x.cast("double")).as("ev"))
         .localCheckpoint(true)
-      val n = emb.count()
-      val nCand = math.max(100L, n / 10).toInt
-      var cb: graft.ext.PqAnn.Codebooks = null
-      val tSeed = t { cb = graft.ext.PqAnn.seedCodebooks(emb, m = 8, k = 16) }
-      val qv = emb.filter($"vec_id" === 0).head().getSeq[Double](1)
-      val tEncode = t { graft.ext.PqAnn.encode(emb, cb).count(); () }
-      val encoded = graft.ext.PqAnn.encode(emb, cb).localCheckpoint(true)
-      val tAdc = t {
-        graft.ext.PqAnn.searchAdc(encoded, cb, qv, nCand).count(); ()
+      val n = e.count()
+      def vol(bits: Int, arm: String): Unit = {
+        val (pv, nv) = S.lshPairVolume(S.lshBanded(e, 64, 8, bits), 8)
+        println(f"[lshmargin] $tag%-5s $arm%-10s n=$nv%-8d " +
+          f"pairs=$pv%-12d pairs_per_vec=${if (nv > 0) pv / nv else 0}%-6d " +
+          f"bound=${S.LshPairsPerVectorGuard} " +
+          f"refuses=${nv > 0 && pv / nv > S.LshPairsPerVectorGuard}")
       }
-      val tRerank = t {
-        graft.ext.PqAnn.searchAdcRerank(encoded, emb, cb, qv,
-          topK = 10, nCandidates = nCand).count(); ()
-      }
-      val qLit = array(qv.map(lit): _*)
-      val l2c = aggregate(
-        zip_with($"ev", qLit, (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v)
-      val tTruth = t {
-        emb.select($"vec_id", round(l2c, 6).as("l2"))
-          .orderBy($"l2", $"vec_id").limit(10).count(); ()
-      }
-      val tFullPq = t {
-        graft.BenchProtocol.force(
-          graft.SparkEntry.queries("x4_pq_recall")(spark, dir))
-      }
-      println(f"[outliers] $tag%-4s x4_pq_recall  n=$n nCand=$nCand " +
-        f"seed=$tSeed%.2f encode=$tEncode%.2f adc=$tAdc%.2f " +
-        f"rerank=$tRerank%.2f truth=$tTruth%.2f full=$tFullPq%.2f")
-      spark.sharedState.cacheManager.clearCache()
+      vol(8, "raw-8x8")
+      vol(S.autoBandBits(n), "auto")
     }
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
-    spark.stop()
   }
 
-  private def semdedupScaleTwinAt(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
+  /** Compare native CosineSim vs HOF cosine on a full self-join scan. */
+  def cosineShootout(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val e = graft.Tables.embeddings(spark, dir)
+    val emb = graft.Tables.embeddings(spark, sfDir)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-    graft.ext.SemDedup.semanticDedup(e, tau = 0.35)
-      .join(graft.ext.SemDedup.semanticDedup(e, tau = 0.35,
-          targetClusterSize = graft.ext.SemDedup.DefaultTargetClusterSize,
-          exact = true).select($"vec_id", $"kept".as("kept_f")),
-        Seq("vec_id"), "full")
-      .count()
-    ()
+      .cache()
+    emb.count()
+    val q = emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"ev".as("qv"))
+    def time(tag: String, c: (Column, Column) => Column): Unit = {
+      (1 to 3).foreach { i =>
+        val t0 = System.nanoTime()
+        emb.crossJoin(broadcast(q)).select(sum(c($"ev", $"qv"))).collect()
+        println(f"[$tag] iter$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
+      }
+    }
+    time("hof", graft.queries.Similarity.cosineHof)
+    time("native", graft.queries.Similarity.cosine)
+  }
+
+  /** A/B the a6_revenue_by_nation join order: current (join all, aggregate
+    * once at the end) vs partial-aggregating lineitem revenue by l_orderkey
+    * BELOW the orders join (decimal sums are exact, so two-level summing is
+    * bit-identical). The pre-agg shuffles one (orderkey, decimal, long) row
+    * per order instead of one wide row per lineitem through the join.
+    */
+  def a6Shootout(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def rev = ($"l_extendedprice" * (lit(1) - $"l_discount")).cast("decimal(18,6)")
+    def byNation(df: DataFrame) = df
+      .join(graft.Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
+      .join(graft.Tables.customer(spark, sfDir), $"o_custkey" === $"c_custkey")
+      .join(broadcast(graft.Tables.nation(spark, sfDir)),
+        $"c_nationkey" === $"n_nationkey")
+      .groupBy($"n_name")
+    def current = byNation(graft.Tables.lineitem(spark, sfDir))
+      .agg(sum(rev).cast("double").as("revenue"), count(lit(1)).as("n_items"))
+      .orderBy($"n_name")
+    def preAgg = byNation(graft.Tables.lineitem(spark, sfDir)
+        .groupBy($"l_orderkey")
+        .agg(sum(rev).as("o_rev"), count(lit(1)).as("o_items")))
+      .agg(sum($"o_rev").cast("double").as("revenue"),
+        sum($"o_items").as("n_items"))
+      .orderBy($"n_name")
+    // results must be identical before timings mean anything
+    println(s"[a6] results identical = ${current.collect().toSeq == preAgg.collect().toSeq}")
+    def med(tag: String, f: => DataFrame): Unit = {
+      val times = (1 to 5).map { _ =>
+        spark.sharedState.cacheManager.clearCache()
+        val t0 = System.nanoTime(); f.collect(); (System.nanoTime() - t0) / 1e9
+      }.sorted
+      println(f"[a6] $tag%-8s median=${times(2)}%.3f min=${times.head}%.3f")
+    }
+    for (_ <- 1 to 2) { med("current", current); med("preagg", preAgg) }
   }
 
   /** Profile the MinHash LSH stages: banded row count, raw candidate pairs. */
-  def minhashProbe(sfDir: String): Unit = {
+  def minhashProbe(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = graft.Sessions.local("minhash-probe", 32)
     import spark.implicits._
     val docs = graft.Tables.documents(spark, sfDir)
     val sig = docs.filter(size(split($"text", " ")) >= 3)
@@ -464,39 +314,95 @@ object BenchTune {
     val pairs = banded.as("a").join(banded.as("b"),
       Seq("band_idx", "band_hash")).filter($"a.doc_id" < $"b.doc_id")
     println(s"[probe] rawPairs=${pairs.count()} t=${(System.nanoTime()-t0)/1e9}")
-    spark.stop()
   }
 
-  /** ETL throughput: generate N synthetic Clojush logs, time the full
-    * LogPipeline.load + count of all four tables. The reference processes
-    * one log per sequential JVM subprocess; this measures the parallel
-    * file-per-task path. The log generator and timed load live in
-    * [[BenchLegPrep]] (r22 — they are bench-leg infrastructure shared
-    * with graft.Bench, not probes), aliased here for the etl probes. */
-  private def genEtlLogs(nLogs: Int): String = BenchLegPrep.genEtlLogs(nLogs)
-  private def timedLoad(spark: SparkSession, glob: String): (Long, Double) =
-    BenchLegPrep.timedLoad(spark, glob)
+  /** Stage-by-stage wall time of d_minhash_recall's plan pieces. */
+  def recallProbe(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def t[A](tag: String)(f: => A): A = {
+      val t0 = System.nanoTime(); val r = f
+      println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
+    }
+    val docs = graft.Tables.documents(spark, sfDir).filter($"doc_id" < 600)
+    t("docs count") { docs.count() }
+    val cand = t("candidatePairs build+count") {
+      val c = graft.ext.MinHashDedup.candidatePairs(docs, 32, 8)
+        .select($"a", $"b", lit(true).as("found"))
+      c.count(); c
+    }
+    val sh = t("shingles checkpoint") {
+      docs.withColumn("toks", split($"text", " "))
+        .filter(size($"toks") >= 3)
+        .select($"doc_id",
+          graft.queries.DedupQueries.shinglesOfToks($"toks").as("sh"))
+        .localCheckpoint(true)
+    }
+    val a = sh.select($"doc_id".as("a"), $"sh".as("sha"))
+    val b = sh.select($"doc_id".as("b"), $"sh".as("shb"))
+    val strong = t("exact pair scan") {
+      val s = a.join(broadcast(b), $"a" < $"b")
+        .select($"a", $"b",
+          round(size(array_intersect($"sha", $"shb")).cast("double") /
+            size(array_union($"sha", $"shb")), 6).as("jaccard"))
+        .filter($"jaccard" >= 0.9)
+      s.count(); s
+    }
+    // the two single-intersect forms: plain, then size-pruned (Jaccard ≥
+    // 0.9 needs min(|A|,|B|) ≥ 0.9·max(|A|,|B|))
+    def singleIntersect(pruned: Boolean): Long = {
+      val aa = sh.select($"doc_id".as("a"), $"sh".as("sha"), size($"sh").as("na"))
+      val bb = sh.select($"doc_id".as("b"), $"sh".as("shb"), size($"sh").as("nb"))
+      val on = $"a" < $"b" &&
+        (if (pruned) least($"na", $"nb") >= greatest($"na", $"nb") * 0.899
+         else lit(true))
+      aa.join(broadcast(bb), on)
+        .select($"a", $"b", $"na", $"nb",
+          size(array_intersect($"sha", $"shb")).as("inter"))
+        .select($"a", $"b",
+          round($"inter".cast("double") / ($"na" + $"nb" - $"inter"), 6).as("jaccard"))
+        .filter($"jaccard" >= 0.9).count()
+    }
+    t("exact pair scan, single-intersect") { singleIntersect(pruned = false) }
+    t("exact pair scan, size-pruned") { singleIntersect(pruned = true) }
+    t("left join + order") {
+      strong.join(cand, Seq("a", "b"), "left")
+        .select($"a", $"b", $"jaccard",
+          coalesce($"found", lit(false)).as("recalled"))
+        .orderBy($"a", $"b").count()
+    }
+  }
+
+  /** ETL throughput: `nLogs` synthetic Clojush logs, the full
+    * LogPipeline.load + count of all four tables, twice. The reference
+    * processes one log per sequential JVM subprocess; this measures the
+    * parallel file-per-task path. */
+  def etlThroughput(spark: SparkSession, nLogs: Int): Unit = {
+    val glob = BenchLegPrep.genEtlLogs(nLogs)
+    (1 to 2).foreach { iter =>
+      val (rows, sec) = BenchLegPrep.timedLoad(spark, glob)
+      println(f"[etl] iter$iter $nLogs logs, $rows rows in $sec%.2f s " +
+        f"(${nLogs / sec}%.0f logs/s)")
+    }
+  }
 
   /** ETL throughput vs shuffle-partition count (the load path's shuffles
     * are file-count scale, so it wants far fewer than the query engine).
     */
-  def etlShuffleSweep(nLogs: Int = 500): Unit = {
-    val glob = genEtlLogs(nLogs)
-    val spark = graft.Sessions.local("etl-sweep", 32)
+  def etlShuffleSweep(spark: SparkSession, nLogs: Int = 500): Unit = {
+    val glob = BenchLegPrep.genEtlLogs(nLogs)
     Seq(4, 8, 16).foreach { sp =>
       spark.conf.set("spark.sql.shuffle.partitions", sp.toString)
-      timedLoad(spark, glob) // warm
-      val secs = (1 to 2).map(_ => timedLoad(spark, glob)._2)
+      BenchLegPrep.timedLoad(spark, glob) // warm
+      val secs = (1 to 2).map(_ => BenchLegPrep.timedLoad(spark, glob)._2)
       println(f"[etlsweep] sp=$sp%-3d best=${nLogs / secs.min}%.0f logs/s")
     }
-    spark.stop()
   }
 
   /** Stage-by-stage timing of one warm load (JIT warmed by 3 full loads). */
-  def etlProfile(nLogs: Int = 200): Unit = {
-    val glob = genEtlLogs(nLogs)
-    val spark = graft.Sessions.local("etl-profile", 32)
-    (1 to 3).foreach(_ => timedLoad(spark, glob))
+  def etlProfile(spark: SparkSession, nLogs: Int = 200): Unit = {
+    val glob = BenchLegPrep.genEtlLogs(nLogs)
+    (1 to 3).foreach(_ => BenchLegPrep.timedLoad(spark, glob))
     def t[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
@@ -509,3520 +415,40 @@ object BenchTune {
     t("generations.count")(tables.generations.count())
     t("summary.count")(tables.summary.count())
     tables.release()
-    spark.stop()
   }
 
-  def etlThroughput(nLogs: Int = 500): Unit = {
-    val glob = genEtlLogs(nLogs)
-    val spark = graft.Sessions.local("etl-bench", 32)
-    (1 to 2).foreach { iter =>
-      val (rows, sec) = timedLoad(spark, glob)
-      println(f"[etl] iter$iter $nLogs logs, $rows rows in $sec%.2f s " +
-        f"(${nLogs / sec}%.0f logs/s)")
-    }
-    spark.stop()
-  }
-
-  /** EXACT replica of Bench.scala's ETL leg (first-400-med5): fresh-JVM
-    * caller, 400 logs, 2 warmups, median-of-5 — for band re-measurement
-    * when a round's etl_logs_per_sec drifts (r12 verdict item 2). Run it
-    * 2-3 times (separate JVMs) and compare against BENCH_SCALE.json
-    * r10_etl_band.
-    */
-  def etlBand(): Unit = {
-    val nLogs = 400
-    val glob = genEtlLogs(nLogs)
-    val spark = graft.Sessions.local("etl-band", 32)
-    timedLoad(spark, glob); timedLoad(spark, glob)
-    val secs = (1 to 5).map(_ => timedLoad(spark, glob)._2).sorted
-    val med = secs(secs.size / 2)
-    println(f"[etlband] med5=${nLogs / med}%.1f logs/s  " +
-      secs.map(x => f"${nLogs / x}%.0f").mkString("runs=[", ",", "]"))
-    spark.stop()
-  }
-
-  /** Per-load degradation diagnostic for the ETL leg: N identical loads in
-    * one JVM, printing wall, GC-time delta, live thread count, and block
-    * manager storage entries after each — to localize the r13-observed
-    * intra-JVM slowdown (488 logs/s at load 3 falling to ~50 by load 7).
-    */
-  def etlDiag(nLoads: Int = 10): Unit = {
-    val nLogs = 400
-    val glob = genEtlLogs(nLogs)
-    val spark = graft.Sessions.local("etl-diag", 32)
-    val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcMs: Long = { var t = 0L; gcBeans.forEach(b => t += b.getCollectionTime); t }
-    var lastGc = gcMs
-    (1 to nLoads).foreach { i =>
-      def ph[A](f: => A): (A, Double) = {
-        val t0 = System.nanoTime(); val r = f
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-      val t0 = System.nanoTime()
-      val (t, tLoad) = ph(graft.parse.LogPipeline.load(spark, glob))
-      val (_, tExp) = ph(t.experiments.count())
-      val (_, tPar) = ph(t.experiment.count())
-      val (_, tGen) = ph(t.generations.count())
-      val (_, tSum) = ph(t.summary.count())
-      val (_, tRel) = ph(t.release())
-      val sec = (System.nanoTime() - t0) / 1e9
-      val g = gcMs; val dGc = g - lastGc; lastGc = g
-      println(f"[etldiag] load$i%2d $sec%6.2f s (${nLogs / sec}%5.0f logs/s) " +
-        f"plan=$tLoad%.2f exp=$tExp%.2f par=$tPar%.2f gen=$tGen%.2f " +
-        f"sum=$tSum%.2f rel=$tRel%.2f gc+${dGc}ms")
-    }
-    // name the leak: live threads grouped by name prefix (digits stripped)
-    val byPrefix = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
-      .map(_.getName.replaceAll("[0-9]+", "#"))
-      .groupBy(identity).view.mapValues(_.length).toSeq.sortBy(-_._2)
-    byPrefix.take(15).foreach { case (n, c) =>
-      println(f"[etldiag] thread $c%4d x $n")
-    }
-    spark.stop()
-  }
-
-  /** A/B the a6_revenue_by_nation join order: current (join all, aggregate
-    * once at the end) vs partial-aggregating lineitem revenue by l_orderkey
-    * BELOW the orders join (decimal sums are exact, so two-level summing is
-    * bit-identical). The pre-agg shuffles one (orderkey, decimal, long) row
-    * per order instead of one wide row per lineitem through the join.
-    */
-  def a6Shootout(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("a6-shootout")
-    import spark.implicits._
-    def rev = ($"l_extendedprice" * (lit(1) - $"l_discount")).cast("decimal(18,6)")
-    def current = graft.Tables.lineitem(spark, sfDir)
-      .join(graft.Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
-      .join(graft.Tables.customer(spark, sfDir), $"o_custkey" === $"c_custkey")
-      .join(broadcast(graft.Tables.nation(spark, sfDir)),
-        $"c_nationkey" === $"n_nationkey")
-      .groupBy($"n_name")
-      .agg(sum(rev).cast("double").as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy($"n_name")
-    def preAgg = graft.Tables.lineitem(spark, sfDir)
-      .groupBy($"l_orderkey")
-      .agg(sum(rev).as("o_rev"), count(lit(1)).as("o_items"))
-      .join(graft.Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
-      .join(graft.Tables.customer(spark, sfDir), $"o_custkey" === $"c_custkey")
-      .join(broadcast(graft.Tables.nation(spark, sfDir)),
-        $"c_nationkey" === $"n_nationkey")
-      .groupBy($"n_name")
-      .agg(sum($"o_rev").cast("double").as("revenue"),
-        sum($"o_items").as("n_items"))
-      .orderBy($"n_name")
-    // results must be identical before timings mean anything
-    val a = current.collect().toSeq
-    val b = preAgg.collect().toSeq
-    println(s"[a6] results identical = ${a == b}")
-    def med(tag: String, f: => org.apache.spark.sql.DataFrame): Unit = {
-      val times = (1 to 5).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime(); f.collect(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[a6] $tag%-8s median=${times(2)}%.3f min=${times.head}%.3f")
-    }
-    med("current", current)
-    med("preagg", preAgg)
-    med("current", current)
-    med("preagg", preAgg)
-    spark.stop()
-  }
-
-  /** Streaming near-dup throughput: the corpus' documents written as one
-    * text file per doc in `nBatches` chunks, each chunk drained through
-    * [[graft.streaming.NearDupStream.run]] (AvailableNow, md5 family,
-    * 32×8 banding). Reports per-batch docs/s (wall includes the stream
-    * start/stop — the true AvailableNow micro-batch price), kept count,
-    * and band-store row growth — the store must grow with KEPT canonical
-    * docs only, the property that bounds it at 100 TB.
-    */
-  def streamThroughput(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("stream-bench")
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sfDir)
-      .select($"doc_id", $"text").collect()
-    val nBatches = 4
-    val root = java.nio.file.Files.createTempDirectory("stream_bench")
-    val dir = root.resolve("docs"); java.nio.file.Files.createDirectories(dir)
-    val ckpt = root.resolve("ckpt").toString
-    val store = root.resolve("store").toString
-    val chunkSize = math.ceil(docs.length.toDouble / nBatches).toInt
-    docs.grouped(chunkSize).zipWithIndex.foreach { case (chunk, i) =>
-      chunk.foreach { r =>
-        java.nio.file.Files.writeString(
-          dir.resolve(f"doc_${r.getLong(0)}%07d.txt"), r.getString(1))
-      }
-      var kept = 0L
-      val t0 = System.nanoTime()
-      // accumulate, don't overwrite: AvailableNow may split a chunk into
-      // several micro-batches and the sink fires once per micro-batch
-      val q = graft.streaming.NearDupStream.run(
-        spark, dir.toString, ckpt, store) { (k, _) => kept += k.count() }
-      q.awaitTermination()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val storeRows = spark.read.parquet(store).count()
-      println(f"[stream] batch=$i docs=${chunk.length} kept=$kept " +
-        f"${chunk.length / sec}%.0f docs/s wall=$sec%.2f s storeRows=$storeRows")
-    }
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-    spark.stop()
-  }
-
-  /** Bucketed-at-rest A/B for the bench star joins (a6_revenue_by_nation,
-    * j7_large_equi): orders + lineitem rewritten bucketed+sorted by
-    * orderkey (32 buckets — one per local core; at cluster scale pick
-    * corpus_bytes/buckets ≲ a few hundred MB), then the SAME two queries
-    * timed against the plain parquet tables and the bucketed catalog
-    * tables. The bucketed side must plan the orders⋈lineitem join with
-    * ZERO exchanges below it (printed as an Exchange count per variant) —
-    * the layout answer to the bench's dominant shuffle. Results are
-    * asserted identical before any timing. The one-time bucketed-write
-    * cost is printed too: that's the amortization price a recurring-join
-    * workload pays once.
-    */
-  def bucketAb(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("bucket-ab")
-    import spark.implicits._
-
-    def dsum6(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(18,6)")).cast("double")
-
-    Seq("ab_lineitem", "ab_orders").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
-    val tw0 = System.nanoTime()
-    graft.sources.Bucketing.writeBucketed(
-      graft.Tables.lineitem(spark, sfDir), "ab_lineitem", "l_orderkey", 32)
-    graft.sources.Bucketing.writeBucketed(
-      graft.Tables.orders(spark, sfDir), "ab_orders", "o_orderkey", 32)
-    println(f"[bucketab] one-time bucketed write " +
-      f"${(System.nanoTime() - tw0) / 1e9}%.2f s (32 buckets)")
-
-    def a6(li: org.apache.spark.sql.DataFrame,
-        ord: org.apache.spark.sql.DataFrame) =
-      li.join(ord, $"l_orderkey" === $"o_orderkey")
-        .join(graft.Tables.customer(spark, sfDir), $"o_custkey" === $"c_custkey")
-        .join(broadcast(graft.Tables.nation(spark, sfDir)),
-          $"c_nationkey" === $"n_nationkey")
-        .groupBy($"n_name")
-        .agg(dsum6($"l_extendedprice" * (lit(1) - $"l_discount")).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy($"n_name")
-    def j7(li: org.apache.spark.sql.DataFrame,
-        ord: org.apache.spark.sql.DataFrame) =
-      li.join(ord, $"l_orderkey" === $"o_orderkey")
-        .groupBy($"o_orderpriority")
-        .agg(dsum6($"l_extendedprice" * (lit(1) - $"l_discount")).as("revenue"),
-          count(lit(1)).as("n"))
-        .orderBy($"o_orderpriority")
-
-    def liP = graft.Tables.lineitem(spark, sfDir)
-    def ordP = graft.Tables.orders(spark, sfDir)
-    def liB = spark.table("ab_lineitem")
-    def ordB = spark.table("ab_orders")
-
-    // identical results is the precondition for comparing timings
-    assert(a6(liP, ordP).collect().toSeq == a6(liB, ordB).collect().toSeq,
-      "a6 plain vs bucketed results differ")
-    assert(j7(liP, ordP).collect().toSeq == j7(liB, ordB).collect().toSeq,
-      "j7 plain vs bucketed results differ")
-
-    // the claim under test is about the ORDERKEY join specifically: find
-    // that join node in the final (AQE-materialized) plan and count the
-    // shuffle exchanges in ITS subtree — bucketed must show 0 there
-    def joinShape(df: org.apache.spark.sql.DataFrame): String = {
-      import org.apache.spark.sql.execution.SparkPlan
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      import org.apache.spark.sql.execution.joins.BaseJoinExec
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      def shuffles(p: SparkPlan): Int =
-        p.collect { case _: ShuffleExchangeLike => 1 }.sum
-      val orderkeyJoin = plan.collectFirst {
-        case j: BaseJoinExec
-            if j.leftKeys.exists(_.references.exists(
-              _.name.toLowerCase.contains("orderkey"))) => j
-      }
-      val total = shuffles(plan)
-      orderkeyJoin match {
-        case Some(j) =>
-          s"join=${j.nodeName} shufflesBelowJoin=${shuffles(j)} totalExchanges=$total"
-        case None => s"join=? totalExchanges=$total"
-      }
-    }
-
-    val variants: Seq[(String, String, () => org.apache.spark.sql.DataFrame)] =
-      Seq(
-        ("a6", "plain", () => a6(liP, ordP)),
-        ("a6", "bucketed", () => a6(liB, ordB)),
-        ("j7", "plain", () => j7(liP, ordP)),
-        ("j7", "bucketed", () => j7(liB, ordB)),
-        // forced sort-merge isolates the exchange question from AQE's
-        // broadcast choice: at true fact-fact scale neither side
-        // broadcasts, so THIS pair is the 100 TB comparison — plain SMJ
-        // shuffles both sides below the join, bucketed SMJ shuffles none
-        ("j7", "plain-smj", () => j7(liP.hint("merge"), ordP)),
-        ("j7", "bucketed-smj", () => j7(liB.hint("merge"), ordB)))
-    variants.foreach { case (q, tag, f) =>
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      def force(): Unit = graft.BenchProtocol.force(f())
-      force() // warmup
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val fin = f(); fin.collect() // materialized AQE plan for the count
-      println(f"[bucketab] $q-$tag%-12s median=${times(2)}%.3f " +
-        f"min=${times.head}%.3f ${joinShape(fin)}")
-    }
-    spark.stop()
-  }
-
-  /** Write one of Tables.BucketedLayouts for the probed corpus (the
-    * catalog tables graft.Tables resolves when SPARK_GRAFT_BUCKETED /
-    * -Dgraft.bucketed selects the layout), then A/B the q3 crossover
-    * query in-process: result equality (the precondition), exchange
-    * counts in the materialized AQE plan, and isolated med-of-3 wall.
-    * q3 is probed here because r9_shuffle_bytes measured its
-    * broadcast→shuffle crossover (76 KiB → 207 MiB at 10×) as the
-    * largest single unaddressed mover; the full-bench A/B runs through
-    * `graft.Bench` with the env set.
-    */
-  def bucketWrite(sfDir: String, layout: String): Unit = {
-    val spark = ProbeHarness.session("bucket-write")
-    BenchLegPrep.writeBucketedTables(spark, sfDir, layout)
-
-    // q3 A/B through the REAL query path (Tables resolution toggled by
-    // the JVM property — DataFrames capture the layout at build time)
-    def q3(): org.apache.spark.sql.DataFrame =
-      SparkEntry.queries("q3_shipping_priority")(spark, sfDir)
-    def withLayout[A](l: Option[String])(f: () => A): A = {
-      l match {
-        case Some(v) => System.setProperty("graft.bucketed", v)
-        case None => System.clearProperty("graft.bucketed")
-      }
-      try f() finally System.clearProperty("graft.bucketed")
-    }
-    def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      df.collect() // materialize so AQE's final plan is inspectable
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      plan.collect { case _: ShuffleExchangeLike => 1 }.sum
-    }
-    val plainRows = withLayout(None)(() => q3().collect().toSeq)
-    val bRows = withLayout(Some(layout))(() => q3().collect().toSeq)
-    assert(plainRows == bRows, "q3 plain vs bucketed results differ")
-    Seq(None -> "plain", Some(layout) -> s"bucketed-$layout").foreach {
-      case (l, tag) =>
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
-        withLayout(l) { () =>
-          def force(): Unit = graft.BenchProtocol.force(q3())
-          force() // warmup
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-          }.sorted
-          println(f"[bucketwrite] q3-$tag%-18s median=${times(1)}%.3f " +
-            f"min=${times.head}%.3f exchanges=${exchanges(q3())}")
-        }
-    }
-    spark.stop()
-  }
-
-  /** PQ / IVFADC shootout at the probed corpus: exact brute-force L2
-    * top-10 over raw vectors vs ADC over nibble codes vs the composed
-    * IVFADC (pruned cells + ADC shortlist + exact re-rank). local[32]
-    * measures the COMPUTE side (the at-rest I/O win — cluster-partitioned
-    * codes — is the documented layout story); the point on a big corpus
-    * is the raw-vector scan vs code-scan gap. Build/encode cost is paid
-    * once outside the timed region, like an index.
-    */
-  def pqProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("pq-probe")
-    import spark.implicits._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    val q = e.filter($"vec_id" === 0).head().getSeq[Double](1)
-    val qLit = array(q.map(lit): _*)
-    val l2c = aggregate(zip_with($"ev", qLit, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-
-    val cb = graft.ext.PqAnn.seedCodebooks(e, m = 8, k = 16)
-    val enc = graft.ext.PqAnn.encode(e, cb).localCheckpoint(true)
-    val kIvf = math.max(8L, n / 250L).toInt
-    // materialize the assignment ONCE, as writeIndex would at rest — an
-    // un-pinned index re-runs the O(n·k) flat assignment on every probe
-    // evaluation (first probe draft measured 24.6 s/run at 200k vectors
-    // from exactly that)
-    val built = graft.ext.IvfAnn.build(e, kIvf, lloydIters = 0)
-    val index = built.copy(assigned = built.assigned.localCheckpoint(true))
-    val encIdx = graft.ext.PqAnn.encodeIndexed(index, cb).localCheckpoint(true)
-    val nProbe = math.max(2, kIvf / 16)
-
-    val legs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "bruteforce_l2" -> (() => e.select($"vec_id",
-        round(l2c, 6).as("d")).orderBy($"d", $"vec_id").limit(10)),
-      "pq_adc" -> (() => graft.ext.PqAnn.searchAdc(enc, cb, q, 10)),
-      "pq_adc_rerank100" ->
-        (() => graft.ext.PqAnn.searchAdcRerank(enc, e, cb, q, 10, 100)),
-      s"ivfadc_p${nProbe}of$kIvf" -> (() =>
-        graft.ext.PqAnn.searchIvfPq(index, encIdx, cb, q, nProbe, 10, 100)))
-    legs.foreach { case (tag, f) =>
-      System.gc()
-      def force(): Unit = graft.BenchProtocol.force(f())
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[pq] $tag%-22s median=${times(1)}%.3f min=${times.head}%.3f n=$n")
-    }
-    spark.stop()
-  }
-
-  /** Text-keys vs md5-keys SpanDedup: wall + total shuffle write per run.
-    * The hashKeys mode exists to shrink the span-keyed exchanges at 100 TB
-    * (16-byte digest vs ~40-60-byte span text); this probe makes the
-    * reduction a measured number instead of a scaladoc claim.
-    */
-  def spanKeyShootout(sfDir: String): Unit = {
-    val spark = graft.Sessions.local("span-key", 32)
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("text" -> false, "md5" -> true).foreach { case (tag, hk) =>
-      def force(): Unit = graft.BenchProtocol.force(
-        graft.ext.SpanDedup.repeatedSpanStats(
-          graft.Tables.documents(spark, sfDir), width = 8, minDocs = 2,
-          hashKeys = hk))
-      force() // warmup
-      val runs = (1 to 3).map { _ =>
-        org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-        shuffleWrite.set(0)
-        val t0 = System.nanoTime(); force()
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-        (sec, shuffleWrite.get)
-      }
-      val med = runs.map(_._1).sorted.apply(1)
-      println(f"[spankey] $tag%-4s median=$med%.3f s " +
-        f"shuffleWrite=${runs.map(_._2).max / 1024}%d KiB")
-    }
-    spark.stop()
-  }
-
-  /** md5-vs-xx signature family shootout on the d_minhash_pairs shape
-    * (full candidatePairs: signature + banding + candidate join + exact
-    * slice filter), isolated median-of-3 each, noop-sink forced. The md5
-    * family buys DuckDB derivability at one 16-byte digest per shingle;
-    * xx is the Spark-only throughput path (seeded xxhash64) — this mode
-    * measures what that trade costs end-to-end at the probed SF.
-    */
-  def minhashFamilies(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("mh-family")
-    Seq[(String, graft.ext.HashFamily)](
-      "md5" -> graft.ext.HashFamily.Md5,
-      "xx" -> graft.ext.HashFamily.Xx).foreach { case (tag, fam) =>
-      def force(): Unit = graft.BenchProtocol.force(
-        graft.ext.MinHashDedup.candidatePairs(
-          graft.Tables.documents(spark, sfDir), 32, 8, fam))
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[mhfamily] $tag%-4s median=${times(1)}%.3f min=${times.head}%.3f")
-    }
-    spark.stop()
-  }
-
-  /** Bucketed-at-rest A/B for the WINDOW operator class (w3_moving_avg):
-    * a window PARTITION BY only needs ClusteredDistribution, which a
-    * table bucketed by the window key already satisfies — the per-window
-    * exchange (117 MiB at the 10× corpus, r9_shuffle_bytes) disappears
-    * and only the local sort remains. The join story's layout argument
-    * (r9_bucketed_star_joins), extended to the second operator family
-    * that dominates the bench's data movement.
-    */
-  def windowAb(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("window-ab")
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS ab_orders_cust")
-    val loc = java.nio.file.Paths.get("spark-warehouse", "ab_orders_cust")
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-    val tw0 = System.nanoTime()
-    graft.sources.Bucketing.writeBucketed(
-      graft.Tables.orders(spark, sfDir), "ab_orders_cust", "o_custkey", 32)
-    println(f"[windowab] one-time bucketed write " +
-      f"${(System.nanoTime() - tw0) / 1e9}%.2f s")
-
-    def w3(ord: org.apache.spark.sql.DataFrame) = {
-      val f = org.apache.spark.sql.expressions.Window
-        .partitionBy($"o_custkey")
-        .orderBy($"o_orderdate", $"o_orderkey").rowsBetween(-2, 0)
-      ord.select($"o_custkey", $"o_orderkey",
-        (sum($"o_totalprice".cast("decimal(18,4)")).over(f).cast("double") /
-          count(lit(1)).over(f)).as("mavg3"))
-        .orderBy($"o_custkey", $"o_orderkey")
-    }
-    def plain = w3(graft.Tables.orders(spark, sfDir))
-    def bucketed = w3(spark.table("ab_orders_cust"))
-    assert(plain.collect().toSeq == bucketed.collect().toSeq,
-      "w3 plain vs bucketed results differ")
-
-    def exchangesBelowWindow(df: org.apache.spark.sql.DataFrame): Int = {
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      import org.apache.spark.sql.execution.window.WindowExec
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      plan.collectFirst { case w: WindowExec =>
-        w.collect { case _: ShuffleExchangeLike => 1 }.sum
-      }.getOrElse(-1)
-    }
-
-    Seq("plain" -> (() => plain), "bucketed" -> (() => bucketed)).foreach {
-      case (tag, f) =>
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
-        def force(): Unit = graft.BenchProtocol.force(f())
-        force() // warmup
-        val times = (1 to 5).map { _ =>
-          val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-        }.sorted
-        val fin = f(); fin.collect()
-        println(f"[windowab] $tag%-8s median=${times(2)}%.3f " +
-          f"min=${times.head}%.3f exchangesBelowWindow=${exchangesBelowWindow(fin)}")
-    }
-    spark.stop()
-  }
-
-  /** Three-way w3 LAYOUT shoot-out, closing r17_100x_layout_neutral's
-    * open thread: that probe root-caused w3-bucketed 1.23× to the
-    * ORDERKEY-sorted star layout inflating the custkey-side column
-    * encodings (1.22× bytes) — but never measured the window workload's
-    * OWN layout. Here the same moving-average shape runs on (a) plain
-    * parquet with the gate's single-exchange plan, (b) the
-    * orderkey-bucketed star table (the committed bucketed leg's layout),
-    * (c) orders bucketed+sorted by (o_custkey, o_orderdate, o_orderkey) —
-    * the layout whose hash distribution satisfies the window's clustering
-    * outright, so the plan needs ZERO exchanges. Prints per-layout wall
-    * (median/min of 5 after GC), exchanges below the WindowExec, at-rest
-    * table bytes, and per-pass host steal; results asserted identical
-    * up to row order.
-    */
-  def window3Way(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("window-3way")
-    import spark.implicits._
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val hz = 100.0
-
-    def freshTable(name: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = java.nio.file.Paths.get("spark-warehouse", name)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.delete)
-      }
-    }
-    def dirBytes(p: java.nio.file.Path): Long = {
-      import scala.jdk.CollectionConverters._
-      if (!java.nio.file.Files.exists(p)) 0L
-      else java.nio.file.Files.walk(p).iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
-    }
-    freshTable("ab3_orders_ok"); freshTable("ab3_orders_cust")
-    graft.sources.Bucketing.writeBucketedSorted(
-      graft.Tables.orders(spark, sfDir), "ab3_orders_ok",
-      "o_orderkey", Seq("o_orderkey"), 32)
-    graft.sources.Bucketing.writeBucketedSorted(
-      graft.Tables.orders(spark, sfDir), "ab3_orders_cust",
-      "o_custkey", Seq("o_custkey", "o_orderdate", "o_orderkey"), 32)
-    val plainBytes = dirBytes(java.nio.file.Paths.get(
-      sfDir.stripPrefix("file:"), "orders.parquet"))
-    println(f"[window3way] orders bytes plain=$plainBytes " +
-      f"ok=${dirBytes(java.nio.file.Paths.get("spark-warehouse", "ab3_orders_ok"))} " +
-      f"cust=${dirBytes(java.nio.file.Paths.get("spark-warehouse", "ab3_orders_cust"))}")
-
-    // the gate's w3 shape; `reorg` adds the explicit range partitioning the
-    // PLAIN plan needs (its one exchange) — bucketed scans already satisfy
-    // the window's clustering and must not re-shuffle
-    def w3(ord: org.apache.spark.sql.DataFrame, reorg: Boolean) = {
-      val f = org.apache.spark.sql.expressions.Window
-        .partitionBy($"o_custkey")
-        .orderBy($"o_orderdate", $"o_orderkey").rowsBetween(-2, 0)
-      val base = if (reorg) ord.repartitionByRange($"o_custkey") else ord
-      base.select($"o_custkey", $"o_orderkey",
-        (sum($"o_totalprice".cast("decimal(18,4)")).over(f).cast("double") /
-          count(lit(1)).over(f)).as("mavg3"))
-        .sortWithinPartitions($"o_custkey", $"o_orderkey")
-    }
-    def exchangesBelowWindow(df: org.apache.spark.sql.DataFrame): Int = {
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-      import org.apache.spark.sql.execution.window.WindowExec
-      val plan = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      plan.collectFirst { case w: WindowExec =>
-        w.collect { case _: ShuffleExchangeLike => 1 }.sum
-      }.getOrElse(-1)
-    }
-    val legs = Seq(
-      "plain" -> (() => w3(graft.Tables.orders(spark, sfDir), reorg = true)),
-      "orderkey" -> (() => w3(spark.table("ab3_orders_ok"), reorg = false)),
-      "custkey" -> (() => w3(spark.table("ab3_orders_cust"), reorg = false)))
-    // correctness first: identical rows up to order across the three legs
-    val sums = legs.map { case (tag, f) =>
-      // bit_xor: order-independent and overflow-free under ANSI (a long
-      // SUM of 64-bit hashes would overflow)
-      tag -> f().agg(count(lit(1)), expr(
-        "bit_xor(xxhash64(o_custkey, o_orderkey, cast(mavg3 as string)))"))
-        .head()
-    }
-    require(sums.map(_._2.toString).distinct.size == 1,
-      s"legs disagree: $sums")
-    legs.foreach { case (tag, f) =>
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      def force(): Unit = graft.BenchProtocol.force(f())
-      force() // warmup
-      val s0 = stealJiffies
-      val times = (1 to 5).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      val steal = (stealJiffies - s0) / hz
-      // inspect the plan of a FORCED instance: under AQE, executedPlan on
-      // a never-executed DataFrame is the initial plan, which may not be
-      // the one the timed passes actually ran (windowAb's fin pattern)
-      val fin = f(); graft.BenchProtocol.force(fin)
-      println(f"[window3way] $tag%-9s median=${times(2)}%.3f " +
-        f"min=${times.head}%.3f steal=${steal}%.1f " +
-        f"exchangesBelowWindow=${exchangesBelowWindow(fin)}")
-    }
-    freshTable("ab3_orders_ok"); freshTable("ab3_orders_cust")
-    spark.stop()
-  }
-
-  /** Incremental SemDedup at the AUTO-K cluster count (k ∝ n, the batch
-    * operator's own scale rule) vs the gate's fixed k=8 — the remedy for
-    * the fixed-k quadratic cliff the d_semdedup_incremental 100× probe
-    * measures (per-cell pair work is (n/k)²·k, so k ∝ n holds per-cell
-    * size constant). Prints wall (median/min of 3) and the derived k.
-    */
-  def semIncAuto(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("seminc-auto")
-    import spark.implicits._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    val k = graft.ext.SemDedup.autoK(n, graft.ext.SemDedup.DefaultTargetClusterSize)
-    val wave = when(substring(md5($"vec_id".cast("string")), 1, 1)
-      .between("0", "7"), 0).otherwise(1)
-    // drives the SHIPPED auto overload (r18 verdict item 2), not a
-    // hand-derived k, so the probe measures the path callers get
-    def run() = graft.BenchProtocol.force(
-      graft.ext.SemDedup.incrementalSemDedup(
-        e, wave, waves = Seq(0, 1), tau = 0.35,
-        targetClusterSize = graft.ext.SemDedup.DefaultTargetClusterSize))
-    run() // warmup
-    val times = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-    }.sorted
-    println(f"[semincauto] n=$n k=$k median=${times(1)}%.3f min=${times.head}%.3f")
-    spark.stop()
-  }
-
-  /** Per-bench-query total shuffle write — the direct measure of what
-    * each query MOVES, complementing the wall-clock bench (at cluster
-    * scale shuffle bytes cross a network; locally they only cross page
-    * cache, so bytes are the better proxy for the 100 TB cost).
-    */
-  def shuffleBytes(sfDir: String): Unit = {
-    val spark = graft.Sessions.local("shuffle-bytes", 32)
-    val sw = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    val qs = SparkEntry.queries
-    SparkEntry.benchQueries.foreach { n =>
-      spark.sharedState.cacheManager.clearCache()
-      graft.BenchProtocol.force(qs(n)(spark, sfDir)) // warmup
-      org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-      sw.set(0)
-      graft.BenchProtocol.force(qs(n)(spark, sfDir))
-      org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-      println(f"[shufbytes] $n%-24s ${sw.get / 1024}%9d KiB")
-    }
-    spark.stop()
-  }
-
-  /** [[shuffleBytes]] for an arbitrary named-query list — the same
-    * listener protocol pointed at non-bench gates (e.g. the incremental
-    * dedup family, whose 100 TB cost model is stated in shuffle terms). */
-  def shuffleBytesFor(sfDir: String, names: Seq[String]): Unit = {
-    val spark = graft.Sessions.local("shuffle-bytes-q", 32)
-    val sw = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) sw.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    val qs = SparkEntry.queries
-    names.foreach { n =>
-      spark.sharedState.cacheManager.clearCache()
-      graft.BenchProtocol.force(qs(n)(spark, sfDir)) // warmup
-      org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-      sw.set(0)
-      graft.BenchProtocol.force(qs(n)(spark, sfDir))
-      org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-      println(f"[shufbytesq] $n%-24s ${sw.get / 1024}%9d KiB")
-    }
-    spark.stop()
-  }
-
-  /** Exact-collapse-first MinHash A/B at heavily-cloned corpora. Pair
-    * ENUMERATION is output-bound: a duplicate group of g clones emits
-    * g(g-1)/2 candidate pairs, so a corpus where every doc has c exact
-    * clones produces c² times the pairs — the 100× ScaleGen corpus
-    * (c = 100) measured 193× wall on raw candidatePairs. The pipeline
-    * answer is exact dedup FIRST (one representative per distinct text,
-    * min doc_id), then near-dup over representatives: same near-dup
-    * structure discovered, pair count back to the base corpus's. This
-    * mode measures both paths at the probed SF.
-    */
-  def minhashCollapse(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("mh-collapse")
-    import spark.implicits._
-    def docs = graft.Tables.documents(spark, sfDir)
-    def collapsed = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"fp").orderBy($"doc_id")
-      docs.withColumn("fp", md5($"text"))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1).select($"doc_id", $"text")
-    }
-    println(s"[mhcollapse] docs=${docs.count()} representatives=${collapsed.count()}")
-    Seq("raw" -> (() => docs), "collapsed" -> (() => collapsed)).foreach {
-      case (tag, d) =>
-        spark.sharedState.cacheManager.clearCache()
-        System.gc()
-        def pairs() = graft.ext.MinHashDedup.candidatePairs(d(), 32, 8)
-        def force(): Unit = graft.BenchProtocol.force(pairs())
-        force() // warmup
-        val times = (1 to 3).map { _ =>
-          spark.sharedState.cacheManager.clearCache()
-          val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-        }.sorted
-        val n = pairs().count()
-        println(f"[mhcollapse] $tag%-10s median=${times(1)}%.3f min=${times.head}%.3f pairs=$n")
-    }
-    // the transitive-clusters composition over the collapsed graph (the
-    // full-graph twin at a clone-heavy corpus is edge-quadratic — see
-    // r9_100x — so only the scale path is timed here)
-    spark.sharedState.cacheManager.clearCache()
-    System.gc()
-    val t0 = System.nanoTime()
-    val nOut = graft.ext.DedupClusters.minhashClustersCollapsed(docs).count()
-    println(f"[mhcollapse] clusters-collapsed ${(System.nanoTime() - t0) / 1e9}%.3f s rows=$nOut")
-    spark.stop()
-  }
-
-  /** Scale-factor probe for the round-8 curation ops: per-op isolated
-    * median-of-3 (Bench protocol: clearCache + GC + one warmup) at the
-    * given dir — run once at sf0.1 and once at the ScaleGen 10× corpus to
-    * measure wall factors. `d_semdedup` is probed twice: at the QueryDef's
-    * fixed k=8 (cluster size grows with n ⇒ within-cluster pairs grow
-    * quadratically — the documented failure mode) and at k ∝ n (constant
-    * cluster size ≈ 250 — the knob the scaladoc prescribes at scale).
-    */
-  def scaleOps(sfDir: String, opFilter: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = graft.Sessions.local("scale-ops", 32)
-    import spark.implicits._
-    // SPARK_GRAFT_SCALEOPS_ITERS trims the timed passes for very large
-    // corpora (the 100x probe: one d_span_dedup pass is ~minutes; the
-    // fixed-k semdedup leg is the documented quadratic cliff and takes
-    // HOURS there — filter it out rather than re-measuring a known shape)
-    val iters = sys.env.getOrElse("SPARK_GRAFT_SCALEOPS_ITERS", "3").toInt
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    val nVec = graft.Tables.embeddings(spark, sfDir).count()
-    val kProp = math.max(8L, nVec / 250L).toInt
-    def emb = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-      "d_span_dedup" ->
-        (() => SparkEntry.queries("d_span_dedup")(spark, sfDir)),
-      // the collapse-first composition over the SAME corpus (reps only ride
-      // the span explode; clones inherit) — the r10 answer to d_span_dedup's
-      // clone-factor wall at the 100x corpus
-      "d_span_collapsed" ->
-        (() => graft.ext.SpanDedup.spanStatsCollapsed(
-          graft.Tables.documents(spark, sfDir).select($"doc_id", $"text"),
-          width = 8, minDocs = 2)),
-      "x_pii_redact" ->
-        (() => SparkEntry.queries("x_pii_redact")(spark, sfDir)),
-      "x_dsir_weights" ->
-        (() => SparkEntry.queries("x_dsir_weights")(spark, sfDir)),
-      "x_gopher_repetition" ->
-        (() => SparkEntry.queries("x_gopher_repetition")(spark, sfDir)),
-      "x_ccnet_buckets" ->
-        (() => SparkEntry.queries("x_ccnet_buckets")(spark, sfDir)),
-      "x_cms_heavy_hitters" ->
-        (() => SparkEntry.queries("x_cms_heavy_hitters")(spark, sfDir)),
-      "x_tfidf_top_terms" ->
-        (() => SparkEntry.queries("x_tfidf_top_terms")(spark, sfDir)),
-      "x_bigram_surprisal" ->
-        (() => SparkEntry.queries("x_bigram_surprisal")(spark, sfDir)),
-      "x_kn_bigram_surprisal" ->
-        (() => SparkEntry.queries("x_kn_bigram_surprisal")(spark, sfDir)),
-      "d_semdedup_k8" ->
-        (() => SparkEntry.queries("d_semdedup")(spark, sfDir)),
-      // the r9 default path: semanticDedup(e, tau) derives k ∝ n itself
-      // (count + IvfAnn build included in the measured wall — that's what
-      // a caller pays)
-      "d_semdedup_auto" ->
-        (() => graft.ext.SemDedup.semanticDedup(emb, tau = 0.35)),
-      // the O(n·√k) coarse-quantized assignment path (flat auto-k is
-      // O(n²/cellSize) once k ∝ n — its 100× cost is assignment-bound)
-      "d_semdedup_auto2" ->
-        (() => graft.ext.SemDedup.semanticDedupCoarse(emb, tau = 0.35))) ++
-      // skip the k-proportional probe where it collapses to k=8 (sf0.1):
-      // it would re-measure the identical configuration under the same label
-      (if (kProp != 8)
-        Seq(s"d_semdedup_k$kProp" ->
-          (() => graft.ext.SemDedup.semanticDedup(emb, kProp, 0.35)))
-      else Seq.empty)
-    ops.filter { case (name, _) =>
-      opFilter.forall(_.split(",").exists(name.contains))
-    }.foreach { case (name, f) =>
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
-      // the ONE forcing idiom shared with graft.Bench (BenchProtocol
-      // scaladoc: count() lets Catalyst prune the query's real work)
-      def force(): Unit = graft.BenchProtocol.force(f())
-      force() // warmup
-      val times = (1 to iters).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      // lower median — (iters-1)/2 is correct for odd iters and picks the
-      // LOWER middle for even (iters/2 would print the MAX at iters=2)
-      println(f"[scaleops] $name%-22s median=${times((iters - 1) / 2)}%.3f min=${times.head}%.3f n_vec=$nVec")
-    }
-    spark.stop()
-  }
-
-  /** ClusterPrune + MRL probe at the probed corpus: (a) the post-SemDedup
-    * curation stage — coarse k∝n assignment, prototypicality scoring, and
-    * the per-cluster balanced sample — as one pipeline wall; (b) the MRL
-    * funnel (prefix-16 shortlist → full-dim re-rank) against brute-force
-    * full-dim kNN for a 200-query batch, with the funnel's recall over the
-    * brute-force truth printed alongside the walls. Assignment is
-    * materialized once, like an at-rest index (the pq-probe lesson).
-    */
-  def clusterPruneProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("clusterprune-probe")
-    import spark.implicits._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    val k = math.max(8L, (n + 249) / 250).toInt
-    val cents = graft.ext.IvfAnn.seedCentroids(e, k)
-    val centPairs = cents.zipWithIndex.map { case (c, i) => i -> c.toSeq }
-    def timed(tag: String)(f: () => org.apache.spark.sql.DataFrame): Unit = {
-      System.gc()
-      def force(): Unit = graft.BenchProtocol.force(f())
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[cp] $tag%-26s median=${times(1)}%.3f min=${times.head}%.3f n=$n k=$k")
-    }
-    // assignment materialized once (index-at-rest); sample timed over it
-    val assigned = graft.ext.IvfAnn.assignCoarse(e, cents).localCheckpoint(true)
-    timed("assign_coarse(fresh)") { () => graft.ext.IvfAnn.assignCoarse(e, cents) }
-    timed("proto+balancedSample") { () =>
-      graft.ext.ClusterPrune.balancedSample(
-        graft.ext.ClusterPrune.prototypicality(assigned, centPairs), 0.25) }
-
-    val queries = e.filter($"vec_id" < 200)
-      .select($"vec_id".as("qid"), $"ev".as("qv")).localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"qid").orderBy($"cos".desc, $"vec_id")
-    def brute() = e.join(broadcast(queries), $"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id",
-        round(graft.queries.Similarity.cosine($"ev", $"qv"), 4).as("cos"))
-      .withColumn("rn", row_number().over(w)).filter($"rn" <= 10)
-      .select($"qid", $"vec_id")
-    def mrl() = graft.queries.Similarity
-      .mrlSearchJoin(e, queries, prefixDim = 16, shortlist = 50, k = 10)
-      .select($"qid", $"vec_id")
-    timed("knn_bruteforce_200q") { () => brute() }
-    timed("knn_mrl16_short50") { () => mrl() }
-    val truth = brute().as[(Long, Long)].collect().toSet
-    val got = mrl().as[(Long, Long)].collect().toSet
-    println(f"[cp] mrl_recall@10 ${truth.count(got.contains).toDouble / truth.size}%.3f " +
-      s"(${truth.size} truth pairs)")
-
-    // At local[32] with vectors in memory both funnels are sort-bound, so
-    // walls tie — the MRL dividend at corpus scale is AT-REST I/O: a
-    // stored prefix column means stage 1 scans prefixDim/dim of the
-    // vector bytes. The honest 100 TB proxy is the layout footprint
-    // ratio (same argument as PQ's 64× code compression), plus the
-    // stage-1 wall from each layout.
-    val fullPath = "/tmp/cp_probe_full"
-    val loPath = "/tmp/cp_probe_lo16"
-    e.write.mode("overwrite").parquet(fullPath)
-    e.select($"vec_id", slice($"ev", 1, 16).as("ev_lo"))
-      .write.mode("overwrite").parquet(loPath)
-    def dirBytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum else f.length()
-      walk(new java.io.File(p))
-    }
-    println(f"[cp] layout_bytes full64=${dirBytes(fullPath) / 1024}%d KiB " +
-      f"prefix16=${dirBytes(loPath) / 1024}%d KiB " +
-      f"ratio=${dirBytes(fullPath).toDouble / dirBytes(loPath)}%.1f")
-    val qLo = queries.select($"qid", slice($"qv", 1, 16).as("qv_lo"))
-      .localCheckpoint(true)
-    def stage1(scan: org.apache.spark.sql.DataFrame, lo: org.apache.spark.sql.Column) =
-      scan.join(broadcast(qLo), col("vec_id") =!= col("qid"))
-        .select($"qid", $"vec_id", round(graft.queries.Similarity.cosine(
-          lo, $"qv_lo"), 4).as("cos_lo"))
-        .withColumn("rs", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy($"qid")
-            .orderBy($"cos_lo".desc, $"vec_id")))
-        .filter($"rs" <= 50).select($"qid", $"vec_id")
-    // same harness as the timed() legs above (incl. the GC nudge), so the
-    // full64-vs-prefix16 walls are measured under one protocol
-    timed("stage1_full64_layout") { () =>
-      stage1(spark.read.parquet(fullPath), slice($"ev", 1, 16)) }
-    timed("stage1_prefix16_layout") { () =>
-      stage1(spark.read.parquet(loPath), $"ev_lo") }
-    spark.stop()
-  }
-
-  /** Scale probe for the round-10 retrieval/decontamination additions:
-    * x_decontamination (broadcast benchmark-gram join — should track
-    * corpus bytes), x_bloom_membership (fixed 4·8192-cell sketch —
-    * should stay near-flat like CMS), x_bm25_topk (token tf shuffle +
-    * broadcast query — linear). Run at sf0.1 / 10× / 100× via
-    * SPARK_GRAFT_SF_DIR to pin the factors.
-    */
-  def retrievalProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("retrieval-probe")
-    for (q <- Seq("x_decontamination", "x_bloom_membership", "x_bm25_topk")) {
-      def force(): Unit =
-        graft.BenchProtocol.force(graft.SparkEntry.queries(q)(spark, sfDir))
-      System.gc()
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[ret] $q%-22s median=${times(1)}%.3f min=${times.head}%.3f")
-    }
-    // inverted-index-at-rest A/B: build once (amortized cost), then the
-    // same BM25 query as a bucket-pruned postings lookup — vs the
-    // full-scan x_bm25_topk leg above. DROP alone is a no-op for a fresh
-    // JVM's in-memory catalog, so also delete any warehouse directory a
-    // crashed prior run left behind (saveAsTable throws on a leftover
-    // location it has no catalog entry for)
-    def dropRetTable(t: String): Unit = {
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(wh, t))
-      ()
-    }
-    Seq("ret_postings", "ret_postings_stats", "ret_live", "ret_live_stats")
-      .foreach(dropRetTable)
-    import spark.implicits._
-    val tb0 = System.nanoTime()
-    graft.sources.InvertedIndex.buildPostings(
-      graft.Tables.documents(spark, sfDir)
-        .select(org.apache.spark.sql.functions.col("doc_id"),
-          org.apache.spark.sql.functions.col("text")),
-      "ret_postings", buckets = 8)
-    println(f"[ret] postings_build        once=${(System.nanoTime() - tb0) / 1e9}%.3f")
-    val terms = spark.table("ret_postings")
-      .groupBy($"term")
-      .agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("df"))
-      .orderBy($"df".desc, $"term").limit(5)
-      .select($"term").as[String].collect().toSeq
-    def forceIdx(): Unit = graft.BenchProtocol.force(
-      graft.sources.InvertedIndex.bm25TopK(spark, "ret_postings", terms, 20))
-    System.gc(); forceIdx()
-    val ts = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); forceIdx(); (System.nanoTime() - t0) / 1e9
-    }.sorted
-    println(f"[ret] bm25_via_index        median=${ts(1)}%.3f min=${ts.head}%.3f")
-    spark.sql("DROP TABLE IF EXISTS ret_postings")
-    spark.sql("DROP TABLE IF EXISTS ret_postings_stats")
-    // live (append-able) layout: same query over IndexStream-maintained
-    // postings — df recomputed from the pruned slice + distinct() replay
-    // collapse; the delta vs the sealed path is the price of staying
-    // incrementally maintainable
-    spark.sql("DROP TABLE IF EXISTS ret_live")
-    spark.sql("DROP TABLE IF EXISTS ret_live_stats")
-    val liveDocs = "/tmp/ret_live_docs_" + math.abs(sfDir.hashCode)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(liveDocs))
-    graft.Tables.documents(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text"))
-      .write.parquet(liveDocs + "/in")
-    val tl0 = System.nanoTime()
-    graft.streaming.IndexStream.run(spark, liveDocs + "/in",
-      liveDocs + "/ck", "ret_live", buckets = 8).awaitTermination()
-    println(f"[ret] live_ingest           once=${(System.nanoTime() - tl0) / 1e9}%.3f")
-    def forceLive(): Unit = graft.BenchProtocol.force(
-      graft.sources.InvertedIndex.bm25TopKLive(spark, "ret_live", terms, 20))
-    System.gc(); forceLive()
-    val tl = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); forceLive(); (System.nanoTime() - t0) / 1e9
-    }.sorted
-    println(f"[ret] bm25_via_live_index   median=${tl(1)}%.3f min=${tl.head}%.3f")
-    // sealing the live table vs rebuilding from the corpus: seal is one
-    // aggregation pass over the postings (no re-tokenization), so it
-    // should undercut postings_build at every scale
-    Seq("ret_sealed", "ret_sealed_stats").foreach(dropRetTable)
-    val tseal = System.nanoTime()
-    graft.sources.InvertedIndex.seal(spark, "ret_live", "ret_sealed")
-    println(f"[ret] seal_live             once=${(System.nanoTime() - tseal) / 1e9}%.3f")
-    Seq("ret_sealed", "ret_sealed_stats").foreach(dropRetTable)
-    spark.sql("DROP TABLE IF EXISTS ret_live")
-    spark.sql("DROP TABLE IF EXISTS ret_live_stats")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(liveDocs))
-    spark.stop()
-  }
-
-  /** Extension-vs-rebuild for the incremental IVF path: (a) full
-    * buildAuto + writeIndex over the corpus (what every corpus extension
-    * costs WITHOUT AnnStream), (b) extending a persisted index with a
-    * ~1% batch against the existing codebook (assign + partitioned
-    * write — what AnnStream's foreachBatch does). The claim under test:
-    * (a) grows with the corpus, (b) with the batch.
-    */
-  def annIncProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("ann-inc-probe")
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id",
-        org.apache.spark.sql.functions.transform(
-          $"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = emb.count()
-    val idxDir = "/tmp/ann_inc_idx_" + math.abs(sfDir.hashCode)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(idxDir))
-    val t0 = System.nanoTime()
-    val index = graft.ext.IvfAnn.buildAuto(emb)
-    index.assigned
-      .withColumn("batch", org.apache.spark.sql.functions.lit(0L))
-      .write.partitionBy("cluster", "batch")
-      .mode("overwrite").parquet(idxDir)
-    println(f"[anninc] full_rebuild  n=$n%-8d once=${(System.nanoTime() - t0) / 1e9}%.3f")
-    val batch = emb.filter($"vec_id" % 100 === 0).localCheckpoint(true)
-    val cents = index.centroids.sortBy(_._1).map(_._2.toArray)
-    val t1 = System.nanoTime()
-    graft.ext.IvfAnn.assign(batch, cents)
-      .withColumn("batch", org.apache.spark.sql.functions.lit(9999L))
-      .write.partitionBy("cluster", "batch")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(idxDir)
-    println(f"[anninc] extend_1pct   n=${batch.count()}%-8d once=${(System.nanoTime() - t1) / 1e9}%.3f")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(idxDir))
-    spark.stop()
-  }
-
-  /** Data-skipping A/B for the Z-order layout: the same conjunctive box
-    * predicate (both dims ~7% selective) over three at-rest layouts of
-    * the events table on BALANCED-width keys (user_id × event_id ranked
-    * into the same cardinality — the zValue scaladoc's skew contract):
-    * unordered, single-dim sorted, Z-ordered. Reports records READ
-    * (task input metrics — i.e. rows surviving parquet row-group/page
-    * skipping) and wall. The claim: single-dim sort skips in its one
-    * dimension; Z-order skips in both.
-    */
-  def zorderProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("zorder-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // balanced dims at every scale: rank both keys into the same 1500-value
-    // space (the zValue scaladoc's skew contract — real OPTIMIZE ZORDER
-    // implementations interleave ranks for the same reason)
-    val ev = graft.Tables.events(spark, sfDir)
-      .select(($"user_id" % 1500).as("a"), ($"event_id" % 1500).as("b"),
-        $"value")
-      .localCheckpoint(true)
-    val base = "/tmp/zorder_probe_" + math.abs(sfDir.hashCode)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
-    // skipping granularity is one row group = one file here, so the split
-    // tree must stay deep enough that a file's (a, b) region is finer
-    // than the query box — scale file count with the corpus
-    val nFiles = math.max(64, (ev.count() / 40000L).toInt)
-    ev.repartition(nFiles).write.parquet(base + "/plain")
-    ev.repartitionByRange(nFiles, $"a").sortWithinPartitions($"a")
-      .write.parquet(base + "/bysort_a")
-    graft.sinks.Layout.writeZOrdered(ev, base + "/zorder", "a", "b", nFiles)
-
-    val recs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        recs.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val total = ev.count()
-    for (layout <- Seq("plain", "bysort_a", "zorder")) {
-      def run(): Double = {
-        val t0 = System.nanoTime()
-        spark.read.parquet(base + "/" + layout)
-          .filter($"a".between(700, 800) && $"b".between(700, 800))
-          .agg(sum($"value")).collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      System.gc(); run() // warmup
-      // listener events are async — drain the warmup's task-end events
-      // BEFORE zeroing, or they leak into the measured count
-      Thread.sleep(500)
-      recs.set(0)
-      val t = run()
-      Thread.sleep(500)
-      val r = recs.get()
-      println(f"[zorder] $layout%-9s records_read=$r%-9d (${100.0 * r / total}%.1f%% of $total) wall=$t%.3f")
-    }
-    spark.sparkContext.removeSparkListener(listener)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
-    spark.stop()
-  }
-
-  /** Scale probe for the round-10 event-analytics + chunking additions:
-    * funnel (per-user min-aggs + equi-joins), retention (distinct
-    * user-week collapse), transitions (per-user window), chunking
-    * (map-only explode), z-values (per-row bit math). Run at sf0.1 /
-    * 10× / 100× via SPARK_GRAFT_SF_DIR to pin the factors.
-    */
-  def eventOpsProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("eventops-probe")
-    for (q <- Seq("t_funnel", "t_retention_cohorts", "t_event_transitions",
-        "x_chunk_windows", "x_zorder_value")) {
-      def force(): Unit =
-        graft.BenchProtocol.force(graft.SparkEntry.queries(q)(spark, sfDir))
-      System.gc()
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[evops] $q%-22s median=${times(1)}%.3f min=${times.head}%.3f")
-    }
-    spark.stop()
-  }
-
-  /** At-rest compression codec A/B over the biggest table (lineitem):
-    * bytes at rest, one-time write cost, and scan wall for a q1-shaped
-    * aggregate. The 100 TB knob this measures: storage $/TB vs scan
-    * CPU — snappy is Spark's default, zstd typically ~30-40% smaller at
-    * a modest decode cost, uncompressed is the anti-baseline.
-    */
-  def codecProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("codec-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val li = graft.Tables.lineitem(spark, sfDir).localCheckpoint(true)
-    val base = "/tmp/codec_probe_" + math.abs(sfDir.hashCode)
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
-    def dirBytes(p: String): Long = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum else f.length()
-      walk(new java.io.File(p))
-    }
-    for (codec <- Seq("uncompressed", "snappy", "zstd", "lz4")) {
-      val p = s"$base/$codec"
-      val tw0 = System.nanoTime()
-      li.write.option("compression", codec).parquet(p)
-      val tw = (System.nanoTime() - tw0) / 1e9
-      def scan(): Double = {
-        val t0 = System.nanoTime()
-        spark.read.parquet(p)
-          .filter($"l_shipdate" <= "1998-09-02")
-          .groupBy($"l_returnflag", $"l_linestatus")
-          .agg(sum($"l_quantity"), sum($"l_extendedprice"), count(lit(1)))
-          .collect()
-        (System.nanoTime() - t0) / 1e9
-      }
-      System.gc(); scan() // warmup
-      val times = (1 to 3).map(_ => scan()).sorted
-      println(f"[codec] $codec%-13s bytes=${dirBytes(p) / 1024}%-8d KiB " +
-        f"write=$tw%.3f scan_median=${times(1)}%.3f min=${times.head}%.3f")
-    }
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(base))
-    spark.stop()
-  }
-
-  /** Generic per-query scale probe: `probe q1,q2,...` times the named
-    * QueryDefs (warmup + median-of-3, noop force) at SPARK_GRAFT_SF_DIR.
-    * The reusable form of the per-family probes — point it at any
-    * suspect rows from an `all` sweep. */
-  /** 100× documents-table probe for the round-13 text/dedup gates: write
-    * a documents-only corpus replicated 100× with ScaleGen's key-shift
-    * discipline (replica i shifts doc_id by i·stride — every replica is
-    * an EXACT textual clone family, the worst case for anything
-    * candidate-joined), then time the REAL declared queries against both
-    * corpora. The jaccard leg is the interesting one: 100× exact clones
-    * collapse to the original rep set before the prefix join, so the
-    * collapse-first claim is exercised at its design point. */
-  def sentScaleProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("sent-scale")
-    val docs = graft.Tables.documents(spark, sfDir)
-    val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-    val out = "/tmp/graft_docs100"
-    docs.crossJoin(spark.range(0, 100).select(col("id").as("__rep")))
-      .select((col("doc_id") + col("__rep") * stride).as("doc_id"),
-        col("text"), col("lang"), col("source"), col("n_chars"))
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    val n1 = docs.count(); val n100 = spark.read
-      .parquet(s"$out/documents.parquet").count()
-    println(s"[sentscale] docs $n1 -> $n100")
-    for (q <- Seq("d_sentence_dedup", "x_pmi_bigrams", "x_novelty",
-        "d_jaccard_join")) {
-      def t(dir: String): Double = {
-        System.gc()
-        val t0 = System.nanoTime()
-        graft.BenchProtocol.force(graft.SparkEntry.queries(q)(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      val base = t(sfDir)
-      val big = t(out)
-      println(f"[sentscale] $q%-20s 1x=$base%.2fs 100x=$big%.2fs " +
-        f"factor=${big / base}%.1f")
-    }
-    spark.stop()
-  }
-
-  /** BPE probe (r13 verdict item 2): the two encoder forms — the 24-pass
-    * replace CHAIN (gate form, |merges| linear passes per doc) and the
-    * ITERATIVE lowest-rank-first kernel (one word-local merge loop) — timed
-    * on the sf corpus and its 100x clone replica, plus the distributed
-    * trainer's wall. Both forms are per-row narrow (zero shuffle before the
-    * final agg), so the honest scale claim is tokens/s flat at 100x; the
-    * chain-vs-kernel ratio says which form a longer merge table should use.
-    */
-  def bpeProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("bpe-probe")
-    val docs = graft.Tables.documents(spark, sfDir)
-    val stride = docs.agg(max(col("doc_id"))).head().getLong(0) + 1L
-    val out = "/tmp/graft_docs100_bpe"
-    docs.crossJoin(spark.range(0, 100).select(col("id").as("__rep")))
-      .select((col("doc_id") + col("__rep") * stride).as("doc_id"),
-        col("text"), col("lang"), col("source"), col("n_chars"))
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    def time(tag: String, dir: String)(mk: => org.apache.spark.sql.DataFrame)
-        : Double = {
-      mk.agg(sum(col("n"))).head() // warmup (codegen + footers)
-      val t0 = System.nanoTime()
-      val tot = mk.agg(sum(col("n")).as("t"), count(lit(1)).as("d"))
-        .head()
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[bpe] $tag%-14s docs=${tot.getLong(1)}%-7d " +
-        f"bpe_tokens=${tot.getLong(0)}%-10d wall=$s%.2fs " +
-        f"${tot.getLong(0) / s / 1e6}%.1fM tok/s")
-      s
-    }
-    for (dir <- Seq(sfDir, out)) {
-      val tag = if (dir == sfDir) "1x" else "100x"
-      val d = graft.Tables.documents(spark, dir).filter(col("text").isNotNull)
-      val chain = time(s"chain-$tag", dir) {
-        d.select(graft.ext.Bpe.tokenCount(col("text")).as("n")) }
-      val kern = time(s"kernel-$tag", dir) {
-        d.select(expr("bpe_token_count(text)").as("n")) }
-      println(f"[bpe] chain/kernel ratio at $tag: ${chain / kern}%.2f")
-    }
-    // trainer wall on the 100x corpus: the distributed stage is one token
-    // groupBy; the greedy loop runs over the collected vocab (31 words here)
-    val t0 = System.nanoTime()
-    val counts = graft.ext.Bpe.wordCounts(
-        graft.Tables.documents(spark, out))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val merges = graft.ext.Bpe.trainMerges(counts, 24)
-    println(f"[bpe] train-100x vocab=${counts.size} merges=${merges.size} " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs " +
-      s"first=${merges.take(3).map(m => m.l + "+" + m.r).mkString(",")}")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(out))
-    spark.stop()
-  }
-
-  /** BPE table-length curve (r14 verdict item 3): tokens/s vs |merges|
-    * for the two encoder forms. The real corpus's merge closure saturates
-    * at 89 (Bpe.FullMerges scaladoc), so the ≥512 regime runs on the
-    * deterministic synthetic vocabulary (Bpe.syntheticCounts): 3000
-    * distinct pseudo-words, documents of 40 hash-sampled words each,
-    * tables trained to {24, 89, 512, 2048, 8192} merges by the SAME
-    * greedy trainer. Expected shape (the asymptotics that make the
-    * kernel the long-table path): the CHAIN costs |merges| full-document
-    * replace passes — wall grows ~linearly with table length — while the
-    * KERNEL's per-word merge loop touches only the pairs present in the
-    * word (hash-map rank lookups), so its wall tracks the WORK (merges
-    * actually applied), not the table size. Chain is probed only to 512:
-    * beyond that the codegen'd 2048-deep replace nest is exactly the
-    * plan shape the chain form exists to avoid.
-    */
-  def bpeLongProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("bpe-long-probe")
-    val counts = graft.ext.Bpe.syntheticCounts(3000)
-    val vocab = counts.map(_._1)
-    println(s"[bpelong] synthetic vocab=${vocab.size} " +
-      s"pair_positions=${counts.map(_._1.length - 1).sum}")
-    val tFull = System.nanoTime()
-    val fullTable = graft.ext.Bpe.trainMerges(counts, 8192)
-    println(f"[bpelong] trained ${fullTable.size} merges in " +
-      f"${(System.nanoTime() - tFull) / 1e9}%.1fs (single greedy run; " +
-      "prefix-stable, so every probe size is a prefix of it)")
-    // documents: 200k docs x 40 words, hash-sampled from the vocab — all
-    // inside Spark (array literal + transform), no driver materialization
-    val vlit = array(vocab.map(lit): _*)
-    val docs = spark.range(200000)
-      .select(col("id").as("doc_id"),
-        array_join(transform(sequence(lit(1), lit(40)),
-          j => element_at(vlit,
-            (pmod(xxhash64(col("id"), j), lit(vocab.size.toLong)) + 1)
-              .cast("int"))), " ").as("text"))
-      .localCheckpoint(true)
-    val inChars = docs.agg(sum(length(col("text")))).head().getLong(0)
-    def time(tag: String)(mk: => org.apache.spark.sql.Column): Unit = {
-      val q = docs.select(mk.as("n"))
-      // the trainer leaves ~2e8 dead cons cells on the heap: collect
-      // BEFORE timing or the first leg pays the GC debt (measured: an
-      // uncollected first leg reads 26-38s where a clean one reads ~1s)
-      System.gc()
-      q.agg(sum(col("n"))).head() // warmup: codegen + JIT
-      val t0 = System.nanoTime()
-      val tot = q.agg(sum(col("n"))).head().getLong(0)
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[bpelong] $tag%-16s wall=$s%.2fs out_tokens=$tot%-10d " +
-        f"${tot / s / 1e6}%.1fM tok/s ${inChars / s / 1e6}%.1fM chars/s")
-    }
-    for (pass <- 1 to 2; n <- Seq(24, 89, 512, 2048, 8192);
-         if n <= fullTable.size) {
-      val table = fullTable.take(n)
-      time(s"kernel-$n-p$pass") {
-        graft.functions.BpeTokenCount.bpe_token_count(col("text"), table) }
-      // chain capped at 89: a 512-deep replace nest overflows the driver
-      // stack in Spark's Column→Expression conversion (measured:
-      // StackOverflowError in ColumnNodeToExpressionConverter) — plan
-      // DEPTH, not just the |merges| passes, rules the chain out as the
-      // long-table path
-      if (n <= 89)
-        time(s"chain-$n-p$pass") { graft.ext.Bpe.tokenCount(col("text"), table) }
-    }
-    spark.stop()
-  }
-
-  /** Quantile-sketch scale probe (r13 verdict item 6): build the
-    * HdrHistogram-style sketch over lineitem price cents at 1x and over a
-    * 100x replica, reporting build wall, realized sketch cells (must stay
-    * FLAT — that is the whole point of a sketch), and quantile-extraction
-    * wall (runs on sketch-sized frames, so it must be scale-free). */
-  def qsketchProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("qsketch")
-    import spark.implicits._
-    val base = graft.Tables.lineitem(spark, sfDir)
-      .select(col("l_returnflag").as("grp"),
-        graft.functions.FixedPoint.requirePositive(
-          (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long"),
-          "qsketchProbe").as("v"))
-    for ((tag, reps) <- Seq(("1x", 1), ("100x", 100))) {
-      val vals =
-        if (reps == 1) base
-        else base.crossJoin(spark.range(0, reps).select(col("id").as("__r")))
-          .select(col("grp"), col("v"))
-      val nrows = vals.count() // warms footers/codegen; the timed build
-      // below still pays the full scan (the scan IS part of building)
-      val t0 = System.nanoTime()
-      val sk = vals
-        .withColumn("p", expr(
-          "shiftleft(cast(1 as bigint), greatest(length(bin(v)) - 6, 0))"))
-        .select(col("grp"), expr("(v div p) * p").as("lb"))
-        .groupBy(col("grp"), col("lb")).agg(count(lit(1)).as("c"))
-        .cache()
-      val cells = sk.count()
-      val build = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      import org.apache.spark.sql.expressions.Window
-      val skc = sk.withColumn("cum",
-        sum(col("c")).over(Window.partitionBy(col("grp")).orderBy(col("lb"))))
-      val n = sk.groupBy(col("grp")).agg(sum(col("c")).as("n"))
-      val qs = n.crossJoin(broadcast(Seq(25, 50, 75, 95, 99).toDF("qpct")))
-        .withColumn("target", expr("(n * qpct + 99) div 100"))
-        .join(skc, Seq("grp")).filter(col("cum") >= col("target"))
-        .groupBy(col("grp"), col("qpct")).agg(min(col("lb")).as("est"))
-        .collect()
-      val extract = (System.nanoTime() - t1) / 1e9
-      println(f"[qsketch] $tag%-5s rows=$nrows%-9d cells=$cells%-5d " +
-        f"build=$build%.2fs extract=$extract%.2fs quantile_rows=${qs.length}")
-      sk.unpersist()
-    }
-    spark.stop()
-  }
-
-  /** Perceptual-hash kernel throughput: synthesize n BMPs / WAV clips /
-    * animated GIFs distributed (the m_*_dhash fixture formulas scaled
-    * out), run the real decode→hash kernels, report rows/s. The gates
-    * pin 60-row correctness; this is the map-only scale arm — bytes
-    * never shuffle, so throughput ∝ cores with no cliff to find. */
-  def mediaHashProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("media-hash")
-    import spark.implicits._
-    val n = sys.env.getOrElse("SPARK_GRAFT_MEDIA_N", "100000").toLong
-    def time(tag: String)(df: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val c = df.count()
-      val s = (System.nanoTime() - t0) / 1e9
-      println(f"[mediahash] $tag%-8s n=$c%d wall=$s%.2fs ${c / s}%.0f rows/s")
-    }
-    val ids = spark.range(0, n).select($"id".as[Long])
-    time("image") {
-      graft.ext.Multimodal.imageDHash(ids.map { id =>
-        val p = (id % 6).toInt; val v = ((id / 6) % 2).toInt
-        graft.ext.Multimodal.MediaRow(id, "bmp",
-          graft.ext.MediaCodecs.writeBmp24(8 + p % 5, 6 + p % 3, (x, y) => (
-            (x * 53 + y * 31 + p * 41) % 200 + v * 10,
-            (x * 47 + y * 59 + p * 23) % 200 + v * 10,
-            (x * 61 + y * 43 + p * 37) % 200 + v * 10)))
-      })
-    }
-    time("audio") {
-      graft.ext.Multimodal.audioFingerprint(ids.map { id =>
-        val p = (id % 6).toInt; val g = 1 + ((id / 6) % 2).toInt
-        graft.ext.Multimodal.MediaRow(id, "wav",
-          graft.ext.MediaCodecs.writeWavPcm16(8000, Array.tabulate(825) { i =>
-            ((((i.toLong * i * 7 + i * 13 + p * 307) % 16001L) - 8000L) * g)
-              .toShort
-          }))
-      })
-    }
-    time("video") {
-      graft.ext.Multimodal.videoDHash(ids.map { id =>
-        val p = (id % 4).toInt; val v = ((id / 4) % 2).toInt
-        val palette = Array.tabulate(16) { c =>
-          (((c * 37 + p * 11) % 200 + v * 10) << 16) |
-            (((c * 53 + p * 7) % 200 + v * 10) << 8) |
-            ((c * 29 + p * 3) % 200 + v * 10)
-        }
-        val frames = (0 until 2 + p % 2).map(f =>
-          Array.tabulate(16 * 12) { i =>
-            ((i % 16 * 5 + i / 16 * 3 + f * 7 + p * 2) % 16).toByte
-          })
-        graft.ext.Multimodal.MediaRow(id, "gif",
-          graft.ext.GifCodec.writeGifAnimated(16, 12, palette, frames, 4))
-      })
-    }
-    spark.stop()
-  }
-
-  /** Global-prefix-sum shootout: the bare Window.orderBy form (ONE
-    * partition holds every row) vs operators/PrefixSum's two-phase scan,
-    * on n unique keys. Quantifies the cliff the x_spearman rank
-    * derivation avoids. */
-  def prefixSumProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val spark = ProbeHarness.session("prefix-sum")
-    import spark.implicits._
-    val n = sys.env.getOrElse("SPARK_GRAFT_PREFIX_N", "10000000").toLong
-    // unique scrambled keys, lumpy values
-    val df = spark.range(0, n)
-      .select(((col("id") * 2654435761L) % (n * 4)).as("k"),
-        (col("id") % 13 + 1).as("v"))
-      .groupBy("k").agg(max("v").as("v")) // enforce uniqueness
-      .cache()
-    val rows = df.count()
-    def time(tag: String)(f: => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val s = f.agg(sum(col("c"))).head().getLong(0)
-      println(f"[prefixsum] $tag%-12s rows=$rows wall=${(System.nanoTime() - t0) / 1e9}%.2fs checksum=$s")
-    }
-    time("two-phase") {
-      graft.operators.PrefixSum.exclusivePrefixSum(df, "k", "v", "c", 64)
-    }
-    time("one-window") {
-      df.withColumn("c", coalesce(sum(col("v")).over(Window.orderBy("k")
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    }
-    spark.stop()
-  }
-
-  def queryProbe(sfDir: String, names: Seq[String]): Unit = {
-    val spark = ProbeHarness.session("query-probe")
-    for (q <- names) {
-      def force(): Unit =
-        graft.BenchProtocol.force(graft.SparkEntry.queries(q)(spark, sfDir))
-      System.gc()
-      force() // warmup
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); force(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[probe] $q%-24s median=${times(1)}%.3f min=${times.head}%.3f")
-    }
-    spark.stop()
-  }
-
-  /** Banded-LSH auto-bits A/B: the fixed 8-bit gate form vs
-    * corpus-derived band bits at the same nBands. At 200k vectors the
-    * fixed form's buckets hold ~780 vectors each and the candidate join
-    * spilled >78 GB before dying — so the fixed form runs only under
-    * SPARK_GRAFT_LSH_FIXED=1 (safe at ≤10× corpora). */
-  def lshAutoProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("lsh-auto-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    val bits = graft.queries.Similarity.autoBandBits(n)
-    def timed(tag: String)(f: () => org.apache.spark.sql.DataFrame): Unit = {
-      System.gc()
-      val t0 = System.nanoTime()
-      val pairs = f().count()
-      println(f"[lsh] $tag%-14s n=$n%-8d pairs=$pairs%-9d wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-    }
-    timed("collapsed") { () =>
-      graft.queries.Similarity.lshCandidatePairsCollapsed(e, dim = 64)._1 }
-    timed(s"auto(bits=$bits)") { () =>
-      graft.queries.Similarity.lshCandidatePairsAuto(e, dim = 64) }
-    if (sys.env.get("SPARK_GRAFT_LSH_FIXED").contains("1"))
-      timed("fixed(bits=8)") { () =>
-        graft.queries.Similarity.lshCandidatePairs(e, dim = 64) }
-    spark.stop()
-  }
-
-  /** PageRank iteration-cost probe: wall time vs iteration count, with and
-    * without lineage checkpointing, on a 2M-node / 6M-edge synthetic graph
-    * (inputs pre-materialized so only the iteration loop is timed).
-    *
-    * What this measures for 100 TB: each iteration's DATA cost is constant
-    * (one edges⋈ranks shuffle + one groupBy), but without checkpointing
-    * the logical plan DEEPENS every iteration — analysis/optimization and
-    * task-graph bookkeeping grow with plan size, and on a real cluster a
-    * lost executor would recompute the whole chain. checkpointEvery=k caps
-    * plan depth at k iterations, making wall time genuinely linear in
-    * iteration count. */
-  /** Streaming quantile-sketch probe: 1M-row synthetic event batches
-    * through the REAL SketchStream.processBatch (bucket + cell-append),
-    * then merge-on-read + compaction. The claims measured: per-batch
-    * wall flat in batch count, store bytes ~KBs per batch regardless of
-    * batch rows (the sketch property), merge-on-read wall bounded by
-    * CELLS not rows. */
-  def sketchStreamProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("sketch-stream")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("/tmp"), "skprobe")
-      .toString
-    val rows = 1000000L
-    for (b <- 0L until 5L) {
-      val batch = spark.range(rows).select(
-        expr(s"timestamp_micros(cast(1700000000000000 + (id % 30) * 86400000000 as long))")
-          .as("ts"),
-        (pmod(xxhash64($"id", lit(b)), lit(49000)).cast("double") / 100 + 0.01)
-          .as("value"))
-      val t0 = System.nanoTime()
-      graft.streaming.SketchStream.processBatch(batch, b, store)
-      println(f"[sketchstream] batch=$b rows=$rows " +
-        f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    def du(p: String): Long = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().map(x => du(x.getPath)).sum
-      else f.length()
-    }
-    println(f"[sketchstream] store_bytes=${du(store)} (5M rows ingested)")
-    val t1 = System.nanoTime()
-    val cells = graft.streaming.SketchStream.merged(spark, store).count()
-    println(f"[sketchstream] merged cells=$cells " +
-      f"wall=${(System.nanoTime() - t1) / 1e9}%.2fs")
-    val t2 = System.nanoTime()
-    graft.streaming.SketchStream.compact(spark, store)
-    println(f"[sketchstream] compact wall=${(System.nanoTime() - t2) / 1e9}%.2fs " +
-      f"store_bytes_after=${du(store)}")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(store))
-    spark.stop()
-  }
-
-  /** Streaming-CMS scale probe: five 200k-doc synthetic batches through
-    * the REAL CmsStream.processBatch (Zipf-ish 20k-term vocabulary via
-    * xxhash powers), then merge-on-read, point estimates, compaction.
-    * Claims measured: per-batch wall flat (one map-side-combined groupBy
-    * of the batch's own terms down to ≤ 4096 cells — the fixed-cell
-    * property), store KB-scale regardless of rows, serving bounded by
-    * cell rows. */
-  def cmsStreamProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("cms-stream")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val store = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("/tmp"), "cmsprobe")
-      .toString
-    val docs = 200000L
-    for (b <- 0L until 5L) {
-      // ~40 terms/doc, term ids skewed by squaring a uniform hash
-      val batch = spark.range(docs).select($"id".as("doc_id"),
-        array_join(transform(sequence(lit(1), lit(40)),
-          j => concat(lit("t"),
-            (pmod(xxhash64($"id", j, lit(b)), lit(20000)) *
-             pmod(xxhash64($"id", j, lit(b + 7)), lit(20000)) / 20000)
-              .cast("long"))), " ").as("text"))
-      val t0 = System.nanoTime()
-      graft.streaming.CmsStream.processBatch(batch, b, store)
-      println(f"[cmsstream] batch=$b docs=$docs " +
-        f"wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
-    }
-    def du(p: String): Long = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().map(x => du(x.getPath)).sum
-      else f.length()
-    }
-    println(f"[cmsstream] store_bytes=${du(store)} (1M docs / ~40M terms ingested)")
-    val t1 = System.nanoTime()
-    val cells = graft.streaming.CmsStream.merged(spark, store).count()
-    println(f"[cmsstream] merged cells=$cells " +
-      f"wall=${(System.nanoTime() - t1) / 1e9}%.2fs")
-    val t2 = System.nanoTime()
-    val est = graft.streaming.CmsStream.estimates(spark, store,
-      (0 to 9).map(i => s"t$i"))
-      .collect().map(r => r.getString(0) -> r.getLong(1))
-    println(f"[cmsstream] point estimates wall=${(System.nanoTime() - t2) / 1e9}%.2fs " +
-      s"head=${est.take(3).mkString(",")}")
-    val t3 = System.nanoTime()
-    graft.streaming.CmsStream.compact(spark, store)
-    println(f"[cmsstream] compact wall=${(System.nanoTime() - t3) / 1e9}%.2fs " +
-      f"store_bytes_after=${du(store)}")
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(store))
-    spark.stop()
-  }
-
-  /** PPJoin at a genuinely large vocabulary (r13 verdict item 7): the
-    * r13 100x probe used the clone-heavy corpus where collapse-first
-    * makes the join flat; the adversarial case for PREFIX FILTERING is
-    * many DISTINCT near-similar docs over a large vocabulary. Planted
-    * corpus: n distinct 20-token docs, position-stratified vocab (15
-    * "head" slots of 1000 tokens each + 5 "tail" slots of tailVocab/5
-    * each — tail tokens are rare, so rarest-first prefixes key on them),
-    * plus n/100 planted twins differing in exactly one token (J = 19/21
-    * ≥ 0.9). Sweeps tailVocab to trace the selectivity curve: candidates
-    * ∝ n²/vocab through the prefix join, against C(n,2) brute-force
-    * pairs. Measures the candidate count WITH and WITHOUT the PPJoin+
-    * position filter (the r14 refinement now in d_jaccard_join) and
-    * verifies every planted twin survives to the verified output. */
-  def ppjoinProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("ppjoin-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    val n = sys.env.getOrElse("SPARK_GRAFT_PPJOIN_N", "300000").toLong
-    // above ~500k docs only the large-vocab point is probed: candidate
-    // volume ∝ n²/vocab, and the small-vocab points exist to trace the
-    // curve, already measured at 300k
-    val vocabs = if (n > 500000) Seq(60000) else Seq(2000, 20000, 60000)
-    for (tailVocab <- vocabs) {
-      val perSlot = tailVocab / 5
-      def tokenAt(id: org.apache.spark.sql.Column,
-          j: org.apache.spark.sql.Column) =
-        when(j < 15, concat(lit("h"), j, lit("_"),
-          pmod(xxhash64(id, j, lit(1)), lit(1000))))
-          .otherwise(concat(lit("t"), j, lit("_"),
-            pmod(xxhash64(id, j, lit(2)), lit(perSlot))))
-      val base = spark.range(n).select($"id".as("doc_id"),
-        transform(sequence(lit(0), lit(19)),
-          j => tokenAt($"id", j)).as("toks"))
-      val twins = base.filter($"doc_id" % 100 === 0)
-        .select(($"doc_id" + n).as("doc_id"),
-          transform($"toks", (t, i) =>
-            when(i === 7, concat(lit("x_"), $"doc_id")).otherwise(t))
-            .as("toks"))
-      val ts = base.union(twins).localCheckpoint(true)
-      // the d_jaccard_join stages over the planted corpus
-      val tok = ts.select($"doc_id", explode($"toks").as("tok"))
-      val dfc = tok.groupBy($"tok").agg(count(lit(1)).as("df"))
-      val w = Window.partitionBy($"doc_id").orderBy($"df", $"tok")
-      val prefix = tok.join(dfc, "tok")
-        .withColumn("rn", row_number().over(w))
-        .join(ts.select($"doc_id", size($"toks").cast("long").as("sz")),
-          "doc_id")
-        .filter($"rn" <= $"sz" - expr("(sz * 9 + 9) div 10") + 1)
-        .select($"doc_id", $"tok", $"sz", $"rn")
-        .localCheckpoint(true)
-      def candidates(posFilter: Boolean): (Long, Double) = {
-        val cond0 = $"a.tok" === $"b.tok" && $"a.doc_id" < $"b.doc_id" &&
-          $"a.sz" * 10 >= $"b.sz" * 9 && $"b.sz" * 10 >= $"a.sz" * 9
-        val cond = if (!posFilter) cond0 else cond0 &&
-          lit(1L) + least($"a.sz" - $"a.rn", $"b.sz" - $"b.rn") >=
-            expr("(9 * (a.sz + b.sz) + 18) div 19")
-        val t0 = System.nanoTime()
-        val c = prefix.as("a").join(prefix.as("b"), cond)
-          .select($"a.doc_id".as("a"), $"b.doc_id".as("b"))
-          .distinct().count()
-        (c, (System.nanoTime() - t0) / 1e9)
-      }
-      val (cRaw, wRaw) = candidates(posFilter = false)
-      val (cPos, wPos) = candidates(posFilter = true)
-      // verify the position-filtered candidates; planted twins must all
-      // survive (losslessness at probe scale, not just gate scale)
-      val cand = prefix.as("a").join(prefix.as("b"),
-          $"a.tok" === $"b.tok" && $"a.doc_id" < $"b.doc_id" &&
-            $"a.sz" * 10 >= $"b.sz" * 9 && $"b.sz" * 10 >= $"a.sz" * 9 &&
-            lit(1L) + least($"a.sz" - $"a.rn", $"b.sz" - $"b.rn") >=
-              expr("(9 * (a.sz + b.sz) + 18) div 19"))
-        .select($"a.doc_id".as("a"), $"b.doc_id".as("b")).distinct()
-      val t1 = System.nanoTime()
-      val verified = cand
-        .join(ts.select($"doc_id".as("a"), $"toks".as("ta")), "a")
-        .join(ts.select($"doc_id".as("b"), $"toks".as("tb")), "b")
-        .withColumn("inter", size(array_intersect($"ta", $"tb")).cast("long"))
-        .withColumn("uni",
-          (size($"ta") + size($"tb") - $"inter").cast("long"))
-        .filter($"inter" * 10 >= $"uni" * 9)
-        .select($"a", $"b").localCheckpoint(true)
-      val nVerified = verified.count()
-      val wVer = (System.nanoTime() - t1) / 1e9
-      val planted = verified.filter($"b" === $"a" + n).count()
-      val allPairs = BigDecimal(n + n / 100) * (n + n / 100 - 1) / 2
-      println(f"[ppjoin] n=$n vocab=${15000 + tailVocab}%-6d " +
-        f"cand_raw=$cRaw%-11d (${wRaw}%.1fs) cand_pos=$cPos%-11d " +
-        f"(${wPos}%.1fs) cut=${1.0 - cPos.toDouble / cRaw}%.2f " +
-        f"verified=$nVerified (${wVer}%.1fs) planted=$planted/${n / 100} " +
-        f"sel_vs_allpairs=${BigDecimal(cPos) / allPairs}%.2e")
-    }
-    spark.stop()
-  }
-
-  /** Streaming graph maintenance probe (r13 verdict item 3): a 2M-node
-    * hub-shaped graph (exact-fixed-point family) lands as epoch 0, then
-    * three ~1% edge-arrival epochs; each epoch is the REAL
-    * GraphStream.processBatch (exactly-once edge-store write + warm
-    * re-convergence from the previous epoch + rank persist), driven
-    * directly so the numbers are compute, not trigger latency. Reports
-    * s/batch and warm iteration counts vs the cold epoch-0 count. */
-  def graphStreamProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("graphstream-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val store = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get("/tmp"), "gs_probe")
-      .toString
-    val base = spark.range(n).select($"id".as("src"),
-      explode(array(($"id" * 7 + 1) % n, ($"id" * 13 + 5) % n, lit(0L)))
-        .as("dst"))
-    def arrival(seed: Int) = spark.range(n / 100)
-      .select((pmod(xxhash64($"id", lit(seed)), lit(n))).as("src"),
-        (pmod(xxhash64($"id", lit(seed + 100)), lit(n))).as("dst"))
-    var batchId = 0L
-    for (batch <- Seq(base, arrival(1), arrival(2), arrival(3))) {
-      System.gc()
-      val t0 = System.nanoTime()
-      val (iters, status) = graft.streaming.GraphStream.processBatch(
-        spark, batch, batchId, store, maxIters = 200)
-      val wall = (System.nanoTime() - t0) / 1e9
-      val tag = if (batchId == 0) "cold" else "warm"
-      println(f"[graphstream] epoch=$batchId $tag%-4s n=$n " +
-        f"iters=$iters status=$status wall=$wall%.1fs " +
-        f"s_per_iter=${wall / iters}%.2f")
-      batchId += 1
-    }
-    org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(store))
-    spark.stop()
-  }
-
-  /** Events-by-user_id bucketing A/B (r13 verdict item 5): the REAL
-    * user-keyed event-analytics queries timed plain vs under the
-    * 'orderkey' layout (which now also buckets events by user_id, adapted
-    * + sorted (user_id, ts) at write). Warm + median-of-3 per arm via the
-    * noop force; per-query Exchange count from the executed plan. Queries
-    * keyed on something other than user_id (t4_tumbling_hour) are
-    * included as the no-benefit control — bucketing must not hurt them. */
-  def eventAbProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("event-ab")
-    BenchLegPrep.writeBucketedTables(spark, sfDir, "orderkey")
-    val queries = Seq("t4_session", "t_funnel", "t_retention_cohorts",
-      "t_session_paths", "x_gap_detection", "t4_tumbling_hour")
-    def exch(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.executedPlan.toString
-        .linesIterator.count(_.contains("Exchange hashpartitioning"))
-    for (q <- queries) {
-      def arm(layout: Option[String]): (Double, Int) = {
-        layout match {
-          case Some(v) => System.setProperty("graft.bucketed", v)
-          case None => System.clearProperty("graft.bucketed")
-        }
-        try {
-          spark.sharedState.cacheManager.clearCache()
-          def mk() = graft.SparkEntry.queries(q)(spark, sfDir)
-          graft.BenchProtocol.force(mk()) // warm
-          val times = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            graft.BenchProtocol.force(mk())
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          val forPlan = mk(); graft.BenchProtocol.force(forPlan)
-          (times(1), exch(forPlan))
-        } finally System.clearProperty("graft.bucketed")
-      }
-      val (tp, ep) = arm(None)
-      val (tb, eb) = arm(Some("orderkey"))
-      println(f"[eventab] $q%-22s plain=$tp%.3fs/${ep}ex " +
-        f"bucketed=$tb%.3fs/${eb}ex speedup=${tp / tb}%.2fx")
-    }
-    spark.stop()
-  }
-
-  /** Derived-edges vs at-rest-bucketed-edges A/B (r13 verdict item 4):
-    * the SAME 2M-node/6M-edge PageRank run with (A) edges derived per run
-    * and cached — the gate-query shape — vs (B) edges served from the
-    * EdgeStore bucketed layout (src-bucketed, deg materialized at write).
-    * Reports wall at 5 and 10 iters (slope = s/iter), plus a static plan
-    * audit of each arm's full 10-iter job: ShuffleExchangeExec /
-    * ReusedExchangeExec counts — the per-iteration edge exchange must be
-    * ABSENT in arm B (only the rank table moves). Equivalence of results
-    * is pinned by EdgeStoreSpec; here both arms' total mass is printed as
-    * a checksum. */
-  def edgeAbProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("edge-ab")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val nodes = spark.range(n).select($"id").localCheckpoint(true)
-    val edges = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-    val t0w = System.nanoTime()
-    graft.sources.EdgeStore.write(graft.ext.Graphs.prepareEdges(edges),
-      "probe_md5")
-    val writeWall = (System.nanoTime() - t0w) / 1e9
-    val atRest = graft.sources.EdgeStore.read(spark, "probe_md5")
-    val derivedCached = edges.cache()
-    // arm A pays this DERIVE+CACHE materialization every fresh run (the
-    // gate shape re-derives per session); arm B's equivalent is a parquet
-    // scan of the already-written table — time both per-run fixed costs
-    val t0d = System.nanoTime()
-    derivedCached.count()
-    val deriveWall = (System.nanoTime() - t0d) / 1e9
-    val t0s = System.nanoTime()
-    atRest.count()
-    val atRestScanWall = (System.nanoTime() - t0s) / 1e9
-    println(f"[edgeab] per-run fixed: derive+cache=$deriveWall%.2fs " +
-      f"vs atrest first scan=$atRestScanWall%.2fs")
-    def exch(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
-      val p = df.queryExecution.executedPlan
-      (p.collect { case e: org.apache.spark.sql.execution.exchange
-          .ShuffleExchangeExec => e }.size,
-        p.collect { case e: org.apache.spark.sql.execution.exchange
-          .ReusedExchangeExec => e }.size)
-    }
-    def run(tag: String, mk: Int => org.apache.spark.sql.DataFrame): Unit = {
-      mk(2).agg(sum($"r")).head() // warm codegen
-      val walls = Seq(5, 10).map { it =>
-        System.gc()
-        val t0 = System.nanoTime()
-        val mass = mk(it).agg(sum($"r")).head().getLong(0)
-        (it, (System.nanoTime() - t0) / 1e9, mass)
-      }
-      val (w5, w10) = (walls(0)._2, walls(1)._2)
-      val plan10 = mk(10)
-      graft.BenchProtocol.force(plan10)
-      val (ex, reused) = exch(plan10)
-      println(f"[edgeab] $tag%-9s w5=$w5%.2fs w10=$w10%.2fs " +
-        f"s_per_iter=${(w10 - w5) / 5}%.3f exchanges=$ex reused=$reused " +
-        f"mass10=${walls(1)._3}")
-    }
-    run("derived", it => graft.ext.Graphs.pageRank(nodes, derivedCached, it))
-    run("atrest", it => graft.ext.Graphs.pageRankPrepared(nodes, atRest, it))
-    println(f"[edgeab] edgestore_write_wall=$writeWall%.2fs (paid once, " +
-      "amortized over every run and iteration)")
-    spark.stop()
-  }
-
-  def pagerankProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("pagerank-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val nodes = spark.range(n).select($"id").localCheckpoint(true)
-    // deterministic 3-out-regular graph; xxhash64 is fine here (probe-only,
-    // no oracle), and matches the query's md5 graph in shape
-    val edges = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-      .localCheckpoint(true)
-    // untimed warmup: JIT-compile the join/agg codegen paths so the first
-    // timed leg isn't charged for compiler warmup
-    graft.ext.Graphs.pageRank(nodes, edges, 2).agg(sum($"r")).head()
-    for ((tag, iters, ck) <- Seq(
-        ("iters5_nock", 5, 0), ("iters5_ck2", 5, 2),
-        ("iters10_nock", 10, 0), ("iters10_ck5", 10, 5),
-        ("iters20_nock", 20, 0), ("iters20_ck5", 20, 5),
-        ("iters20_ck10", 20, 10),
-        ("iters40_nock", 40, 0), ("iters40_ck10", 40, 10))) {
-      System.gc()
-      val t0 = System.nanoTime()
-      val total = graft.ext.Graphs.pageRank(nodes, edges, iters, checkpointEvery = ck)
-        .agg(sum($"r")).head().getLong(0)
-      println(f"[pagerank] $tag%-14s n=$n wall=${(System.nanoTime() - t0) / 1e9}%.3f s totalMass=$total")
-    }
-    spark.stop()
-  }
-
-  /** Skewed-join mitigation A/B: 20M-row fact table with HALF its rows on
-    * one hot key (the hot-customer / default-key shape), joined to a
-    * 100k-key dimension. Four strategies, same result pinned:
-    *
-    *  1. broadcast       — the first-choice fix whenever the small side
-    *                       fits (no shuffle of the big side at all; skew
-    *                       is irrelevant because rows never co-locate);
-    *  2. aqe_skew        — shuffle join with AQE skew-split (the cluster
-    *                       default profile): AQE splits the oversized
-    *                       partition into sub-reads at runtime;
-    *  3. plain_noaqe     — shuffle join, no mitigation: the partition
-    *                       holding the hot key is a 10M-row straggler
-    *                       while 31 threads idle (the 100 TB failure);
-    *  4. salted_noaqe    — operators.SkewJoin.saltedJoin (32 salts): the
-    *                       manual fix for engines/joins AQE can't split
-    *                       (bucketed inputs, aggregation-state skew).
-    *
-    * The broadcast threshold is disabled for legs 2-4 (the probe is the
-    * both-sides-big regime; with a 100k-row dim Spark would otherwise
-    * just broadcast and hide the skew). */
-  def skewProbe(sfDir: String, nRows: Option[Long] = None): Unit = {
-    val spark = ProbeHarness.session("skew-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = nRows.getOrElse(20000000L)
-    println(s"[skew] n=$n")
-    val hotShare = 50L // percent of rows on key 0
-    val big = spark.range(n).select(
-      when(pmod(xxhash64($"id"), lit(100L)) < hotShare, 0L)
-        .otherwise(pmod(xxhash64($"id", lit(7)), lit(100000L))).as("k"),
-      pmod(xxhash64($"id", lit(13)), lit(1000000L)).as("v"))
-      .localCheckpoint(true)
-    val small = spark.range(100000L).select($"id".as("k"),
-      pmod(xxhash64($"id", lit(3)), lit(97L)).as("w"))
-      .localCheckpoint(true)
-    def force(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), sum($"w")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    def timed(tag: String)(f: => (Long, Long)): Unit = {
-      System.gc()
-      val t0 = System.nanoTime(); val warm = f // warmup pass
-      val t1 = System.nanoTime(); val r = f
-      require(r == warm, s"nondeterministic result in $tag")
-      println(f"[skew] $tag%-14s wall=${(System.nanoTime() - t1) / 1e9}%.3f " +
-        f"(cold=${(t1 - t0) / 1e9}%.3f) rows=${r._1} sum_w=${r._2}")
-    }
-    timed("broadcast") { force(big.join(broadcast(small), Seq("k"))) }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    timed("aqe_skew") { force(big.join(small, Seq("k"))) }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    timed("plain_noaqe") { force(big.join(small, Seq("k"))) }
-    timed("salted_noaqe") {
-      force(graft.operators.SkewJoin.saltedJoin(big, small, "k", 32, Seq($"v")))
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    spark.stop()
-  }
-
-  /** Graph ops at 2M nodes / 6M edges: convergence-driven PageRank (how
-    * many iterations to tolerance, wall per iteration under eager
-    * checkpointing) and triangle counting (does the wedge join survive
-    * millions of edges — it does iff fan-out stays degree-bounded). */
-  def graphScaleProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("graph-scale-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val nodes = spark.range(n).select($"id").localCheckpoint(true)
-    val edges = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-      .localCheckpoint(true)
-    // converged PageRank: tol = 1000 units/node (1e-6 of initial mass)
-    System.gc()
-    var t0 = System.nanoTime()
-    val (ranks, iters) = graft.ext.Graphs.pageRankConverged(
-      nodes, edges, maxIters = 50, tolPerNode = 1000L)
-    val mass = ranks.agg(sum($"r")).head().getLong(0)
-    println(f"[graphscale] pagerank_converged n=$n iters=$iters " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.3f s totalMass=$mass")
-    // triangle counting over the symmetrized simple graph
-    System.gc()
-    t0 = System.nanoTime()
-    val und = edges.filter($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-    val tri = und.as("e1").join(und.as("e2"), $"e1.v" === $"e2.u")
-      .select($"e1.u".as("a"), $"e2.v".as("c"))
-      .join(und.as("e3"), $"a" === $"e3.u" && $"c" === $"e3.v")
-      .count()
-    println(f"[graphscale] triangles n=$n count=$tri " +
-      f"wall=${(System.nanoTime() - t0) / 1e9}%.3f s")
-    spark.stop()
-  }
-
-  /** Incremental-graph warm start: the streaming symmetry probe (r12
-    * verdict item 7). A converged rank table is state; when a micro-batch
-    * lands new edges (here: a 4th out-link for 1% of nodes — the
-    * file-arrival shape IngestStream feeds), the choice is re-converge
-    * COLD (uniform start over the updated graph) or WARM (seed from the
-    * previous converged ranks via pageRankConverged's `init`). The damped
-    * iteration is a contraction with a unique fixed point, so both reach
-    * the same answer (spec-pinned bit-exact at tolPerNode = 0); the probe
-    * measures what warm start buys: iterations-to-tolerance and wall for
-    * cold-before, cold-after, warm-after at 2M nodes / ~6M edges.
-    */
-  def prWarmProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("pr-warm-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val nodes = spark.range(n).select($"id").localCheckpoint(true)
-    val edges = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-      .localCheckpoint(true)
-    // the arriving micro-batch: 1% of nodes gain a 4th out-link
-    val newEdges = spark.range(n)
-      .filter(pmod(xxhash64($"id", lit(99)), lit(100L)) === 0L)
-      .select($"id".as("src"), pmod(xxhash64($"id", lit(4)), lit(n)).as("dst"))
-    val updated = edges.unionByName(newEdges).localCheckpoint(true)
-    val tol = 1000L
-    def run(tag: String, es: org.apache.spark.sql.DataFrame,
-        init: Option[org.apache.spark.sql.DataFrame]) = {
-      System.gc()
-      val t0 = System.nanoTime()
-      val (ranks, iters) = graft.ext.Graphs.pageRankConverged(
-        nodes, es, maxIters = 50, tolPerNode = tol, init = init)
-      val mass = ranks.agg(sum($"r")).head().getLong(0)
-      println(f"[prwarm] $tag%-12s n=$n iters=$iters " +
-        f"wall=${(System.nanoTime() - t0) / 1e9}%.3f s totalMass=$mass")
-      ranks
-    }
-    val ranks0 = run("cold_before", edges, None)
-    run("cold_after", updated, None)
-    run("warm_after", updated, Some(ranks0))
-    spark.stop()
-  }
-
-  /** Triangle-counting orientation under PLANTED SKEW: a sparse random
-    * background graph plus one hot vertex at id n/2 incident to ~1% of
-    * all edges — the power-law shape that kills id-orientation. The
-    * id-oriented wedge join pays in(h)*out(h) ≈ (d/2)^2 wedges through
-    * the hot vertex alone (d = 1e6 → 2.5e11 from ONE node); degree
-    * orientation ranks the hot vertex last, so its out-degree is 0 and
-    * the total wedge count stays degeneracy-bounded. Both legs count the
-    * SAME triangles (asserted) — only the work differs. */
-  def triSkewProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("tri-skew-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 1000000L
-    val hot = n / 2
-    val hotDeg = 30000L // ~1% of the ~3M background edges
-    // background: 3 md5-ish out-edges per node (same family as
-    // graphScaleProbe), symmetrized+simplified below
-    val back = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-    // hot vertex: edges to hotDeg distinct spread-out neighbors
-    val hotEdges = spark.range(hotDeg)
-      .select(lit(hot).as("src"),
-        pmod($"id" * lit(31) + lit(7), lit(n)).as("dst"))
-    val und = back.unionByName(hotEdges)
-      .filter($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-      .localCheckpoint(true)
-    val nEdges = und.count()
-    val hDeg = und.filter($"u" === hot || $"v" === hot).count()
-    println(s"[triskew] n=$n edges=$nEdges hot_vertex_degree=$hDeg")
-    // leg 1: degree orientation (the at-scale form)
-    System.gc()
-    var t0 = System.nanoTime()
-    val oriented = graft.ext.Graphs.orientByDegree(und).localCheckpoint(true)
-    val wDeg = graft.ext.Graphs.orientedWedges(oriented)
-    val triDeg = wDeg.join(oriented.as("e3"),
-      $"b" === $"e3.src" && $"c" === $"e3.dst").count()
-    val wedgesDeg = wDeg.count()
-    val wallDeg = (System.nanoTime() - t0) / 1e9
-    println(f"[triskew] deg_oriented wedges=$wedgesDeg triangles=$triDeg " +
-      f"wall=$wallDeg%.3f s")
-    // leg 2: id orientation (the gate-anchor form) — pays the blowup
-    System.gc()
-    t0 = System.nanoTime()
-    val wId = und.as("e1").join(und.as("e2"), $"e1.v" === $"e2.u")
-      .select($"e1.u".as("a"), $"e2.v".as("c"))
-    val triId = wId.join(und.as("e3"),
-      $"a" === $"e3.u" && $"c" === $"e3.v").count()
-    val wedgesId = wId.count()
-    val wallId = (System.nanoTime() - t0) / 1e9
-    println(f"[triskew] id_oriented  wedges=$wedgesId triangles=$triId " +
-      f"wall=$wallId%.3f s")
-    require(triDeg == triId,
-      s"orientation changed the triangle count: $triDeg vs $triId")
-    println(f"[triskew] wedge_ratio=${wedgesId.toDouble / wedgesDeg}%.1f " +
-      f"wall_ratio=${wallId / wallDeg}%.2f")
-    spark.stop()
-  }
-
-  /** Convergence-driven label propagation at 2M nodes / ~6M undirected
-    * edges: sweeps to stability and wall per sweep under eager
-    * checkpointing (ADVICE r12 #5). */
-  def lpaConvProbe(sfDir: String): Unit = {
-    val spark = ProbeHarness.session("lpa-conv-probe")
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 2000000L
-    val nodes = spark.range(n).select($"id").localCheckpoint(true)
-    val und = spark.range(n)
-      .select($"id".as("src"), explode(array(lit(1), lit(2), lit(3))).as("j"))
-      .select($"src", pmod(xxhash64($"src", $"j"), lit(n)).as("dst"))
-      .filter($"src" =!= $"dst")
-      .select(least($"src", $"dst").as("u"), greatest($"src", $"dst").as("v"))
-      .distinct()
-    val edges = und.select($"u".as("src"), $"v".as("dst"))
-      .unionByName(und.select($"v".as("src"), $"u".as("dst")))
-      .localCheckpoint(true)
-    val nEdges = edges.count()
-    System.gc()
-    val t0 = System.nanoTime()
-    val (labels, sweeps) = graft.ext.Graphs.labelPropagationConverged(
-      nodes, edges, maxIters = 30)
-    val nComms = labels.select($"label").distinct().count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    println(f"[lpaconv] n=$n directed_edges=$nEdges sweeps=$sweeps " +
-      f"wall=$wall%.3f s s_per_sweep=${wall / sweeps}%.3f communities=$nComms")
-    spark.stop()
-  }
-
-  /** The A13 sampled-aggregation SCALE demonstration (r16 verdict item
-    * 2): walls for (a) the exact aggregate, (b) the estimate-only arm
-    * over the PLAIN layout (the md5-nibble predicate is a function of
-    * key columns, so it cannot prune parquet I/O — the scan still reads
-    * every row and only the aggregate input shrinks 16×; this leg
-    * measures how little that buys when the query is scan-bound), and
-    * (c) the estimate over the AT-REST sample layout (lineitem written
-    * once partitioned by the sample bit; the `in_sample = 1` partition
-    * filter prunes at planning time, so the estimate reads 1/16th the
-    * bytes — the configuration the gate comment promises at 100 TB).
-    * Prep (the partitioned rewrite) is untimed and printed, same
-    * discipline as the bucketed leg. Partition sizes are printed so the
-    * I/O claim is bytes, not inference. */
-  def sampledAggProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("sampledagg-probe")
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val nib = substring(
-      md5(concat_ws("_", col("l_orderkey"), col("l_linenumber"))), 1, 1)
-    val qtyDec = col("l_quantity").cast("decimal(18,2)")
-    def aggOf(df: org.apache.spark.sql.DataFrame, scale: Int) =
-      df.groupBy(col("l_returnflag"))
-        .agg((count(lit(1)) * scale).as("n"),
-          (sum(qtyDec) * scale).cast("double").as("sum_qty"))
-    // untimed prep: the at-rest sample layout
-    val sampleDir = "/tmp/graft_sampled_lineitem"
-    val t0 = System.nanoTime()
-    graft.Tables.lineitem(spark, sfDir)
-      .withColumn("in_sample", (nib === "0").cast("int"))
-      .write.mode("overwrite").partitionBy("in_sample").parquet(sampleDir)
-    println(f"[sampledagg] prep partitioned rewrite " +
-      f"${(System.nanoTime() - t0) / 1e9}%.1f s (untimed)")
-    def du(p: String): Long = {
-      val d = new java.io.File(p)
-      if (!d.exists) -1L
-      else Option(d.listFiles).map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(-1L)
-    }
-    println(s"[sampledagg] bytes in_sample=1 ${du(s"$sampleDir/in_sample=1")}" +
-      s" in_sample=0 ${du(s"$sampleDir/in_sample=0")}")
-    probeOne(spark, "sampledagg", "exact_plain",
-      (s, d) => aggOf(graft.Tables.lineitem(s, d), 1), sfDir, stealJiffies _)
-    probeOne(spark, "sampledagg", "est_filtered_plain",
-      (s, d) => aggOf(graft.Tables.lineitem(s, d).filter(nib === "0"), 16),
-      sfDir, stealJiffies _)
-    probeOne(spark, "sampledagg", "est_atrest_pruned",
-      (s, _) => aggOf(
-        s.read.parquet(sampleDir).filter(col("in_sample") === 1), 16),
-      sfDir, stealJiffies _)
-    // reference: the exact aggregate served from the same rewritten
-    // layout (both partitions) — separates the rewrite's compression /
-    // clustering effect from the pruning effect
-    probeOne(spark, "sampledagg", "exact_atrest_both",
-      (s, _) => aggOf(s.read.parquet(sampleDir), 1), sfDir, stealJiffies _)
-    spark.stop()
-  }
-
-  /** Stage decomposition of the two creeping anchor ratios (r16 verdict
-    * item 3): w3_moving_avg (1.45× committed median vs anchor, drifting
-    * two rounds) and t4_tumbling_hour (1.44×). Each query is rebuilt
-    * cumulative-stage by cumulative-stage under the noop-sink protocol
-    * so the creep attributes to scan / exchange / window-or-agg / final
-    * sort rather than to "the query". */
-  def w3t4Probe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("w3t4-probe")
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val w3cols = Seq("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-    def w3base(s: SparkSession, d: String) =
-      graft.Tables.orders(s, d).select(w3cols.map(col): _*)
-    val frame = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey")).rowsBetween(-2, 0)
-    def w3win(s: SparkSession, d: String) =
-      w3base(s, d).select(col("o_custkey"), col("o_orderkey"),
-        (sum(col("o_totalprice").cast("decimal(18,4)")).over(frame)
-          .cast("double") / count(lit(1)).over(frame)).as("mavg3"))
-    val stages: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = Seq(
-      "w3_scan" -> ((s, d) => w3base(s, d)),
-      "w3_exchange" -> ((s, d) => w3base(s, d).repartition(col("o_custkey"))),
-      "w3_window" -> ((s, d) => w3win(s, d)),
-      "w3_full_sorted" -> ((s, d) =>
-        w3win(s, d).orderBy(col("o_custkey"), col("o_orderkey"))),
-      "t4_scan" -> ((s, d) => graft.Tables.events(s, d)
-        .select(col("ts"), col("event_type"), col("value"))),
-      "t4_agg" -> ((s, d) => graft.Tables.events(s, d)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,4)")).cast("double")
-            .as("sum_value"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("n"), col("sum_value"))),
-      "t4_full_sorted" -> ((s, d) =>
-        graft.SparkEntry.queries("t4_tumbling_hour")(s, d)),
-      "w3_gate" -> ((s, d) =>
-        graft.SparkEntry.queries("w3_moving_avg")(s, d)),
-      // single-exchange variant: RANGE-partition by custkey up front —
-      // satisfies the window's ClusteredDistribution(custkey) AND makes
-      // partition key-ranges disjoint, so the final (custkey, orderkey)
-      // order only needs a WITHIN-partition sort (the range exchange the
-      // plain plan inserts for the global orderBy disappears)
-      "w3_single_exchange" -> ((s, d) => {
-        val win = w3base(s, d).repartitionByRange(col("o_custkey"))
-          .select(col("o_custkey"), col("o_orderkey"),
-            (sum(col("o_totalprice").cast("decimal(18,4)")).over(frame)
-              .cast("double") / count(lit(1)).over(frame)).as("mavg3"))
-        win.sortWithinPartitions(col("o_custkey"), col("o_orderkey"))
-      }),
-      // tumbling windows only need the BUCKET, not the (start,end)
-      // struct window() allocates per input row — date_trunc grouping
-      // is semantically identical for the 1-hour tumble and keeps the
-      // grouping key a flat timestamp through the partial aggregate
-      "t4_trunc_agg" -> ((s, d) => graft.Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("w_start"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,4)")).cast("double")
-            .as("sum_value"))
-        .orderBy(col("w_start"), col("event_type"))))
-    stages.foreach { case (n, fn) =>
-      probeOne(spark, "w3t4", n, fn, sfDir, stealJiffies _) }
-    spark.stop()
-  }
-
-  /** IVFADC at production shape (r16 verdict item 7): the x4_ivfpq gate
-    * pins the composed pipeline hash-exact at toy parameters (8 cells,
-    * k=16, 2k vectors); this probe establishes the recall/wall curve at
-    * the real configuration — k=256 per-block codebooks, Lloyd-refined
-    * (IVF 2 iters, PQ 2 iters), on however many vectors `sfDir` holds
-    * (run against the distinct-content scaled corpus: 10× = 20k, 100× =
-    * 200k DISTINCT vectors). Reports build/train/encode walls (the
-    * amortized index cost), per-query ADC+rerank wall and recall@10 vs
-    * the exact L2 top-10 at sweeping nProbe, and the code-store row
-    * count (m bytes/vector at rest vs 4·dim for raw floats). */
-  def ivfPqProdProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("ivfpq-prod")
-    import spark.implicits._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    def timed[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      println(f"[ivfpq-prod] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val nCells = math.max(8, (n / 256).toInt)
-    val index = timed(s"ivf_build k=$nCells") {
-      val ix = graft.ext.IvfAnn.build(e, nCentroids = nCells, lloydIters = 2)
-      ix.copy(assigned = ix.assigned.localCheckpoint(true))
-    }
-    val cb = timed("pq_seed m=8 k=256") {
-      graft.ext.PqAnn.seedCodebooks(e, m = 8, k = 256) }
-    val cbT = timed("pq_train 2 iters") { graft.ext.PqAnn.train(e, cb, 2) }
-    val codes = timed("encode_indexed") {
-      graft.ext.PqAnn.encodeIndexed(index, cbT).localCheckpoint(true) }
-    println(s"[ivfpq-prod] n=$n cells=$nCells code_rows=${codes.count()} " +
-      s"bytes_per_vec_codes=${cbT.m} raw=${64 * 4}")
-    // exact L2 truth for 20 query vectors (brute force, one pass each)
-    val qs = e.filter($"vec_id" < 20).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toSeq.sortBy(_._1)
-    def l2sq(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val bcQs = spark.sparkContext.broadcast(qs.toMap)
-    val truth: Map[Long, Seq[Long]] = {
-      val rows = e.flatMap { r =>
-        val v = r.getSeq[Double](1); val id = r.getLong(0)
-        bcQs.value.iterator.collect { case (qid, qv) if qid != id =>
-          (qid, id, l2sq(qv, v)) }
-      }.toDF("qid", "vec_id", "d2")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"qid").orderBy($"d2", $"vec_id")
-      rows.withColumn("rn", row_number().over(w)).filter($"rn" <= 10)
-        .select($"qid", $"vec_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(_.getLong(1)).toSeq }
-    }
-    // sweep both knobs: the distinct-content corpus clusters ~replicas
-    // of a base vector into one cell, so large nCand saturates recall —
-    // the knee only shows at small shortlists / single-cell probes
-    for ((nProbe, nCand) <- Seq((1, 20), (1, 50), (2, 50), (4, 50),
-        (4, 200), (8, 200), (16, 2000), (32, math.max(200, (n / 100).toInt)))) {
-      var hits = 0; var tot = 0
-      val t0 = System.nanoTime()
-      qs.foreach { case (qid, qv) =>
-        val got = graft.ext.PqAnn.searchIvfPq(index, codes, cbT, qv,
-            nProbe, 11, nCand)
-          .filter($"vec_id" =!= qid)
-          .orderBy($"l2_dist", $"vec_id").limit(10)
-          .collect().map(_.getLong(0)).toSet
-        hits += truth(qid).count(got.contains); tot += 10
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[ivfpq-prod] nProbe=$nProbe%-3d nCand=$nCand " +
-        f"recall@10=${hits.toDouble / tot}%.3f " +
-        f"wall_total=${wall}%.2f s per_query=${wall / qs.size}%.3f s")
-    }
-    spark.stop()
-  }
-
-  /** graft_topk (bounded-heap aggregate) vs the row_number window plan,
-    * on two group-cardinality regimes: o_orderpriority (5 giant groups —
-    * the window plan's worst case: each group lands on ONE partition and
-    * fully sorts there) and o_custkey (many small groups — the window
-    * plan's best case). The aggregate's exchange is O(groups × k × map
-    * partitions) in both; the window's is O(rows) + a full per-group
-    * sort. Run at sf0.1 / 10× / 100× via SPARK_GRAFT_SF_DIR. */
-  def topkAggProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("topkagg-probe")
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    def aggPlan(g: String)(s: SparkSession, d: String) =
-      graft.Tables.orders(s, d)
-        .groupBy(col(g))
-        .agg(graft.functions.TopKPairs
-          .topk(col("o_totalprice"), col("o_orderkey"), 5).as("top"))
-        .select(col(g), posexplode(col("top")))
-        .select(col(g), (col("pos") + 1).cast("long").as("rank"),
-          col("col.id").as("o_orderkey"), col("col.score").as("o_totalprice"))
-    def winPlan(g: String)(s: SparkSession, d: String) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(g)).orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      graft.Tables.orders(s, d)
-        .select(col(g), col("o_orderkey"), col("o_totalprice"),
-          row_number().over(w).cast("long").as("rank"))
-        .filter(col("rank") <= 5)
-    }
-    val stages: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = Seq(
-      "win_5groups" -> (winPlan("o_orderpriority") _),
-      "agg_5groups" -> (aggPlan("o_orderpriority") _),
-      "win_custkey" -> (winPlan("o_custkey") _),
-      "agg_custkey" -> (aggPlan("o_custkey") _))
-    stages.foreach { case (n, fn) =>
-      probeOne(spark, "topkagg", n, fn, sfDir, stealJiffies _) }
-    spark.stop()
-  }
-
-  /** SQ8 (per-vector symmetric int8) recall at corpus scale — the gate
-    * (x4_sq8_topk) pins the arithmetic at 2k vectors; this measures
-    * recall@10 and the realized cosine error over 20 queries at the
-    * 200k distinct-content corpus, with both rankings computed by
-    * graft_topk in ONE grouped pass over the 4M (query × corpus) cosine
-    * pairs. */
-  def sq8Probe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("sq8-probe")
-    import spark.implicits._
-    val cos = graft.queries.Similarity.cosine _
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .withColumn("scale", array_max(transform($"ev", x => abs(x))))
-      .filter($"scale" > 0)
-      .withColumn("dq", transform(
-        transform($"ev", x => round(x / $"scale" * lit(127), 0)),
-        q => q * $"scale" / lit(127.0)))
-      .localCheckpoint(true)
-    val n = e.count()
-    val qs = e.filter($"vec_id" < 20)
-      .select($"vec_id".as("qid"), $"dq".as("qdq"), $"ev".as("qev"))
-    val t0 = System.nanoTime()
-    val pairs = e.crossJoin(broadcast(qs)).filter($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id",
-        cos($"ev", $"qev").as("ce"), cos($"dq", $"qdq").as("cq"))
-    // texact/tsq8 = the two top-10s; t40 = the SQ8 over-fetch shortlist
-    // CARRYING the exact cosine as its payload score (re-rank by exact
-    // within the SQ8-selected 40 = the production over-fetch pattern,
-    // zero extra passes: the shortlist membership comes from cq via a
-    // pre-filter on the per-query 40th cq value... simpler: rank by cq
-    // keeping 40, then re-rank those by ce driver-side from a second
-    // heap keyed the other way)
-    val tops = pairs.groupBy($"qid")
-      .agg(
-        graft.functions.TopKPairs.topk($"ce", $"vec_id", 10).as("texact"),
-        graft.functions.TopKPairs.topk($"cq", $"vec_id", 10).as("tsq8"),
-        graft.functions.TopKPairs.topk($"cq", $"vec_id", 40).as("t40"),
-        max(abs($"ce" - $"cq")).as("max_cos_delta"))
-      .collect()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // exact cosines for the over-fetch shortlists (40 ids × 20 queries =
-    // one semi-joined pass, then driver-side re-rank of 800 rows)
-    val shortlist = tops.flatMap { r =>
-      val q = r.getLong(0)
-      r.getSeq[org.apache.spark.sql.Row](3).map(p => (q, p.getLong(1)))
-    }.toSeq.toDF("qid", "vec_id")
-    val ceOf = pairs.join(broadcast(shortlist), Seq("qid", "vec_id"))
-      .select($"qid", $"vec_id", $"ce").collect()
-      .groupBy(_.getLong(0))
-      .map { case (q, rs) =>
-        q -> rs.map(r => (r.getDouble(2), r.getLong(1))).sorted(
-          Ordering.Tuple2(Ordering[Double].reverse, Ordering[Long]))
-          .take(10).map(_._2).toSet
-      }
-    var hits = 0; var hitsRr = 0
-    var maxDelta = 0.0
-    tops.foreach { r =>
-      def ids(i: Int) = r.getSeq[org.apache.spark.sql.Row](i)
-        .map(_.getLong(1)).toSet
-      hits += (ids(1) & ids(2)).size
-      hitsRr += (ids(1) & ceOf(r.getLong(0))).size
-      maxDelta = math.max(maxDelta, r.getDouble(4))
-    }
-    println(f"[sq8] n=$n queries=${tops.length} " +
-      f"recall@10=${hits.toDouble / (tops.length * 10)}%.3f " +
-      f"recall@10_rerank40=${hitsRr.toDouble / (tops.length * 10)}%.3f " +
-      f"max_cos_delta=$maxDelta%.5f wall_both_rankings=${wall}%.2f s")
-    spark.stop()
-  }
-
-  /** SQ8 AT-REST store measurement: write the same embeddings as (a) the
-    * source float32 arrays and (b) sq8_pack binary codes, compare store
-    * bytes and the brute-force top-10 scan wall over each (float path =
-    * the x4_cosine_topk kernel on cast doubles, SQ8 path = the integer
-    * kernel directly on the packed bytes — no dequant anywhere). */
-  def sq8StoreProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("sq8-store")
-    import spark.implicits._
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val f32 = "/tmp/graft_sq8_f32"; val pk = "/tmp/graft_sq8_packed"
-    graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", $"embedding")
-      .write.mode("overwrite").parquet(f32)
-    graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", graft.functions.Sq8.sq8_pack(
-        transform($"embedding", x => x.cast("double"))).as("qz"))
-      .filter($"qz".isNotNull)
-      .write.mode("overwrite").parquet(pk)
-    def du(p: String): Long =
-      Option(new java.io.File(p).listFiles).map(
-        _.filter(_.isFile).map(_.length).sum).getOrElse(-1L)
-    println(s"[sq8-store] bytes f32=${du(f32)} packed=${du(pk)} " +
-      f"ratio=${du(f32).toDouble / du(pk)}%.2f")
-    probeOne(spark, "sq8-store", "f32_scan_topk", (s, _) => {
-      val e = s.read.parquet(f32).select($"vec_id",
-        transform($"embedding", x => x.cast("double")).as("ev"))
-      val q = e.filter($"vec_id" === 0).select($"ev".as("qv"))
-      e.crossJoin(broadcast(q))
-        .select($"vec_id",
-          graft.functions.CosineSim.cosine_sim($"ev", $"qv").as("cos"))
-        .orderBy($"cos".desc, $"vec_id").limit(10)
-    }, sfDir, stealJiffies _)
-    probeOne(spark, "sq8-store", "sq8_scan_topk", (s, _) => {
-      val e = s.read.parquet(pk)
-      val q = e.filter($"vec_id" === 0).select($"qz".as("qqz"))
-      e.crossJoin(broadcast(q))
-        .select($"vec_id",
-          graft.functions.Sq8.cosine_sim_sq8($"qz", $"qqz").as("cos"))
-        .orderBy($"cos".desc, $"vec_id").limit(10)
-    }, sfDir, stealJiffies _)
-    spark.stop()
-  }
-
-  /** a6_revenue_by_nation stage decomposition (r17 verdict item 3): the
-    * committed a6 read 1.48× its anchor with no clean counter-evidence;
-    * two r18 steal-clean full-bench runs still read ~1.30× while q1
-    * simultaneously read ~1.1× its own anchor, so the elevation is not
-    * pure steal. Name the cost: time (noop-sink, min-of-5, GC before
-    * each, per-stage steal) the cumulative plan prefixes —
-    * lineitem scan → ⋈ orders → ⋈ customer → ⋈ nation + agg → + sort —
-    * plus q1 in the same window as the window-quality reference. At
-    * sf0.1 orders/customer broadcast (below threshold), so the suspects
-    * are the two broadcast builds (driver-side, per-run) vs the scan. */
-  def a6StagesProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("a6-stages")
-    import spark.implicits._
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    def rev = ($"l_extendedprice" * (lit(1) - $"l_discount"))
-      .cast("decimal(18,6)")
-    def li = graft.Tables.lineitem(spark, sfDir)
-    def stage(tag: String)(mk: => org.apache.spark.sql.DataFrame): Unit = {
-      graft.BenchProtocol.force(mk) // warm
-      val s0 = stealJiffies
-      val ts = (1 to 5).map { _ =>
-        spark.sharedState.cacheManager.clearCache(); System.gc()
-        val t0 = System.nanoTime()
-        graft.BenchProtocol.force(mk)
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[a6-stages] $tag%-22s median=${ts(2)}%.3f min=${ts.head}%.3f " +
-        f"steal=${(stealJiffies - s0) / 100.0}%.1f s")
-    }
-    stage("scan_lineitem") {
-      li.select($"l_orderkey", rev.as("r")) }
-    stage("+join_orders") {
-      li.join(graft.Tables.orders(spark, sfDir),
-          $"l_orderkey" === $"o_orderkey")
-        .select($"o_custkey", rev.as("r")) }
-    stage("+join_customer") {
-      li.join(graft.Tables.orders(spark, sfDir),
-          $"l_orderkey" === $"o_orderkey")
-        .join(graft.Tables.customer(spark, sfDir),
-          $"o_custkey" === $"c_custkey")
-        .select($"c_nationkey", rev.as("r")) }
-    stage("+nation+agg") {
-      li.join(graft.Tables.orders(spark, sfDir),
-          $"l_orderkey" === $"o_orderkey")
-        .join(graft.Tables.customer(spark, sfDir),
-          $"o_custkey" === $"c_custkey")
-        .join(broadcast(graft.Tables.nation(spark, sfDir)),
-          $"c_nationkey" === $"n_nationkey")
-        .groupBy($"n_name")
-        .agg(sum(rev).cast("double").as("revenue"),
-          count(lit(1)).as("n_items")) }
-    stage("full_a6") {
-      graft.SparkEntry.queries("a6_revenue_by_nation")(spark, sfDir) }
-    stage("q1_reference") {
-      graft.SparkEntry.queries("q1_pricing_summary")(spark, sfDir) }
-    // broadcast-build cost isolated: the orders/customer dimension builds
-    // (scan + broadcast exchange) with a 1-row probe side
-    stage("bcast_orders_only") {
-      spark.range(1).toDF("l_orderkey")
-        .join(broadcast(graft.Tables.orders(spark, sfDir)),
-          $"l_orderkey" === $"o_orderkey", "left")
-        .select($"l_orderkey") }
-    stage("bcast_customer_only") {
-      spark.range(1).toDF("o_custkey")
-        .join(broadcast(graft.Tables.customer(spark, sfDir)),
-          $"o_custkey" === $"c_custkey", "left")
-        .select($"o_custkey") }
-    spark.stop()
-  }
-
-  /** Incremental near-dup vs full batch re-dedup at distinct scale (r17
-    * verdict item 5). r17_distinct_scaling established that BATCH minhash
-    * re-dedup is linear in distinct docs — correct but the wrong way to
-    * run dedup continuously at 100 TB, where content arrives in small
-    * batches against a large seen-corpus. This probe runs the
-    * NearDupStream shape (band store + per-batch anti-join) for the
-    * arrival of a 1% batch (5k docs) against a 500k-doc seen store
-    * (/tmp/graft_sf10d documents — the distinct-100× corpus), next to
-    * the full batch re-dedup of seen+arrival (candidatePairsCollapsed,
-    * the d_minhash_pipeline plan), and measures the band-store join cost
-    * as the store grows (4 epochs of 125k docs — the readBelow curve).
-    * The arrival is half near-dups of seen docs (light ~3% token
-    * perturbation — above the LSH collision knee) and half fresh
-    * (heavy ~33% perturbation — below it), so the suppression counts
-    * sanity-check the semantics while the walls carry the scale story:
-    * the incremental epoch computes 5k signatures and one banded
-    * equi-join; the batch arm recomputes 505k signatures and re-shuffles
-    * every band. */
-  def neardupIncProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("neardup-inc")
-    import spark.implicits._
-    def stealJiffies: Long = ProbeHarness.stealJiffies
-    val seenDir = "/tmp/graft_sf10d"
-    val storeDir = "/tmp/graft_neardup_store"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeDir))
-
-    // the NearDupStream banding (band key = exact signature slice, CSV);
-    // doc_id stands in for the stream's path column
-    def bandify(docs: org.apache.spark.sql.DataFrame) = {
-      val withSig = docs
-        .withColumn("toks", split($"text", " "))
-        .filter(size($"toks") >= 3)
-        .select($"doc_id", graft.ext.MinHashDedup.signatureOf(
-          graft.ext.MinHashDedup.shinglesOfToks($"toks"), 32,
-          graft.ext.HashFamily.Md5).as("sig"))
-        .localCheckpoint(true)
-      withSig.select($"doc_id", explode(transform(
-        sequence(lit(0), lit(7)), b => struct(b.as("band_idx"),
-          concat_ws(",", transform(slice($"sig", b * 4 + 1, lit(4)),
-            _.cast("string"))).as("band_key")))).as("band"))
-        .select($"doc_id", $"band.band_idx", $"band.band_key")
-    }
-
-    val seen = spark.read.parquet(s"$seenDir/documents.parquet")
-      .select($"doc_id", $"text").filter($"text".isNotNull)
-      .localCheckpoint(true)
-    val nSeen = seen.count()
-    // store prep: 4 epochs of ~125k docs each — the store-growth axis
-    (0 until 4).foreach { e =>
-      val t0 = System.nanoTime()
-      graft.streaming.EpochStore.writeEpoch(
-        bandify(seen.filter(pmod($"doc_id", lit(4)) === e))
-          .select($"band_idx", $"band_key").distinct(),
-        e.toLong, storeDir)
-      println(f"[neardup-inc] store epoch $e (~${nSeen / 4} docs) " +
-        f"registered in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-
-    // arrival: 1% batch — half near-dups of seen base docs (~3% token
-    // tags: J≈0.8, band-collision p≈0.99), half fresh (~33%: p≈0)
-    val base = graft.Tables.documents(spark, "/root/testdata/sf0.1")
-      .select($"doc_id", $"text").filter($"text".isNotNull)
-    def tag(df: org.apache.spark.sql.DataFrame, mod: Int, t: String,
-        shift: Long) = df.withColumn("text", array_join(
-        expr(s"transform(split(text, ' '), (t, p) -> " +
-          s"IF(pmod(xxhash64($shift, doc_id, p), $mod) = 0, " +
-          s"concat(t, '$t'), t))"), " "))
-      .withColumn("doc_id", $"doc_id" + lit(shift))
-    val arrival = tag(base.filter(pmod($"doc_id", lit(2)) === 0), 29, "q",
-        10000000L)
-      .unionByName(tag(base.filter(pmod($"doc_id", lit(2)) === 1), 3, "z",
-        11000000L))
-      .localCheckpoint(true)
-    val nArr = arrival.count()
-
-    // incremental epoch (the measurement): 2 passes, GC before each
-    var keptN = -1L
-    val incWalls = (1 to 2).map { pass =>
-      System.gc()
-      val s0 = stealJiffies; val t0 = System.nanoTime()
-      val banded = bandify(arrival).localCheckpoint(true)
-      val wMin = org.apache.spark.sql.expressions.Window
-        .partitionBy($"band_idx", $"band_key")
-      val inBatch = banded.withColumn("m", min($"doc_id").over(wMin))
-        .filter($"doc_id" > $"m").select($"doc_id")
-      val prior = graft.streaming.EpochStore.readBelow(spark, storeDir, 4L)
-        .get.select($"band_idx", $"band_key")
-      val cross = banded.join(prior, Seq("band_idx", "band_key"))
-        .select($"doc_id")
-      val kept = arrival.join(inBatch.union(cross).distinct(),
-        Seq("doc_id"), "left_anti").localCheckpoint(true)
-      keptN = kept.count()
-      graft.streaming.EpochStore.writeEpoch(
-        banded.join(kept.select($"doc_id"), Seq("doc_id"), "left_semi")
-          .select($"band_idx", $"band_key").distinct(), 4L, storeDir)
-      val w = (System.nanoTime() - t0) / 1e9
-      println(f"[neardup-inc] incremental pass $pass: $w%.2f s " +
-        f"steal=${(stealJiffies - s0) / 100.0}%.1f s kept=$keptN/$nArr")
-      w
-    }
-
-    // store-growth curve: join-only wall vs store size (arrival banding
-    // pinned once so only the readBelow join varies)
-    val bandedPinned = bandify(arrival).localCheckpoint(true)
-    (1 to 4).foreach { below =>
-      val walls = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        graft.streaming.EpochStore.readBelow(spark, storeDir, below.toLong)
-          .get.select($"band_idx", $"band_key")
-          .join(bandedPinned, Seq("band_idx", "band_key")).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[neardup-inc] store-join below=$below " +
-        f"(~${below * nSeen / 4} docs): min=${walls.min}%.2f s")
-    }
-
-    // batch arm: full re-dedup of seen + arrival (the d_minhash_pipeline
-    // plan) — 2 passes, min
-    val union = seen.unionByName(arrival)
-    val batchWalls = (1 to 2).map { pass =>
-      System.gc()
-      val s0 = stealJiffies; val t0 = System.nanoTime()
-      val n = graft.ext.MinHashDedup.candidatePairsCollapsed(
-        union, numHashes = 32, bands = 8)._1.count()
-      val w = (System.nanoTime() - t0) / 1e9
-      spark.sharedState.cacheManager.clearCache()
-      println(f"[neardup-inc] batch pass $pass: $w%.2f s " +
-        f"steal=${(stealJiffies - s0) / 100.0}%.1f s pairs=$n")
-      w
-    }
-    println(f"[neardup-inc] SUMMARY seen=$nSeen arrival=$nArr " +
-      f"kept=$keptN inc_min=${incWalls.min}%.2f s " +
-      f"batch_min=${batchWalls.min}%.2f s " +
-      f"ratio=${batchWalls.min / incWalls.min}%.1f x")
-    spark.stop()
-  }
-
-  /** IVFADC recall under OUT-OF-CORPUS query geometry (r17 verdict item
-    * 6). r17_ivfpq_production honestly flagged that in-corpus queries on
-    * the clone-cluster corpus park every true neighbor in the query's
-    * home cell, so nProbe never constrains. Here the 20 queries are
-    * cross-family perturbations of base vectors at 2.5× the sibling
-    * noise radius (per-component ±0.125 vs ScaleGen's ±0.05,
-    * md5-deterministic), so the query lands BETWEEN cells while its true
-    * neighbors (the base's replica family, plus whatever else drifted
-    * close) may straddle several — recall should now rise with nProbe at
-    * fixed nCand. */
-  def ivfPqHardProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("ivfpq-hard")
-    import spark.implicits._
-    val e = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .localCheckpoint(true)
-    val n = e.count()
-    def timed[A](tag: String)(body: => A): A = {
-      val t0 = System.nanoTime(); val r = body
-      println(f"[ivfpq-hard] $tag%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
-      r
-    }
-    val nCells = math.max(8, (n / 256).toInt)
-    val index = timed(s"ivf_build k=$nCells") {
-      val ix = graft.ext.IvfAnn.build(e, nCentroids = nCells, lloydIters = 2)
-      ix.copy(assigned = ix.assigned.localCheckpoint(true))
-    }
-    val cb = timed("pq_seed m=8 k=256") {
-      graft.ext.PqAnn.seedCodebooks(e, m = 8, k = 256) }
-    val cbT = timed("pq_train 2 iters") { graft.ext.PqAnn.train(e, cb, 2) }
-    val codes = timed("encode_indexed") {
-      graft.ext.PqAnn.encodeIndexed(index, cbT).localCheckpoint(true) }
-
-    // out-of-corpus queries: md5-deterministic ±0.125/component offsets
-    // from 20 replica-0 base vectors (2.5× the ±0.05 sibling noise)
-    def u(qid: Long, j: Int): Double = {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"hardq$qid:$j".getBytes("UTF-8"))
-      ((((h(0) & 0xff) << 16) | ((h(1) & 0xff) << 8) | (h(2) & 0xff))
-        .toDouble / 0xffffff - 0.5) * 0.25
-    }
-    val qs: Seq[(Long, Seq[Double])] = e.filter($"vec_id" < 20).collect()
-      .map { r =>
-        val id = r.getLong(0)
-        id -> r.getSeq[Double](1).zipWithIndex.map { case (x, j) => x + u(id, j) }
-      }.toSeq.sortBy(_._1)
-    def l2sq(a: Seq[Double], b: Seq[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    val bcQs = spark.sparkContext.broadcast(qs.toMap)
-    val truth: Map[Long, Seq[Long]] = {
-      val rows = e.flatMap { r =>
-        val v = r.getSeq[Double](1); val id = r.getLong(0)
-        bcQs.value.iterator.map { case (qid, qv) => (qid, id, l2sq(qv, v)) }
-      }.toDF("qid", "vec_id", "d2")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"qid").orderBy($"d2", $"vec_id")
-      rows.withColumn("rn", row_number().over(w)).filter($"rn" <= 10)
-        .select($"qid", $"vec_id").collect()
-        .groupBy(_.getLong(0)).map { case (q, rs) =>
-          q -> rs.map(_.getLong(1)).toSeq }
-    }
-    for ((nProbe, nCand) <- Seq((1, 50), (2, 50), (4, 50), (8, 50),
-        (1, 200), (2, 200), (4, 200), (8, 200), (16, 200), (32, 200))) {
-      var hits = 0; var tot = 0
-      val t0 = System.nanoTime()
-      qs.foreach { case (qid, qv) =>
-        val got = graft.ext.PqAnn.searchIvfPq(index, codes, cbT, qv,
-            nProbe, 10, nCand)
-          .orderBy($"l2_dist", $"vec_id").limit(10)
-          .collect().map(_.getLong(0)).toSet
-        hits += truth(qid).count(got.contains); tot += 10
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      println(f"[ivfpq-hard] nProbe=$nProbe%-3d nCand=$nCand%-5d " +
-        f"recall@10=${hits.toDouble / tot}%.3f " +
-        f"wall_total=$wall%.2f s per_query=${wall / qs.size}%.3f s")
-    }
-    spark.stop()
-  }
-
-  /** Pre-flight decision vectors at the scale ladder (r18 verdict item
-    * 5's probe arm): the x_join_preflight_decision gate re-run at
-    * 1×/10×/100×, printing each family's decision so the flips are
-    * measured, not asserted — clicks~hv_purchasers outgrows the
-    * broadcast limit at 10× (2,970 keys) and its AUTO-SIZED Bloom pays
-    * at every later rung (m_auto grows with the key set, so prefilter
-    * stays true at 100× where a fixed m=8192 saturated), the skewed
-    * family stays salt-13 at every rung, orders~customer stays a clean
-    * shuffle with NO blowup flag (the AMS-corrected estimate keeps
-    * declining the saturated raw read). */
-  def preflightProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("preflight-scale") { spark =>
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        def q() = graft.SparkEntry.queries("x_join_preflight_decision")(spark, dir)
-        val (med, mn, steal) =
-          ProbeHarness.timedForce(if (tag == "100x") 1 else 3)(q _)
-        q().collect().foreach { r =>
-          println(s"[preflight] $tag ${r.getAs[String]("join_id")}: " +
-            s"n_big=${r.getAs[Long]("n_big")} n_small=${r.getAs[Long]("n_small")} " +
-            s"skew_fp=${r.getAs[Long]("skew_fp")} " +
-            s"est_corr=${r.getAs[Long]("cms_est_corr")} " +
-            s"m=${r.getAs[Long]("m_auto")} " +
-            s"reduction=${r.getAs[java.lang.Double]("scan_reduction_pct")} " +
-            s"-> ${r.getAs[String]("strategy")}" +
-            s"(salt_n=${r.getAs[Long]("salt_n")}, " +
-            s"prefilter=${r.getAs[Boolean]("prefilter")}, " +
-            s"blowup=${r.getAs[Boolean]("out_blowup")})")
-        }
-        println(f"[preflight] $tag wall median=$med%.2f min=$mn%.2f " +
-          f"steal=$steal%.1f s")
-      }
-    }
-
-  /** r22 (r21 verdict item 1): per-JOB wall breakdown of the preflight
-    * gate. Each driver action's callSite names its Curation.scala line
-    * (localCheckpoint = vec builds, head = sizes rows, collect = bitmap
-    * words, noop save = output), so the fixed bitmap-build cost is
-    * attributed, not guessed. Pass 2 (warm) of each rung prints;
-    * broadcast-exchange jobs overlap the main job, so the job sum can
-    * exceed wall — the per-site ranking is the signal. */
-  def preflightBreakProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("preflight-break") { spark =>
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir); pass <- 1 to 2) {
-        spark.sharedState.cacheManager.clearCache()
-        val (wall, bySite, stages) =
-          ProbeHarness.jobStageBreakdown(spark)(graft.BenchProtocol.force(
-            graft.SparkEntry.queries("x_join_preflight_decision")(spark, dir)))
-        if (pass == 2) {
-          bySite.foreach { case (cs, (s, n)) =>
-            println(f"[preflightbreak] $tag%-5s $cs%-44s n=$n%-3d sum=$s%.2f s")
-          }
-          stages.foreach { case (id, nm, nt, run, deser) =>
-            println(f"[preflightbreak] $tag%-5s stage$id%-4d $nm%-44s " +
-              f"tasks=$nt%-3d run=$run%.1f s deser=$deser%.1f s")
-          }
-          println(f"[preflightbreak] $tag%-5s TOTAL wall=$wall%.2f s " +
-            f"jobs=${bySite.map(_._2._1).sum}%.2f s (gap = driver-side)")
-        }
-      }
-    }
-
-  /** Incremental semantic dedup: exact flat assignment vs the r20
-    * default's coarse dispatch (r19 verdict item 3) at each ladder rung.
-    * Drives the SHIPPED auto overload both ways; the flat arm is the
-    * pre-r20 path (O(n·k) cosines with k ∝ n). */
-  def semIncIvfProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("seminc-ivf") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        val e = graft.Tables.embeddings(spark, dir)
-          .select($"vec_id",
-            transform($"embedding", x => x.cast("double")).as("ev"))
-          .localCheckpoint(true)
-        val n = e.count()
-        val k = graft.ext.SemDedup.autoK(n,
-          graft.ext.SemDedup.DefaultTargetClusterSize)
-        val wave = when(substring(md5($"vec_id".cast("string")), 1, 1)
-          .between("0", "7"), 0).otherwise(1)
-        // shipped path = the auto overload (kernel fold since r20);
-        // relational coarse/flat arms reconstructed at the same derived
-        // k from the explicit-k oracle-documented overloads
-        def runShipped() = graft.BenchProtocol.force(
-          graft.ext.SemDedup.incrementalSemDedup(e, wave, waves = Seq(0, 1),
-            tau = 0.35, targetClusterSize =
-              graft.ext.SemDedup.DefaultTargetClusterSize))
-        def runRelCoarse() = graft.BenchProtocol.force(
-          graft.ext.SemDedup.incrementalSemDedupCoarse(e, wave,
-            waves = Seq(0, 1), nCentroids = k, tau = 0.35))
-        def runRelFlat() = graft.BenchProtocol.force(
-          graft.ext.SemDedup.incrementalSemDedup(e, wave, waves = Seq(0, 1),
-            nCentroids = k, tau = 0.35))
-        // the flat arm is the measured superlinear shape — bound it to
-        // one timed pass at the 100× rung
-        val p = if (tag == "100x") 1 else 3
-        println(f"[semincivf] $tag%-5s n=$n%-8d k=$k " +
-          s"kernel ${ProbeHarness.timedLine(p)(runShipped())} | " +
-          s"coarse ${ProbeHarness.timedLine(p)(runRelCoarse())} | " +
-          s"flat ${ProbeHarness.timedLine(p)(runRelFlat())}")
-      }
-    }
-
-  /** One-pass KMV (graft_kmv over raw rows) vs the materialized
-    * distinct + TakeOrdered sketch (r19 verdict item 4): wall and
-    * shuffle WRITE bytes per rung — the exchange the aggregate removes
-    * is the distinct's full key shuffle. */
-  def kmvOnepassProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("kmv-onepass") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      import graft.functions.Md5Hash64.md5_le64
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        val raw = graft.Tables.events(spark, dir)
-          .filter($"event_type" === "click" ||
-            ($"event_type" === "purchase" && $"value" >= 200))
-          .select($"user_id", ($"event_type" === "click").as("in_a"),
-            ($"event_type" === "purchase").as("in_b"),
-            shiftrightunsigned(md5_le64($"user_id".cast("string")), 1)
-              .as("h"))
-        def onepass() = graft.BenchProtocol.force(raw
-          .agg(graft.functions.KmvSketch.kmv(
-            $"h", $"user_id", $"in_a", $"in_b", 64).as("sk"))
-          .select(posexplode($"sk")))
-        def takeOrdered() = graft.BenchProtocol.force(raw
-          .groupBy($"h", $"user_id")
-          .agg(max($"in_a").as("in_a"), max($"in_b").as("in_b"))
-          .orderBy($"h", $"user_id").limit(64))
-        println(f"[kmvonepass] $tag%-5s onepass " +
-          s"${ProbeHarness.timedShuffleLine(spark, 3)(onepass())} | " +
-          s"distinct+takeordered " +
-          s"${ProbeHarness.timedShuffleLine(spark, 3)(takeOrdered())}")
-      }
-    }
-
-  /** r21: the x_kmv_intersection gate's union-construction rework —
-    * the r20 form (two DISTINCTs full-outer-joined) vs the r21 single
-    * map-side-combined groupBy, plus the gate end-to-end on the shipped
-    * code. Wall + shuffle WRITE bytes per rung. */
-  def kmvGateProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("kmv-gate") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      import graft.functions.Md5Hash64.md5_le64
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        val ev = graft.Tables.events(spark, dir)
-        def h = shiftrightunsigned(md5_le64($"user_id".cast("string")), 1)
-        def uniR20() = graft.BenchProtocol.force {
-          val a = ev.filter($"event_type" === "click")
-            .select($"user_id").distinct().withColumn("in_a", lit(true))
-          val b = ev.filter($"event_type" === "purchase" && $"value" >= 200)
-            .select($"user_id").distinct().withColumn("in_b", lit(true))
-          a.join(b, Seq("user_id"), "full_outer")
-            .select($"user_id", coalesce($"in_a", lit(false)).as("in_a"),
-              coalesce($"in_b", lit(false)).as("in_b"), h.as("h"))
-        }
-        def uniR21() = graft.BenchProtocol.force(ev
-          .filter($"event_type" === "click" ||
-            ($"event_type" === "purchase" && $"value" >= 200))
-          .select($"user_id", ($"event_type" === "click").as("a"),
-            ($"event_type" === "purchase").as("b"))
-          .groupBy($"user_id")
-          .agg(max($"a").as("in_a"), max($"b").as("in_b"))
-          .select($"user_id", $"in_a", $"in_b", h.as("h")))
-        // r22 (r21 verdict item 5): the shipped packed-flag-byte form —
-        // bit_or of (a·2 | b) drops one 8-byte UnsafeRow slot from the
-        // partial-agg exchange rows
-        def uniR22() = graft.BenchProtocol.force(ev
-          .filter($"event_type" === "click" ||
-            ($"event_type" === "purchase" && $"value" >= 200))
-          .select($"user_id",
-            (when($"event_type" === "click", 2).otherwise(0) +
-              when($"event_type" === "purchase", 1).otherwise(0))
-              .cast("tinyint").as("f"))
-          .groupBy($"user_id").agg(bit_or($"f").as("f"))
-          .select($"user_id", ($"f".bitwiseAND(2) =!= 0).as("in_a"),
-            ($"f".bitwiseAND(1) =!= 0).as("in_b"), h.as("h")))
-        def gate() = graft.BenchProtocol.force(
-          graft.SparkEntry.queries("x_kmv_intersection")(spark, dir))
-        println(f"[kmvgate] $tag%-5s " +
-          s"uni-r20 ${ProbeHarness.timedShuffleLine(spark, 3)(uniR20())} | " +
-          s"uni-r21 ${ProbeHarness.timedShuffleLine(spark, 3)(uniR21())} | " +
-          s"uni-r22-packed " +
-          s"${ProbeHarness.timedShuffleLine(spark, 3)(uniR22())} | " +
-          s"gate ${ProbeHarness.timedLine(3)(gate())}")
-      }
-    }
-
-  /** r21: the BATCH semdedup fold A/B — the r21 per-cluster typed
-    * kernel vs the r20 relational fold, from the SAME checkpointed
-    * assignment (auto-k sizing, coarse dispatch above the threshold
-    * like the shipped path), per rung. The batch twin of
-    * r20_seminc_ivf's fold measurement. */
-  def batchSemProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("batch-sem") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        val ec = graft.Tables.embeddings(spark, dir)
-          .select($"vec_id",
-            transform($"embedding", x => x.cast("double")).as("ev"))
-          .localCheckpoint(true)
-        val n = ec.count()
-        val k = graft.ext.SemDedup.autoK(n,
-          graft.ext.SemDedup.DefaultTargetClusterSize)
-        val assigned = (if (k > graft.ext.SemDedup.CoarseDispatchK)
-          graft.ext.IvfAnn.assignCoarse(ec,
-            graft.ext.IvfAnn.seedCentroids(ec, k))
-        else graft.ext.IvfAnn.build(ec, k, lloydIters = 0).assigned)
-          .localCheckpoint(true)
-        def kernel() = graft.BenchProtocol.force(
-          graft.ext.SemDedup.verdictsRouted(assigned, 0.35, None))
-        def relational() = graft.BenchProtocol.force(
-          graft.ext.SemDedup.verdictsRelational(assigned, 0.35))
-        val p = if (tag == "100x") 1 else 3
-        println(f"[batchsem] $tag%-5s n=$n%-8d k=$k " +
-          s"kernel ${ProbeHarness.timedLine(p)(kernel())} | " +
-          s"relational ${ProbeHarness.timedLine(p)(relational())}")
-      }
-    }
-
-  /** r22 (r21 verdict item 7): the LSH refusal guard's corpus-growth
-    * margin as a measured line — exact candidate pairs/vector of the raw
-    * 8×8 arm and the auto arm vs the 2000 bound per rung, from the
-    * factored pre-explosion volume aggregation (no pair join runs, so
-    * the refusing rungs are measurable too). The raw arm's pairs/vector
-    * grow ~linearly in n; the printed headroom is the early warning for
-    * a future gate-corpus growth (scaladoc at LshPairsPerVectorGuard). */
-  def lshMarginProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("lsh-margin") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val S = graft.queries.Similarity
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        val e = graft.Tables.embeddings(spark, dir)
-          .select($"vec_id",
-            transform($"embedding", x => x.cast("double")).as("ev"))
-          .localCheckpoint(true)
-        val n = e.count()
-        def vol(bits: Int, arm: String): Unit = {
-          val (pv, nv) = S.lshPairVolume(S.lshBanded(e, 64, 8, bits), 8)
-          println(f"[lshmargin] $tag%-5s $arm%-10s n=$nv%-8d " +
-            f"pairs=$pv%-12d pairs_per_vec=${if (nv > 0) pv / nv else 0}%-6d " +
-            f"bound=${S.LshPairsPerVectorGuard} " +
-            f"refuses=${nv > 0 && pv / nv > S.LshPairsPerVectorGuard}")
-        }
-        vol(8, "raw-8x8")
-        vol(S.autoBandBits(n), "auto")
-      }
-    }
-
-  /** r21: the refusal guards and the kernel hot-cluster cap at scale —
-    * the raw LSH-pairs and fixed-k semdedup arms must REFUSE at the
-    * 100× corpus (instead of the r20 sweep's 75 GB spill / 398 s burn)
-    * while their shipped siblings pass in the same session; the capped
-    * kernel (cap forced below target) must complete via the relational
-    * route. */
-  def r21GuardsProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("r21-guards") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val qs = graft.SparkEntry.queries
-      def run(tag: String, dir: String, name: String): Unit = {
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        try {
-          graft.BenchProtocol.force(qs(name)(spark, dir))
-          println(f"[r21guards] $tag%-5s $name%-28s completed in " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } catch { case e: IllegalStateException =>
-          println(f"[r21guards] $tag%-5s $name%-28s REFUSED in " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s: " +
-            ProbeHarness.refusalSummary(e.getMessage))
-        }
-      }
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir)) {
-        Seq("x4_ann_lsh_pairs", "x4_lsh_collapsed",
-          "d_semdedup_incremental", "d_semdedup_incremental_auto")
-          .foreach(run(tag, dir, _))
-        // kernel hot-cluster cap: default (16× target) vs forced-hot
-        // (cap below target routes nearly every cluster relationally)
-        val e = graft.Tables.embeddings(spark, dir)
-          .select($"vec_id",
-            transform($"embedding", x => x.cast("double")).as("ev"))
-          .localCheckpoint(true)
-        val wave = when(substring(md5($"vec_id".cast("string")), 1, 1)
-          .between("0", "7"), 0).otherwise(1)
-        val tgt = graft.ext.SemDedup.DefaultTargetClusterSize
-        def kernel(cap: Long) = graft.BenchProtocol.force(
-          graft.ext.SemDedup.incrementalSemDedupKernel(e, wave, Seq(0, 1),
-            tau = 0.35, targetClusterSize = tgt, exact = false,
-            hotClusterCap = cap))
-        val p = if (tag == "100x") 1 else 3
-        println(f"[r21guards] $tag%-5s kernel default-cap " +
-          s"${ProbeHarness.timedLine(p)(kernel(
-            graft.ext.SemDedup.HotClusterCapFactor.toLong * tgt))} | " +
-          s"forced-hot ${ProbeHarness.timedLine(p)(kernel(tgt / 2L))}")
-      }
-    }
-
-  /** Exact vs fingerprint-pruned novelty/decontamination (r19 verdict
-    * item 5) per docs-ladder rung: the pruned forms must hold ~linear
-    * per decade where the exact gram-keyed shapes read 6.4×. */
-  def curationPrunedProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("curation-pruned") { spark =>
-      val qs = graft.SparkEntry.queries
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir, Seq(
-          "10xd" -> "/tmp/graft_10xd", "100xd" -> "/tmp/graft_100xd"))) {
-        for (name <- Seq("x_novelty", "x_novelty_pruned",
-            "x_decontamination", "x_decontamination_pruned")) {
-          spark.sharedState.cacheManager.clearCache()
-          // the exact arms are the documented superlinear shapes — one
-          // timed pass at the 100× rung keeps the probe bounded
-          val passes = if (tag == "100xd") 1 else 3
-          println(f"[curationpruned] $tag%-5s $name%-26s " +
-            ProbeHarness.timedLine(passes)(
-              graft.BenchProtocol.force(qs(name)(spark, dir))))
-        }
-      }
-    }
-
-  /** Band-store compaction benefit (r18 verdict item 3's measurement
-    * arm): build a NearDup-shaped band store epoch by epoch, measure the
-    * store-probe join (a fresh batch's bands semi-joined against
-    * readBelow) at growing epoch counts, then
-    * [[graft.streaming.NearDupStream.compactStore]] and re-measure — the
-    * probe cost must fall back to ~the few-epoch floor while the verdict
-    * row count stays identical (asserted). Also prints partition-dir
-    * counts, the listing/open-file overhead a 100 TB continuous store
-    * actually accumulates. */
-  def storeCompactProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("store-compact") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      val epochs = 40
-      val docs = graft.Tables.documents(spark, sfDir)
-        .filter($"text".isNotNull)
-        .select($"doc_id", $"text").localCheckpoint(true)
-      def bandsOf(d: org.apache.spark.sql.DataFrame) = d
-        .withColumn("toks", split($"text", " "))
-        .filter(size($"toks") >= 3)
-        .select($"doc_id", graft.ext.MinHashDedup.signatureOf(
-          graft.ext.MinHashDedup.shinglesOfToks($"toks"), 32,
-          graft.ext.HashFamily.Md5).as("sig"))
-        .select($"doc_id", posexplode(transform(sequence(lit(0), lit(7)),
-          b => concat_ws(",", transform(slice($"sig", b * 4 + 1, lit(4)),
-            _.cast("string"))))))
-        .select($"pos".as("band_idx"), $"col".as("band_key"))
-      val store = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get("target"), "storecompact").toString + "/s"
-      val probeBands = bandsOf(docs.filter($"doc_id" % epochs === 0)
-        .withColumn("doc_id", $"doc_id" + 1000000)).localCheckpoint(true)
-      def probeJoin(below: Long): Long =
-        graft.streaming.EpochStore.readBelow(spark, store, below) match {
-          case Some(p) => probeBands
-            .join(p.select($"band_idx", $"band_key").distinct(),
-              Seq("band_idx", "band_key"), "left_semi").count()
-          case None => -1L
-        }
-      var hitsRef = -1L
-      for (e <- 0 until epochs) {
-        graft.streaming.EpochStore.writeEpoch(
-          bandsOf(docs.filter($"doc_id" % epochs === e)).distinct(),
-          e.toLong, store)
-        if (Seq(9, 19, 39).contains(e)) {
-          val (med, mn, steal) =
-            ProbeHarness.timedPasses(3)(probeJoin(e + 1L))
-          hitsRef = probeJoin(e + 1L)
-          println(f"[storecompact] epochs=${e + 1}%-3d dirs=${e + 1} " +
-            f"probe_join median=$med%.3f min=$mn%.3f steal=$steal%.1f " +
-            f"hits=$hitsRef")
-        }
-      }
-      graft.streaming.NearDupStream.compactStore(spark, store)
-      val dirs = Option(new java.io.File(store).listFiles()).toSeq.flatten
-        .count(_.isDirectory)
-      val (med, mn, steal) = ProbeHarness.timedPasses(3)(probeJoin(epochs))
-      val hits = probeJoin(epochs)
-      require(hits == hitsRef,
-        s"compaction changed the probe verdict: $hits vs $hitsRef")
-      println(f"[storecompact] COMPACTED  dirs=$dirs " +
-        f"probe_join median=$med%.3f min=$mn%.3f steal=$steal%.1f " +
-        f"hits=$hits (verdict identical)")
-    }
-
-  /** Incremental MinHash at DISTINCT-content scale (r18 verdict item 7):
-    * the clone-100× read is sublinear because greedy bucket winners
-    * erase clone groups without pair enumeration; the honest floor is
-    * the distinct-content corpus, where every replica carries ~14%
-    * perturbed tokens and real near-dup structure. Runs the gated
-    * two-wave incrementalKeeps shape at 1×/10×/100× distinct, printing
-    * wall (median of 3) and total shuffle WRITE bytes — the cost model a
-    * 100 TB continuous-dedup deployment prices. */
-  def mhIncDistinctProbe(sfDir: String): Unit =
-    ProbeHarness.withSpark("mhinc-distinct") { spark =>
-      import org.apache.spark.sql.functions._
-      import spark.implicits._
-      for ((tag, dir) <- ProbeHarness.corpora(sfDir, Seq(
-          "10xd" -> "/tmp/graft_10xd", "100xd" -> "/tmp/graft_100xd"))) {
-        val docs = graft.Tables.documents(spark, dir)
-          .select($"doc_id", $"text").localCheckpoint(true)
-        val wave = when(substring(md5($"doc_id".cast("string")), 1, 1)
-          .between("0", "7"), 0).otherwise(1)
-        def run() = graft.BenchProtocol.force(
-          graft.ext.MinHashDedup.incrementalKeeps(
-            docs, wave, waves = Seq(0, 1), numHashes = 32, bands = 8))
-        val bytes = ProbeHarness.shuffleWriteBytes(spark)(run())
-        println(f"[mhincdistinct] $tag%-5s docs=${docs.count()}%-8d " +
-          ProbeHarness.timedLine(3)(run()) +
-          f" shuffle_write=${bytes / 1024 / 1024}%d MiB")
-      }
-    }
-
-  /** Auto-sized CMS join-size width (r17 verdict item 7).
-    * r17_joinsize_width proved error ∝ F1A·F1B/w; this probe closes the
-    * loop by SELF-SIZING: pass 1 sketches at the gate width w0=1024 and
-    * yields est1 (one-sided ≥ truth); the standard AMS correction
-    * est_corr = est1 − n_a·n_b/w0 removes the expected collision mass,
-    * and w_auto = next-pow2(n_a·n_b / (eps·est_corr)) for a 25% target
-    * error sizes pass 2 — all from the sketches' own F1 moments (the
-    * column sums), no exact join anywhere in the sizing path. The exact
-    * join size is computed ONLY to score the result. Run at the gate
-    * corpus, 10× (/tmp/graft_sf1) and 100× (/tmp/graft_sf10), where
-    * fixed-1024 read 14,634% rel err in r17. */
-  def cmsAutoProbe(sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = ProbeHarness.session("cms-auto")
-    import spark.implicits._
-    val eps = 0.25
-    for ((tagName, dir) <- Seq("1x" -> sfDir, "10x" -> "/tmp/graft_sf1",
-        "100x" -> "/tmp/graft_sf10")) {
-      if (!new java.io.File(s"$dir/events.parquet").exists()) {
-        println(s"[cms-auto] $tagName corpus missing at $dir — skipped")
-      } else {
-        def counts(t: String) = graft.Tables.events(spark, dir)
-          .filter($"event_type" === t)
-          .groupBy($"user_id").agg(count(lit(1)).as("c"))
-          .localCheckpoint(true)
-        val a = counts("click"); val b = counts("purchase")
-        val nA = a.agg(sum($"c")).head().getLong(0)
-        val nB = b.agg(sum($"c")).head().getLong(0)
-        val exact = a.as("a").join(b.as("b"), "user_id")
-          .agg(sum($"a.c" * $"b.c")).head().getLong(0)
-        def est(w: Int): Long = {
-          def cells(cnt: org.apache.spark.sql.DataFrame) = cnt
-            .select(explode(sequence(lit(0), lit(3))).as("d"),
-              $"user_id", $"c")
-            .select($"d", graft.queries.Curation.sketchCell(
-              $"d", $"user_id".cast("string"), w).as("cell"), $"c")
-            .groupBy($"d", $"cell").agg(sum($"c").as("cc"))
-          cells(a).as("ca").join(cells(b).as("cb"), Seq("d", "cell"))
-            .groupBy($"d").agg(sum($"ca.cc" * $"cb.cc").as("ip"))
-            .agg(min($"ip")).head().getLong(0)
-        }
-        val w0 = 1024
-        val est1 = est(w0)
-        val estCorr = math.max(est1 - nA.toDouble * nB / w0, 1.0)
-        // next pow2 ≥ needed width; clamp BEFORE narrowing (a collapsed
-        // estCorr would overflow Int) and cap at 2^22 (128 MiB sketch)
-        val wNeed = math.min((1 << 22).toDouble, math.max(1024.0,
-          math.ceil(nA.toDouble * nB / (eps * estCorr))))
-        val wAuto = Integer.highestOneBit(wNeed.toInt * 2 - 1)
-        val est2 = est(wAuto)
-        def rel(e: Long): Double = (e - exact).toDouble * 100 / exact
-        println(f"[cms-auto] $tagName: n_a=$nA n_b=$nB exact=$exact | " +
-          f"w0=$w0 est1=$est1 rel1=${rel(est1)}%.1f%% " +
-          f"est_corr=${estCorr.toLong} | w_auto=$wAuto " +
-          f"(${4L * wAuto * 8 / 1024} KiB/sketch) est2=$est2 " +
-          f"rel2=${rel(est2)}%.1f%% one_sided=${est2 >= exact}")
-      }
-    }
-    spark.stop()
-  }
+  private def namesArg(arg: Option[String]): Seq[String] =
+    arg.toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    if (args.headOption.contains("a6stages")) { a6StagesProbe(sfDir); return }
-    if (args.headOption.contains("neardupinc")) { neardupIncProbe(sfDir); return }
-    if (args.headOption.contains("ivfpqhard")) { ivfPqHardProbe(sfDir); return }
-    if (args.headOption.contains("cmsauto")) { cmsAutoProbe(sfDir); return }
-    if (args.headOption.contains("preflightbreak")) { preflightBreakProbe(sfDir); return }
-    if (args.headOption.contains("preflight")) { preflightProbe(sfDir); return }
-    if (args.headOption.contains("semincivf")) { semIncIvfProbe(sfDir); return }
-    if (args.headOption.contains("kmvonepass")) { kmvOnepassProbe(sfDir); return }
-    if (args.headOption.contains("kmvgate")) { kmvGateProbe(sfDir); return }
-    if (args.headOption.contains("lshmargin")) { lshMarginProbe(sfDir); return }
-    if (args.headOption.contains("r21guards")) { r21GuardsProbe(sfDir); return }
-    if (args.headOption.contains("batchsem")) { batchSemProbe(sfDir); return }
-    if (args.headOption.contains("curationpruned")) { curationPrunedProbe(sfDir); return }
-    if (args.headOption.contains("storecompact")) { storeCompactProbe(sfDir); return }
-    if (args.headOption.contains("mhincdistinct")) { mhIncDistinctProbe(sfDir); return }
-    if (args.headOption.contains("sq8store")) { sq8StoreProbe(sfDir); return }
-    if (args.headOption.contains("sq8")) { sq8Probe(sfDir); return }
-    if (args.headOption.contains("topkagg")) { topkAggProbe(sfDir); return }
-    if (args.headOption.contains("sampledagg")) { sampledAggProbe(sfDir); return }
-    if (args.headOption.contains("w3t4")) { w3t4Probe(sfDir); return }
-    if (args.headOption.contains("ivfpqprod")) { ivfPqProdProbe(sfDir); return }
-    if (args.headOption.contains("headline")) { headlineProbe(sfDir); return }
-    if (args.headOption.contains("headlinebk")) { headlineBkProbe(sfDir); return }
-    if (args.headOption.contains("lshauto")) { lshAutoProbe(sfDir); return }
-    if (args.headOption.contains("pagerank")) { pagerankProbe(sfDir); return }
-    if (args.headOption.contains("graphscale")) { graphScaleProbe(sfDir); return }
-    if (args.headOption.contains("triskew")) { triSkewProbe(sfDir); return }
-    if (args.headOption.contains("lpaconv")) { lpaConvProbe(sfDir); return }
-    if (args.headOption.contains("prwarm")) { prWarmProbe(sfDir); return }
-    if (args.headOption.contains("skew")) {
-      skewProbe(sfDir, args.drop(1).headOption.map(_.toLong)); return
+    val arg = args.lift(1)
+    def run(name: String)(f: SparkSession => Unit): Unit =
+      ProbeHarness.withSpark(name)(f)
+    args.headOption.getOrElse("") match {
+      case "all" => allQueries(sfDir)
+      case "probe" =>
+        val names =
+          if (arg.contains("bench")) graft.SparkEntry.benchQueries
+          else namesArg(arg)
+        require(names.nonEmpty, "probe needs <q1,q2,...> or bench")
+        run("query-probe")(probe(_, "probe", names, graft.SparkEntry.queries, sfDir))
+      case "headlinebk" => run("headline-bk-probe")(headlineBk(_, sfDir, namesArg(arg)))
+      case "bucketwrite" =>
+        run("bucket-write")(BenchLegPrep.writeBucketedTables(_, sfDir,
+          arg.getOrElse("orderkey")))
+      case "lshmargin" => run("lsh-margin")(lshMargin(_, sfDir))
+      case "cosine" => run("cosine-shootout")(cosineShootout(_, sfDir))
+      case "a6" => run("a6-shootout")(a6Shootout(_, sfDir))
+      case "minhash" => run("minhash-probe")(minhashProbe(_, sfDir))
+      case "recallprobe" => run("recallprobe")(recallProbe(_, sfDir))
+      case "etl" => run("etl-bench")(etlThroughput(_, arg.fold(500)(_.toInt)))
+      case "etlsweep" => run("etl-sweep")(etlShuffleSweep(_))
+      case "etlprofile" => run("etl-profile")(etlProfile(_))
+      case other =>
+        System.err.println(s"unknown probe '$other'; probes:\n" +
+          Probes.map { case (n, a) => s"  $n $a".stripTrailing }.mkString("\n"))
+        sys.exit(2)
     }
-    if (args.headOption.contains("sentscale")) { sentScaleProbe(sfDir); return }
-    if (args.headOption.contains("semstages")) { semStagesProbe(sfDir); return }
-    if (args.headOption.contains("outliers")) { outlierStagesProbe(sfDir); return }
-    if (args.headOption.contains("bpe")) { bpeProbe(sfDir); return }
-    if (args.headOption.contains("bpelong")) { bpeLongProbe(sfDir); return }
-    if (args.headOption.contains("qsketch")) { qsketchProbe(sfDir); return }
-    if (args.headOption.contains("edgeab")) { edgeAbProbe(sfDir); return }
-    if (args.headOption.contains("eventab")) { eventAbProbe(sfDir); return }
-    if (args.headOption.contains("graphstream")) { graphStreamProbe(sfDir); return }
-    if (args.headOption.contains("ppjoin")) { ppjoinProbe(sfDir); return }
-    if (args.headOption.contains("sketchstream")) { sketchStreamProbe(sfDir); return }
-    if (args.headOption.contains("cmsstream")) { cmsStreamProbe(sfDir); return }
-    if (args.headOption.contains("mediahash")) { mediaHashProbe(sfDir); return }
-    if (args.headOption.contains("prefixsum")) { prefixSumProbe(sfDir); return }
-    if (args.headOption.contains("probe")) {
-      queryProbe(sfDir,
-        args.drop(1).headOption.getOrElse("").split(',').filter(_.nonEmpty))
-      return
-    }
-    if (args.headOption.contains("codec")) { codecProbe(sfDir); return }
-    if (args.headOption.contains("eventops")) { eventOpsProbe(sfDir); return }
-    if (args.headOption.contains("zorder")) { zorderProbe(sfDir); return }
-    if (args.headOption.contains("anninc")) { annIncProbe(sfDir); return }
-    if (args.headOption.contains("cosine")) { cosineShootout(sfDir); return }
-    if (args.headOption.contains("a6")) { a6Shootout(sfDir); return }
-    if (args.headOption.contains("all")) { allQueries(sfDir); return }
-    if (args.headOption.contains("minhash")) { minhashProbe(sfDir); return }
-    if (args.headOption.contains("scaleops")) {
-      scaleOps(sfDir, args.drop(1).headOption); return
-    }
-    if (args.headOption.contains("mhfamily")) { minhashFamilies(sfDir); return }
-    if (args.headOption.contains("mhcollapse")) { minhashCollapse(sfDir); return }
-    if (args.headOption.contains("shufbytes")) { shuffleBytes(sfDir); return }
-    if (args.headOption.contains("shufbytesq")) {
-      shuffleBytesFor(sfDir,
-        args.drop(1).headOption.getOrElse("").split(',').filter(_.nonEmpty)
-          .toSeq)
-      return
-    }
-    if (args.headOption.contains("windowab")) { windowAb(sfDir); return }
-    if (args.headOption.contains("window3way")) { window3Way(sfDir); return }
-    if (args.headOption.contains("semincauto")) { semIncAuto(sfDir); return }
-    if (args.headOption.contains("spankey")) { spanKeyShootout(sfDir); return }
-    if (args.headOption.contains("bucketab")) { bucketAb(sfDir); return }
-    if (args.headOption.contains("pq")) { pqProbe(sfDir); return }
-    if (args.headOption.contains("clusterprune")) { clusterPruneProbe(sfDir); return }
-    if (args.headOption.contains("retrieval")) { retrievalProbe(sfDir); return }
-    if (args.headOption.contains("bucketwrite")) {
-      bucketWrite(sfDir, args.drop(1).headOption.getOrElse("orderkey")); return
-    }
-    if (args.headOption.contains("stream")) { streamThroughput(sfDir); return }
-    if (args.headOption.contains("etl")) {
-      etlThroughput(args.drop(1).headOption.map(_.toInt).getOrElse(500)); return
-    }
-    if (args.headOption.contains("etlsweep")) { etlShuffleSweep(); return }
-    if (args.headOption.contains("etlband")) { etlBand(); return }
-    if (args.headOption.contains("etldiag")) {
-      etlDiag(args.drop(1).headOption.map(_.toInt).getOrElse(10)); return
-    }
-    if (args.headOption.contains("etlprofile")) { etlProfile(); return }
-    if (args.headOption.contains("loadmicro")) {
-      // driver-side cost breakdown of LogPipeline.load's pre-job phase
-      val glob = genEtlLogs(200)
-      val spark = graft.Sessions.local("loadmicro", 32)
-      (1 to 3).foreach(_ => timedLoad(spark, glob))
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[micro] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      (1 to 2).foreach { _ =>
-        val df = t("read.text (listing)") {
-          spark.read.option("wholetext", "true").text(glob) }
-        t("fileStatuses") {
-          org.apache.spark.sql.graft.CatalystBridge.fileStatuses(df) }
-        t("inputFiles") { df.inputFiles }
-        val tables = t("full load()") {
-          graft.parse.LogPipeline.load(spark, glob) }
-        t("experiments plan analyze") { tables.experiments.queryExecution.analyzed }
-        t("experiments count") { tables.experiments.count() }
-        tables.release()
-      }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("pathcheck")) {
-      // does DataFrame.inputFiles render paths identically to
-      // _metadata.file_path? (decides whether ids can be minted from the
-      // driver-side file index with zero extra jobs)
-      val glob = genEtlLogs(5)
-      val spark = graft.Sessions.local("pathcheck", 8)
-      val df = spark.read.option("wholetext", "true").text(glob)
-      val fromIndex = df.inputFiles.sorted.toSeq
-      // inputFiles renders URI form (file:///tmp/x), _metadata renders
-      // Hadoop Path form (file:/tmp/x) — LogPipeline.load normalizes
-      // through Path(URI); this probe pins that the normalized rendering
-      // matches the scan's provenance column byte-for-byte
-      val normalized = fromIndex.map(p =>
-        new org.apache.hadoop.fs.Path(new java.net.URI(p)).toString)
-      val fromMeta = df.select(org.apache.spark.sql.functions.col("_metadata.file_path"))
-        .collect().map(_.getString(0)).sorted.toSeq
-      println(s"[pathcheck] inputFiles: ${fromIndex.head}")
-      println(s"[pathcheck] normalized: ${normalized.head}")
-      println(s"[pathcheck] _metadata : ${fromMeta.head}")
-      println(s"[pathcheck] equal=${normalized == fromMeta}")
-      spark.stop(); return
-    }
-    if (args.headOption.contains("mh2")) {
-      // wall time + total shuffle write per run: the ids-only band join
-      // must move ~20 B/row, not signatures×bands (the r5->r6 fix)
-      val spark = graft.Sessions.local("mh2", 32)
-      val shuffleWrite = new java.util.concurrent.atomic.AtomicLong()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        })
-      (1 to 3).foreach { i =>
-        spark.sharedState.cacheManager.clearCache()
-        shuffleWrite.set(0)
-        val t0 = System.nanoTime()
-        val n = graft.ext.MinHashDedup.candidatePairs(
-          graft.Tables.documents(spark, sfDir), 32, 8).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-        println(f"[mh2] iter$i pairs=$n $sec%.2f s shuffleWrite=${shuffleWrite.get / 1024}%d KiB")
-      }
-      spark.stop(); return
-    }
-    if (args.headOption.contains("recallprobe")) {
-      // stage-by-stage wall time of d_minhash_recall's plan pieces
-      import org.apache.spark.sql.functions._
-      val spark = graft.Sessions.local("recallprobe", 32)
-      import spark.implicits._
-      def t[A](tag: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-      }
-      val docs = graft.Tables.documents(spark, sfDir).filter($"doc_id" < 600)
-      t("docs count") { docs.count() }
-      val cand = t("candidatePairs build+count") {
-        val c = graft.ext.MinHashDedup.candidatePairs(docs, 32, 8)
-          .select($"a", $"b", lit(true).as("found"))
-        c.count(); c
-      }
-      val sh = t("shingles checkpoint") {
-        docs.withColumn("toks", split($"text", " "))
-          .filter(size($"toks") >= 3)
-          .select($"doc_id",
-            graft.queries.DedupQueries.shinglesOfToks($"toks").as("sh"))
-          .localCheckpoint(true)
-      }
-      val a = sh.select($"doc_id".as("a"), $"sh".as("sha"))
-      val b = sh.select($"doc_id".as("b"), $"sh".as("shb"))
-      val strong = t("exact pair scan") {
-        val s = a.join(broadcast(b), $"a" < $"b")
-          .select($"a", $"b",
-            round(size(array_intersect($"sha", $"shb")).cast("double") /
-              size(array_union($"sha", $"shb")), 6).as("jaccard"))
-          .filter($"jaccard" >= 0.9)
-        s.count(); s
-      }
-      t("exact pair scan, single-intersect") {
-        val aa = sh.select($"doc_id".as("a"), $"sh".as("sha"), size($"sh").as("na"))
-        val bb = sh.select($"doc_id".as("b"), $"sh".as("shb"), size($"sh").as("nb"))
-        aa.join(broadcast(bb), $"a" < $"b")
-          .select($"a", $"b", $"na", $"nb",
-            size(array_intersect($"sha", $"shb")).as("inter"))
-          .select($"a", $"b",
-            round($"inter".cast("double") / ($"na" + $"nb" - $"inter"), 6).as("jaccard"))
-          .filter($"jaccard" >= 0.9).count()
-      }
-      t("exact pair scan, size-pruned") {
-        val aa = sh.select($"doc_id".as("a"), $"sh".as("sha"), size($"sh").as("na"))
-        val bb = sh.select($"doc_id".as("b"), $"sh".as("shb"), size($"sh").as("nb"))
-        aa.join(broadcast(bb),
-            $"a" < $"b" && least($"na", $"nb") >= greatest($"na", $"nb") * 0.899)
-          .select($"a", $"b", $"na", $"nb",
-            size(array_intersect($"sha", $"shb")).as("inter"))
-          .select($"a", $"b",
-            round($"inter".cast("double") / ($"na" + $"nb" - $"inter"), 6).as("jaccard"))
-          .filter($"jaccard" >= 0.9).count()
-      }
-      t("left join + order") {
-        strong.join(cand, Seq("a", "b"), "left")
-          .select($"a", $"b", $"jaccard",
-            coalesce($"found", lit(false)).as("recalled"))
-          .orderBy($"a", $"b").count()
-      }
-      spark.stop(); return
-    }
-    // r22: the r1-era no-arg AQE A/B and the `shuffle` partition sweep
-    // are REMOVED — both forced via count(), the protocol the round-8
-    // noop-sink discontinuity documented as under-measuring (ColumnPruning
-    // strips the real work; Bench scaladoc), so their readings could only
-    // mislead next to every noop-forced probe above. Config A/Bs belong
-    // in `probe <names>` arms on the shared harness.
-    System.err.println(
-      "usage: runMain graft.tools.BenchTune <probe> [args] — see main()")
   }
 }

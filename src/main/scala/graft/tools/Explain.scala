@@ -1,22 +1,16 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
-/** Dev harness: print the formatted physical plan of named queries.
+/** Dev harness: print the formatted physical plan of named queries under
+  * the bench session profile (`Sessions.local` on every host core).
   * Usage: runMain graft.tools.Explain <query> [query...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local("explain",
+      Runtime.getRuntime.availableProcessors)
     args.foreach { n =>
       println(s"========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

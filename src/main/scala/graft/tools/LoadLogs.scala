@@ -21,14 +21,7 @@ object LoadLogs {
     val user = if (args.length > 2) args(2) else "spark"
     val skipNils = if (args.length > 3) args(3).toBoolean else true
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-load-logs")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session("graft-load-logs")
 
     val cfg = LogPipeline.LoadConfig(user = user, skipNils = skipNils)
     val tables = LogPipeline.load(spark, logGlob, cfg)
@@ -49,17 +42,23 @@ object LoadLogs {
   private def ecjMain(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: LoadLogs --ecj <statGlob> <outDir>")
     val Array(statGlob, outDir) = args.take(2)
+    val spark = session("graft-load-ecj")
+    val gens = graft.parse.EcjPipeline.loadGenerations(spark, statGlob)
+    CsvSink.append(gens, s"$outDir/generations")
+    println(s"[load] generations: ${gens.count()} rows -> $outDir/generations")
+    spark.stop()
+  }
+
+  /** SPARK_MASTER picks the deployment (default local[8]). */
+  private def session(appName: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("graft-load-ecj")
+      .appName(appName)
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val gens = graft.parse.EcjPipeline.loadGenerations(spark, statGlob)
-    CsvSink.append(gens, s"$outDir/generations")
-    println(s"[load] generations: ${gens.count()} rows -> $outDir/generations")
-    spark.stop()
+    spark
   }
 }

@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Shared scaffolding for BenchTune probes (r18 verdict item 8: probe
-  * scaffolding — session bootstrap, steal accounting, timing loops,
-  * scale-corpus discovery — was being re-written per probe and BenchTune
-  * grew 548 lines in one round; new probes should cost tens of lines).
-  * Everything here is dev measurement harness, not product code.
+/** Shared scaffolding for BenchTune probes: session bootstrap, steal and
+  * shuffle-byte accounting, scale-corpus discovery. Everything here is
+  * dev measurement harness, not product code.
   */
 object ProbeHarness {
 
@@ -18,48 +16,26 @@ object ProbeHarness {
     if (cols.length > 8) cols(8).toLong else 0L
   } catch { case _: Throwable => 0L }
 
-  /** Standard probe session: local[32] + the first-job warmup that keeps
-    * codegen/scheduler bring-up off the first measured pass. Caller
-    * stops it (or use [[withSpark]]). */
-  def session(name: String): SparkSession = {
-    val spark = graft.Sessions.local(name, 32)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    spark
-  }
-
+  /** Runs `f` on the standard probe session — the bench profile on every
+    * host core, plus the first-job warmup that keeps codegen/scheduler
+    * bring-up off the first measured pass — and stops it after. */
   def withSpark(name: String)(f: SparkSession => Unit): Unit = {
-    val spark = session(name)
+    val spark = graft.Sessions.local(name,
+      Runtime.getRuntime.availableProcessors)
+    spark.range(1000000).selectExpr("sum(id)").collect()
     try f(spark) finally spark.stop()
   }
 
   /** The scale ladder: gate corpus plus whichever ScaleGen outputs exist
     * on disk (missing rungs are reported, never silently skipped —
     * silent truncation reads as coverage). */
-  def corpora(sfDir: String,
-      ladder: Seq[(String, String)] = Seq(
-        "10x" -> "/tmp/graft_10x", "100x" -> "/tmp/graft_100x"))
-      : Seq[(String, String)] =
-    ("1x" -> sfDir) +: ladder.filter { case (tag, dir) =>
-      val ok = new java.io.File(s"$dir/documents.parquet").exists()
-      if (!ok) println(s"[probe] $tag corpus missing at $dir — skipped")
-      ok
-    }
-
-  /** Warmup + `passes` timed runs of `body`; returns
-    * (median, min, stealSeconds over the timed passes). */
-  def timedPasses(passes: Int)(body: => Unit): (Double, Double, Double) = {
-    body // warmup
-    val s0 = stealJiffies
-    val times = (1 to passes).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }.sorted
-    (times(times.size / 2), times.head, (stealJiffies - s0) / 100.0)
-  }
-
-  /** timedPasses through the bench forcing idiom (noop sink — the
-    * protocol every measuring tool shares, BenchProtocol scaladoc). */
-  def timedForce(passes: Int)(df: () => DataFrame): (Double, Double, Double) =
-    timedPasses(passes)(graft.BenchProtocol.force(df()))
+  def corpora(sfDir: String): Seq[(String, String)] =
+    ("1x" -> sfDir) +: Seq("10x" -> "/tmp/graft_10x", "100x" -> "/tmp/graft_100x")
+      .filter { case (tag, dir) =>
+        val ok = new java.io.File(s"$dir/documents.parquet").exists()
+        if (!ok) println(s"[probe] $tag corpus missing at $dir — skipped")
+        ok
+      }
 
   /** r22: the guard-refusal headline — everything before the " - "
     * separator, i.e. the measured volume and the bound, without the
@@ -69,69 +45,6 @@ object ProbeHarness {
   def refusalSummary(msg: String): String = {
     val i = msg.indexOf(" - ")
     (if (i >= 0) msg.substring(0, i) else msg).trim
-  }
-
-  /** One timed arm's standard print fragment —
-    * "median=M min=N steal=S" — shared by the multi-arm probes. */
-  def timedLine(passes: Int)(body: => Unit): String = {
-    val (med, mn, steal) = timedPasses(passes)(body)
-    f"median=$med%.2f min=$mn%.2f steal=$steal%.1f"
-  }
-
-  /** [[timedLine]] plus the arm's shuffle WRITE KiB. */
-  def timedShuffleLine(spark: SparkSession, passes: Int)(body: => Unit)
-      : String =
-    f"${timedLine(passes)(body)} " +
-      f"shuffle=${shuffleWriteBytes(spark)(body) / 1024}%d KiB"
-
-  /** Per-JOB and per-STAGE wall attribution of one `body` run: each
-    * driver action's callsite is the name of its job's RESULT stage, so
-    * serial driver actions are attributed by code line; per-stage
-    * executorRunTime/DeserializeTime localizes task-side cost (closure
-    * deserialization shows in deser). Returns (wall s,
-    * callsite → (sumSecs, nJobs), top stages by run+deser as
-    * (stageId, name, tasks, runS, deserS)). Broadcast-pool jobs overlap
-    * the main job, so job sums can exceed wall — the ranking is the
-    * signal. */
-  def jobStageBreakdown(spark: SparkSession)(body: => Unit)
-      : (Double, Seq[(String, (Double, Int))],
-        Seq[(Int, String, Int, Double, Double)]) = {
-    val t0s = scala.collection.concurrent.TrieMap[Int, Long]()
-    val jobs = scala.collection.concurrent.TrieMap[Int, (String, Long)]()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Int, String, Int, Long, Long)]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        t0s(e.jobId) = System.nanoTime()
-        jobs(e.jobId) = (e.stageInfos.sortBy(_.stageId).lastOption
-          .map(_.name).getOrElse("?"), 0L)
-      }
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        for (t0 <- t0s.get(e.jobId); cs <- jobs.get(e.jobId).map(_._1))
-          jobs(e.jobId) = (cs, System.nanoTime() - t0)
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stages.add((si.stageId, si.name.takeWhile(_ != '$').take(44),
-          si.numTasks, si.taskMetrics.executorRunTime,
-          si.taskMetrics.executorDeserializeTime))
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    val w0 = System.nanoTime()
-    try {
-      body
-      org.apache.spark.sql.graft.CatalystBridge.drainListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    ((System.nanoTime() - w0) / 1e9,
-      jobs.values.groupBy(_._1).view
-        .mapValues(v => (v.map(_._2).sum / 1e9, v.size)).toSeq
-        .sortBy(-_._2._1),
-      stages.asScala.toSeq.sortBy(t => -(t._4 + t._5)).take(10)
-        .map(t => (t._1, t._2, t._3, t._4 / 1e3, t._5 / 1e3)))
   }
 
   /** Total shuffle WRITE bytes of `body` — the 100 TB cost proxy (local

@@ -14,18 +14,15 @@ object CatalystBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** (path, length, modificationTime-millis) for every file behind a
-    * file-source DataFrame, straight from the relation's FileIndex — the
-    * listing the scan already materialized on the driver. Saves one
-    * FileSystem RPC per file vs re-statting (`df.inputFiles` exposes only
-    * paths). Paths render in Hadoop Path form, matching
-    * `_metadata.file_path`.
+  /** The FileStatus of every file behind a file-source DataFrame,
+    * straight from the relation's FileIndex — the listing the scan already
+    * materialized. Saves one FileSystem RPC per file vs re-statting
+    * (`df.inputFiles` exposes only paths).
     */
-  def fileStatuses(df: DataFrame): Seq[(String, Long, Long)] =
+  def fileStatuses(df: DataFrame): Seq[org.apache.hadoop.fs.FileStatus] =
     df.queryExecution.analyzed.collect {
       case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
-        r.location.listFiles(Nil, Nil).flatMap(_.files)
-          .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        r.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
     }.flatten
 
   /** A long-array literal backed by UnsafeArrayData instead of the boxed
@@ -35,7 +32,8 @@ object CatalystBridge {
     * java-serializes every element through the ObjectInputStream handle
     * table — measured 26 s (10×) / 71 s (100×) of per-task deserialize
     * time on the preflight gate's ≤1M-word bitmaps, and the allocation
-    * burst behind its flaky 100× executor OOM (r22 preflightbreak probe).
+    * burst behind its flaky 100× executor OOM (BENCH_SCALE
+    * r22_preflight_fix).
     */
   def longArrayLit(a: Array[Long]): Column =
     column(org.apache.spark.sql.catalyst.expressions.Literal(

@@ -124,6 +124,36 @@ class LogPipelineSpec extends AnyFunSuite {
     assert(small.collect().toSet == big.collect().toSet)
   }
 
+  test("names with a space or % load every file, on both dispatch arms") {
+    // the listing that mints ids must render paths exactly as
+    // _metadata.file_path does (URL-encoded), or the id-map join drops the
+    // file and the drift guard refuses the whole load
+    val d = Files.createTempDirectory(Paths.get("target"), "pathrender")
+    val pad = (1 to 40).map(k => s"pad-$k = $k").mkString("\n", "\n", "")
+    Files.writeString(d.resolve("runA_u1.log"),
+      fixtureLog("1.2.3", true, 4).replaceFirst("\n", pad + "\n"))
+    Files.writeString(d.resolve("run B_u2.log"), fixtureLog("1.2.3", false, 9))
+    Files.writeString(d.resolve("r%41.log"), fixtureLog("2.0.0", true, 2))
+    val glob = d.toString + "/*.log"
+    val metaPaths = spark.read.text(glob).select("_metadata.file_path")
+      .distinct().collect().map(_.getString(0)).sorted.toSeq
+    // a name without special characters renders as Hadoop prints it
+    assert(metaPaths.contains(s"file:${d.toAbsolutePath}/runA_u1.log"))
+    val plainSize = Files.size(d.resolve("runA_u1.log"))
+    // all-wholetext, then the plain (padded) file chunked and the two
+    // special names re-read through the wholetext arm
+    for (bigFileBytes <- Seq(LogPipeline.LoadConfig().bigFileBytes, plainSize - 1)) {
+      val t = LogPipeline.load(spark, glob,
+        LogPipeline.LoadConfig(bigFileBytes = bigFileBytes))
+      try {
+        val exps = t.experiments.collect()
+        assert(exps.map(_.getAs[String]("logfile_location")).sorted.toSeq == metaPaths)
+        assert(exps.map(_.getAs[Long]("id")).toSet == Set(1L, 2L, 3L))
+        assert(t.summary.collect().map(_.getInt(2)).sorted.toSeq == Seq(2, 4, 9))
+      } finally t.release()
+    }
+  }
+
   test("id minting never windows or shuffles file payloads (scale guard)") {
     // the r2 judge's #1 scale-killer: row_number over an unpartitioned
     // window dragged every whole-file row through ONE task. The fixed plan

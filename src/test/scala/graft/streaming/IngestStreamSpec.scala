@@ -48,6 +48,25 @@ class IngestStreamSpec extends AnyFunSuite {
     assert(seen.map(_._2).distinct.length == 3)
   }
 
+  test("names with a space or % stream every file with the batch paths") {
+    val dir = Files.createTempDirectory(Paths.get("target"), "pstream").toString
+    val ckpt = Files.createTempDirectory(Paths.get("target"), "pstream_ck").toString
+    Files.writeString(Paths.get(dir, "a_1.log"), log(3))
+    Files.writeString(Paths.get(dir, "run B_2.log"), log(5))
+    Files.writeString(Paths.get(dir, "r%41.log"), log(8))
+    val seen = mutable.ArrayBuffer.empty[(Long, String)]
+    IngestStream.run(spark, dir + "/*.log", ckpt) { (tables, _) =>
+      seen ++= tables.summary.join(tables.experiments, "id")
+        .select("maxgen", "logfile_location")
+        .collect().map(r => (r.getInt(0).toLong, r.getString(1)))
+    }.awaitTermination()
+    assert(seen.map(_._1).sorted == Seq(3L, 5L, 8L))
+    val batch = LogPipeline.load(spark, dir + "/*.log")
+    try assert(seen.map(_._2).toSet ==
+      batch.experiments.select("logfile_location").collect().map(_.getString(0)).toSet)
+    finally batch.release()
+  }
+
   test("streaming -> JDBC upsert is exactly-once end-to-end (T1+T2+T3)") {
     val url = "jdbc:derby:memory:streamdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
