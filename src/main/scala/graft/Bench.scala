@@ -234,8 +234,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Sessions.local("graft-bench", cpus)
+    val spark = Sessions.local("graft-bench", Sessions.defaultCores)
 
     val names = SparkEntry.benchQueries
     val qs = SparkEntry.queries

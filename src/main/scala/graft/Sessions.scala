@@ -2,34 +2,33 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session profiles.
+/** The one session profile. Every entry point (`Verify`, `Bench`, perfbench,
+  * `tools.LoadLogs`, the dev tools) and the test suite build through
+  * [[local]], so the plans the correctness gate checks are the plans the
+  * benchmark times.
   *
-  * `cluster(builder)` is the production profile this engine is designed for
-  * (1000-executor, ~100 TB inputs): AQE on (runtime coalescing, skew-join
-  * splitting, dynamic join-strategy switch), broadcast threshold left at
-  * default so dimension tables broadcast and fact-fact joins go SMJ/SHJ.
+  * AQE is off: at this engine's single-JVM scale factors a query runs in
+  * well under a second, and AQE's per-stage re-materialization costs more
+  * than its re-planning saves (measured: a6_revenue 0.7s AQE-off vs
+  * 1.1–2.1s AQE-on at sf0.1). Shuffle partitions are cores/2, not 200.
+  * Outputs do not depend on these settings: `ProfileInvarianceSpec` pins
+  * that AQE with skew-join splitting, 1 or 200 shuffle partitions and tiny
+  * file splits all return the same rows.
   *
-  * `local(cores)` is the single-JVM profile used by Verify/Bench at test
-  * scale factors: AQE off — at sub-second query times AQE's per-stage
-  * re-materialization costs more than its re-planning saves (measured:
-  * a6_revenue 0.7s AQE-off vs 1.1–2.1s AQE-on at sf0.1); shuffle
-  * partitions = cores, not 200.
+  * `SPARK_MASTER`, when set, replaces `local[cores]` — the deployment's
+  * master, read here so every entry point deploys the same way.
   */
 object Sessions {
 
-  def cluster(appName: String): SparkSession.Builder =
-    SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .appName(appName)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
+  /** Core count for entry points that take none: `SPARK_GRAFT_CPUS` if
+    * set, else every host core. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   def local(appName: String, cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cores]")
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cores]"))
       .appName(appName)
       // test-scale shuffles hold a few MB: fewer, fatter partitions beat
       // per-task scheduling overhead, but cores/4 starved the large-large
@@ -49,8 +48,8 @@ object Sessions {
       // >32 input paths triggers a distributed listing JOB (parallel
       // partition discovery) — for local-FS file counts the job's
       // scheduling overhead (~0.4s per read.text on 200 files) dwarfs a
-      // serial driver listing. Cluster profile keeps the default: against
-      // object stores with millions of files the parallel listing wins.
+      // serial driver listing. (Against object stores with millions of
+      // files the parallel listing would win; no deployment here has that.)
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
       // KEEP THE 128 MB DEFAULT — measured, twice surprising. The local
       // corpora are single ~10 MB parquet files per table, which scan as

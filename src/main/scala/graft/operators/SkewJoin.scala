@@ -12,10 +12,11 @@ import org.apache.spark.sql.functions._
   * is replicated once per salt value, and the join runs on (key, salt) —
   * the hot key's rows now spread over `buckets` partitions.
   *
-  * AQE's skew-join handling (on in the cluster profile) covers sort-merge
-  * joins automatically; explicit salting remains the tool for aggregations
-  * (`saltedCount`) and for joins where AQE can't split (e.g. bucketed
-  * tables, or pre-AQE Spark versions).
+  * AQE's skew-join handling covers sort-merge joins automatically where a
+  * deployment turns AQE on (the `Sessions.local` profile runs it off);
+  * explicit salting remains the tool for aggregations (`saltedCount`) and
+  * for joins where AQE can't split (e.g. bucketed tables, or pre-AQE Spark
+  * versions).
   */
 object SkewJoin {
 

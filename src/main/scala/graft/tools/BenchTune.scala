@@ -31,7 +31,7 @@ object BenchTune {
     * `r10_lsh_auto_bits`). Skips print loudly so a sweep never silently
     * under-covers. */
   def allQueries(sfDir: String): Unit = {
-    val spark = graft.Sessions.local("bench-all", 32)
+    val spark = graft.Sessions.local("bench-all", graft.Sessions.defaultCores)
     val skip = sys.env.getOrElse("SPARK_GRAFT_SKIP", "")
       .split(',').filter(_.nonEmpty).toSet
     // per-run host-CPU-steal accounting (r13 verdict item 1): a sweep whose

@@ -16,7 +16,7 @@ object BpeTrainGen {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 512
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = graft.Sessions.local("bpe-train-gen", 8)
+    val spark = graft.Sessions.local("bpe-train-gen", graft.Sessions.defaultCores)
     spark.sparkContext.setLogLevel("ERROR")
     val counts = Bpe.wordCounts(graft.Tables.documents(spark, sfDir))
       .orderBy(org.apache.spark.sql.functions.col("w"))

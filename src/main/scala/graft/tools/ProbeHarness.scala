@@ -16,12 +16,12 @@ object ProbeHarness {
     if (cols.length > 8) cols(8).toLong else 0L
   } catch { case _: Throwable => 0L }
 
-  /** Runs `f` on the standard probe session — the bench profile on every
-    * host core, plus the first-job warmup that keeps codegen/scheduler
-    * bring-up off the first measured pass — and stops it after. */
+  /** Runs `f` on the standard probe session — the bench profile on
+    * `Sessions.defaultCores`, plus the first-job warmup that keeps
+    * codegen/scheduler bring-up off the first measured pass — and stops
+    * it after. */
   def withSpark(name: String)(f: SparkSession => Unit): Unit = {
-    val spark = graft.Sessions.local(name,
-      Runtime.getRuntime.availableProcessors)
+    val spark = graft.Sessions.local(name, graft.Sessions.defaultCores)
     spark.range(1000000).selectExpr("sum(id)").collect()
     try f(spark) finally spark.stop()
   }

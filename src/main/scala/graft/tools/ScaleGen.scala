@@ -47,7 +47,7 @@ object ScaleGen {
     val dest = args.drop(1).headOption.getOrElse("/tmp/graft_sf1")
     val factor = args.drop(2).headOption.map(_.toInt).getOrElse(10)
     val distinct = args.drop(3).headOption.contains("distinct")
-    val spark = graft.Sessions.local("scale-gen", 32)
+    val spark = graft.Sessions.local("scale-gen", graft.Sessions.defaultCores)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")

@@ -3,24 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (per-suite sessions would pay
-  * ~10s startup each). */
+  * ~10s startup each): the bench profile on 4 cores, so the suite pins the
+  * plans the benchmark times. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // same glob-read WARN-noise suppression as Sessions.local
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local("graft-test", 4)
 
   /** Drop a managed table AND its warehouse directory: a fresh JVM's
     * in-memory catalog has no entry for a leftover directory from a
