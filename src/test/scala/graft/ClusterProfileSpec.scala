@@ -2,32 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cluster profile (AQE on, skew-join splitting) must produce the same
-  * results as the plain local profile — AQE re-plans stages at runtime, and
-  * a query whose output depends on partitioning/evaluation order would
-  * silently diverge on a real cluster. Runs a representative query per
-  * family under an AQE-enabled clone of the shared session.
+/** The cluster profile (AQE on, skew-join splitting) must return the same
+  * rows as the AQE-off bench profile: AQE re-plans stages at runtime, so a
+  * query whose output depends on partitioning or evaluation order would
+  * silently diverge on a real cluster. Same query set as
+  * `ProfileInvarianceSpec`.
   */
 class ClusterProfileSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  private val sfDir = "/root/testdata/sf0.001"
-
-  private val names = Seq(
-    "q1_pricing_summary",     // partial+final agg
-    "q5_local_supplier",      // 6-way join
-    "w3_moving_avg",          // window frames
-    "r3_continuation_merge",  // order-sensitive stream reshaping
-    "t_asof_join")            // union + carry-forward window
-
   test("AQE-enabled runs match AQE-off runs row for row") {
-    val aqe = spark.newSession()
-    aqe.conf.set("spark.sql.adaptive.enabled", "true")
-    aqe.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    aqe.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    names.foreach { n =>
-      val plain = SparkEntry.queries(n)(spark, sfDir).collect().toSeq
-      val adaptive = SparkEntry.queries(n)(aqe, sfDir).collect().toSeq
-      assert(adaptive == plain, s"query $n diverges under AQE")
-    }
+    ProfileInvariance.check("AQE with skew-join splitting", Map(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true"))
   }
 }

@@ -10,10 +10,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * and any other deployment. Each arm is a `newSession()` of the shared
   * bench-profile session with one group of settings overridden; every
   * query's collected rows must equal the base run's. The queries cover every
-  * `QueryDef` module.
+  * `QueryDef` module. `ClusterProfileSpec` runs the AQE arm,
+  * `ProfileInvarianceSpec` the partitioning arms.
   */
-class ProfileInvarianceSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
+object ProfileInvariance {
+  import org.scalatest.Assertions._
+
+  private def spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
   private val names = Seq(
@@ -30,17 +33,6 @@ class ProfileInvarianceSpec extends AnyFunSuite {
     "x_pagerank",             // GraphQueries: iterative rank sums
     "t4_session")             // Events: gap sessionization
 
-  private val arms: Seq[(String, Map[String, String])] = Seq(
-    "AQE with skew-join splitting" -> Map(
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true"),
-    "shuffle.partitions=1" -> Map("spark.sql.shuffle.partitions" -> "1"),
-    "shuffle.partitions=200" -> Map("spark.sql.shuffle.partitions" -> "200"),
-    "64 KiB file splits" -> Map(
-      "spark.sql.files.maxPartitionBytes" -> "64k",
-      "spark.sql.files.openCostInBytes" -> "0"))
-
   /** Runs `n` on `s` from an empty cache: queries `.cache()` intermediates
     * and every session of the context shares one CacheManager, so a warm
     * cache would hand an arm the base run's rows. */
@@ -52,16 +44,30 @@ class ProfileInvarianceSpec extends AnyFunSuite {
   private lazy val base: Map[String, Seq[Row]] =
     names.map(n => n -> rows(spark, n)).toMap
 
+  /** Asserts every query returns the base rows under `conf`. */
+  def check(arm: String, conf: Map[String, String]): Unit = {
+    // an arm equal to the base profile would pass vacuously
+    assert(conf.exists { case (k, v) => spark.conf.get(k) != v },
+      s"$arm sets nothing the bench profile does not already set")
+    val s = spark.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    names.foreach { n =>
+      assert(rows(s, n) == base(n), s"query $n diverges under $arm")
+    }
+  }
+}
+
+class ProfileInvarianceSpec extends AnyFunSuite {
+  private val arms: Seq[(String, Map[String, String])] = Seq(
+    "shuffle.partitions=1" -> Map("spark.sql.shuffle.partitions" -> "1"),
+    "shuffle.partitions=200" -> Map("spark.sql.shuffle.partitions" -> "200"),
+    "64 KiB file splits" -> Map(
+      "spark.sql.files.maxPartitionBytes" -> "64k",
+      "spark.sql.files.openCostInBytes" -> "0"))
+
   arms.foreach { case (arm, conf) =>
     test(s"$arm: every query matches the bench profile row for row") {
-      // an arm equal to the base profile would pass vacuously
-      assert(conf.exists { case (k, v) => spark.conf.get(k) != v },
-        s"$arm sets nothing the bench profile does not already set")
-      val s = spark.newSession()
-      conf.foreach { case (k, v) => s.conf.set(k, v) }
-      names.foreach { n =>
-        assert(rows(s, n) == base(n), s"query $n diverges under $arm")
-      }
+      ProfileInvariance.check(arm, conf)
     }
   }
 }
