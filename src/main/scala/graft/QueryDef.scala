@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * @param oracle  equivalent ANSI SQL for DuckDB over the same parquet tables
   *                (bare table names). None => driver runs a rows-only check
   *                (for ops not expressible in portable SQL, e.g. MinHash-LSH).
-  * @param bench   include in the headline Bench.scala timing set.
+  * @param bench   include in the headline timing set
+  *                ([[SparkEntry.benchQueries]], `BenchTune probe bench`).
   *
   * Cross-engine determinism rules used by every query here:
   *  - every query ends in an ORDER BY over enough columns for a total order;

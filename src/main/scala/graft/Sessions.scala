@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session profile. Every entry point (`Verify`, `Bench`, perfbench,
+/** The one session profile. Every entry point (`Verify`, perfbench,
   * `tools.LoadLogs`, the dev tools) and the test suite build through
   * [[local]], so the plans the correctness gate checks are the plans the
   * benchmark times.
@@ -33,7 +33,7 @@ object Sessions {
       // test-scale shuffles hold a few MB: fewer, fatter partitions beat
       // per-task scheduling overhead, but cores/4 starved the large-large
       // SMJ (r2 j7_large_equi regression). Round-5 re-validation under the
-      // driver's own protocol (full fresh-JVM graft.Bench, 3 runs each at
+      // then-benchmark's protocol (full fresh JVM, 3 runs each at
       // sf0.1): sp=16 medians 3.64s / sp=8 3.53s — indistinguishable
       // inside the ±25% run-to-run noise band (r3-vs-r4 bound), sp=8 had
       // the worst outlier (4.53s). Keep cores/2.

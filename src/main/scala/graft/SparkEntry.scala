@@ -27,6 +27,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     QueryDef.all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  /** Headline subset timed by Bench.scala. */
+  /** Headline subset timed by `BenchTune probe bench` and `headlinebk`. */
   def benchQueries: Seq[String] = QueryDef.all.filter(_.bench).map(_.name)
 }

@@ -154,7 +154,7 @@ object Tables {
   }
 
   /** The frame a bucketed-layout writer must persist for `table` — ONE
-    * definition shared by BenchLegPrep.writeBucketedTables and the specs so
+    * definition shared by BenchTune.writeBucketedTables and the specs so
     * the events adaptation cannot drift: events persists ADAPTED (ts
     * normalized to TimestampType), everything else raw. */
   def bucketedSource(s: SparkSession, sfDir: String, table: String): DataFrame =

@@ -107,10 +107,9 @@ object DedupClusters {
     * spec-pinned on planted clones.
     */
   def minhashClustersCollapsed(docs: DataFrame, numHashes: Int = 32,
-      bands: Int = 8, minEstJaccard: Double = 0.5,
-      family: HashFamily = HashFamily.Md5): DataFrame = {
+      bands: Int = 8, minEstJaccard: Double = 0.5): DataFrame = {
     val (pairs, repMap) =
-      MinHashDedup.candidatePairsCollapsed(docs, numHashes, bands, family)
+      MinHashDedup.candidatePairsCollapsed(docs, numHashes, bands)
     val edges = pairs.filter(col("est_jaccard") >= minEstJaccard)
       .select(col("a"), col("b"))
     // tokenizable representatives only — the same >= 3-token vertex rule

@@ -203,12 +203,10 @@ object IncrementalDedup {
     * `NearDupStream.runSimHash`). Every tokenizable doc fingerprints, so
     * every doc registers bands. */
   def incrementalKeepsSimHash(docs: DataFrame, waveCol: Column,
-      waves: Seq[Int],
-      family: HashFamily = HashFamily.Md5): DataFrame =
+      waves: Seq[Int]): DataFrame =
     keepsBanded(docs, waveCol, waves) { labeled =>
       labeled
-        .select(col("doc_id"), col("wave"),
-          SimHash.simhashOf(col("text"), family).as("fp"))
+        .select(col("doc_id"), col("wave"), SimHash.simhash(col("text")).as("fp"))
         .select(col("doc_id"), col("wave"),
           explode(transform(sequence(lit(0), lit(3)), b =>
             struct(b.as("band_idx"),

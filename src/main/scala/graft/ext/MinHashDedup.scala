@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   *
   * Pipeline (all codegen'd higher-order functions, no UDF, no cross join):
   *   1. shingle: 3-gram shingles of the token stream (distinct)
-  *   2. minhash: k independent seeded hash functions h_i(x) = xxhash64(i, x),
-  *      signature_i = min over shingles — one narrow pass per row
+  *   2. minhash: k hash functions from the md5-affine family
+  *      ([[signature]]), signature_i = min over shingles — one narrow pass
+  *      per row
   *   3. band: split the k-signature into `bands` bands of k/bands rows each;
   *      band key = murmur3 hash of the band slice
   *   4. candidate pairs = equi-join on (band_idx, band_hash) — the shuffle key
@@ -17,7 +18,8 @@ import org.apache.spark.sql.functions._
   *      (doc_id, band) pairs, not documents
   *   5. estimate similarity = fraction of matching signature positions
   *
-  * Deterministic: xxhash64 and murmur3 are stable Spark built-ins.
+  * Deterministic: md5 and murmur3 are stable, and the oracle recomputes
+  * the md5 signatures bit-exactly.
   */
 object MinHashDedup {
 
@@ -49,32 +51,14 @@ object MinHashDedup {
     * DuckDB (md5_number_upper/lower + HUGEINT arithmetic) — `d_minhash
     * _pairs` is a hash-exact gate row, not rows-only. Cost per shingle is
     * one md5 + k multiply-adds, on par with the k seeded xxhash64 calls
-    * of `signatureXx`.
+    * of the native `graft.functions.MinHashSignature`.
     */
   def signature(sh: Column, numHashes: Int): Column =
     graft.functions.Md5MinHashSignature.md5_minhash_signature(sh, numHashes)
 
-  /** xxhash64 family (seeded xxhash64(i, x)) — kept as the zero-allocation
-    * Spark-only alternative and for the HOF-equivalence spec.
-    *
-    * Shape matters: a single `aggregate` fold over the shingles with an
-    * array accumulator. The transposed form — transform over hash indices
-    * with an inner array_min — inlines the whole shingle-construction
-    * subtree into the outer lambda, so Catalyst re-evaluates it once per
-    * hash function (measured 22ms/doc -> 0.4ms/doc for 32 hashes).
-    */
-  def signatureXx(sh: Column, numHashes: Int): Column =
-    graft.functions.MinHashSignature.minhash_signature(sh, numHashes)
-
-  /** Family-dispatched signature — md5 is the oracle-derivable gate
-    * family, xx the throughput family (see [[HashFamily]] scaladoc). */
-  def signatureOf(sh: Column, numHashes: Int, family: HashFamily): Column =
-    family match {
-      case HashFamily.Md5 => signature(sh, numHashes)
-      case HashFamily.Xx  => signatureXx(sh, numHashes)
-    }
-
-  /** HOF formulation of the xx family — kept for the equivalence spec.
+  /** HOF formulation of the seeded-xxhash64 signature (h_i(x) =
+    * xxhash64(i, x)) — the equivalence-spec twin of the native
+    * `graft.functions.MinHashSignature` (SQL `minhash_signature`).
     * Single fold so the shingle subtree evaluates once (the transposed
     * transform-of-array_min form re-evaluates it per hash function —
     * measured 30x slower). */
@@ -135,28 +119,24 @@ object MinHashDedup {
     * (the oracle row groups by raw text, so a collision would also
     * surface as a gate mismatch rather than pass silently).
     */
-  def candidatePairsCollapsed(docs: DataFrame, numHashes: Int, bands: Int,
-      family: HashFamily = HashFamily.Md5): (DataFrame, DataFrame) = {
+  def candidatePairsCollapsed(docs: DataFrame, numHashes: Int, bands: Int)
+      : (DataFrame, DataFrame) = {
     val w = Window.partitionBy(col("fp"))
     val mapped = docs.withColumn("fp", md5(col("text")))
       .withColumn("rep_id", min(col("doc_id")).over(w))
     val reps = mapped.filter(col("doc_id") === col("rep_id"))
       .select(col("doc_id"), col("text"))
-    (candidatePairs(reps, numHashes, bands, family),
+    (candidatePairs(reps, numHashes, bands),
       mapped.select(col("doc_id"), col("rep_id")))
   }
 
   /** Candidate near-dup pairs via banded LSH over a `documents(doc_id, text)`
     * frame. Returns (a, b, est_jaccard) ordered by est_jaccard desc.
-    * `family` selects the signature hash (default md5 so the oracle rows
-    * stay hash-exact; pass [[HashFamily.Xx]] for the throughput path —
-    * everything downstream of the signature is family-agnostic).
     * On corpora with heavy EXACT duplication, use
     * [[candidatePairsCollapsed]] — pair output here is quadratic in
     * clone-group size by contract.
     */
-  def candidatePairs(docs: DataFrame, numHashes: Int, bands: Int,
-      family: HashFamily = HashFamily.Md5): DataFrame = {
+  def candidatePairs(docs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
     // cache() is load-bearing: signatures are higher-order-function
@@ -174,7 +154,7 @@ object MinHashDedup {
       .withColumn("toks", split(col("text"), " "))
       .filter(size(col("toks")) >= 3)
       .select(col("doc_id"),
-        signatureOf(shinglesOfToks(col("toks")), numHashes, family).as("sig"))
+        signature(shinglesOfToks(col("toks")), numHashes).as("sig"))
       .cache()
 
     // the band self-join shuffles ONLY (band_idx, band_hash, doc_id) — ~20
@@ -227,10 +207,9 @@ object MinHashDedup {
     * signature family.
     */
   def incrementalKeeps(docs: DataFrame, waveCol: Column, waves: Seq[Int],
-      numHashes: Int, bands: Int,
-      family: HashFamily = HashFamily.Md5): DataFrame =
+      numHashes: Int, bands: Int): DataFrame =
     IncrementalDedup.keepsBanded(docs, waveCol, waves)(
-      sliceBandify(numHashes, bands, family))
+      sliceBandify(numHashes, bands))
 
   /** [[incrementalKeeps]] under an epoch TTL
     * ([[IncrementalDedup.keepsBandedTtl]] — see its scaladoc for the
@@ -238,16 +217,15 @@ object MinHashDedup {
     * `d_minhash_ttl_reentry` gate re-derives the horizoned fold AND the
     * re-entry consequence in DuckDB. */
   def incrementalKeepsTtl(docs: DataFrame, waveCol: Column, waves: Seq[Int],
-      ttlEpochs: Int, numHashes: Int, bands: Int,
-      family: HashFamily = HashFamily.Md5): DataFrame =
+      ttlEpochs: Int, numHashes: Int, bands: Int): DataFrame =
     IncrementalDedup.keepsBandedTtl(docs, waveCol, waves, ttlEpochs)(
-      sliceBandify(numHashes, bands, family))
+      sliceBandify(numHashes, bands))
 
   /** The signature-slice banding stage shared by the incremental forms
     * (same slice semantics as [[candidatePairs]] and
     * `NearDupStream.minhashBandify`). */
-  private def sliceBandify(numHashes: Int, bands: Int,
-      family: HashFamily): DataFrame => DataFrame = {
+  private def sliceBandify(numHashes: Int, bands: Int)
+      : DataFrame => DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val rowsPerBand = numHashes / bands
     labeled =>
@@ -255,8 +233,7 @@ object MinHashDedup {
         .withColumn("toks", split(col("text"), " "))
         .filter(size(col("toks")) >= 3)
         .select(col("doc_id"), col("wave"),
-          signatureOf(shinglesOfToks(col("toks")), numHashes, family)
-            .as("sig"))
+          signature(shinglesOfToks(col("toks")), numHashes).as("sig"))
         .select(col("doc_id"), col("wave"),
           explode(transform(sequence(lit(0), lit(bands - 1)), b =>
             struct(b.as("band_idx"),

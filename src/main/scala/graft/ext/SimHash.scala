@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** SimHash document fingerprinting (north-star dedup op).
   *
-  * 64-bit simhash: each token hashes to 64 bits (xxhash64); every bit votes
-  * +1/-1; the fingerprint sets bit b iff the vote for b is positive. Documents
-  * with small hamming distance between fingerprints are near-duplicates.
+  * 64-bit simhash: each token hashes to 64 bits (md5, see [[simhash]]);
+  * every bit votes +1/-1; the fingerprint sets bit b iff the vote for b is
+  * positive. Documents with small hamming distance between fingerprints are
+  * near-duplicates.
   *
   * Implemented as composed higher-order functions (one `aggregate` pass over
   * the token array with an array<long> vote accumulator) — stays inside
@@ -32,20 +33,9 @@ object SimHash {
   def simhash(text: Column): Column =
     graft.functions.Md5SimHash64.md5_simhash64(split(text, " "))
 
-  /** xxhash64 token-hash family — the zero-allocation Spark-only
-    * alternative, kept for the HOF-equivalence spec. */
-  def simhashXx(text: Column): Column =
-    graft.functions.SimHash64.simhash64(split(text, " "))
-
-  /** Family-dispatched fingerprint — md5 is the oracle-derivable gate
-    * family, xx the throughput family (see [[HashFamily]] scaladoc). */
-  def simhashOf(text: Column, family: HashFamily): Column =
-    family match {
-      case HashFamily.Md5 => simhash(text)
-      case HashFamily.Xx  => simhashXx(text)
-    }
-
-  /** HOF formulation of the xx family — kept for the equivalence spec. */
+  /** HOF formulation of the xxhash64 token-hash fingerprint — the
+    * equivalence-spec twin of the native `graft.functions.SimHash64`
+    * (SQL `simhash64`). */
   def simhashHof(text: Column): Column = {
     val hashes = transform(split(text, " "), t => xxhash64(t))
     val zero = transform(bitsIdx, _ => lit(0L))
@@ -80,19 +70,16 @@ object SimHash {
   def hamming(a: Column, b: Column): Column =
     call_function("bit_count", a.bitwiseXOR(b))
 
-  def withSimHash(df: DataFrame, text: Column,
-      family: HashFamily = HashFamily.Md5): DataFrame =
-    df.withColumn("simhash", simhashOf(text, family))
+  def withSimHash(df: DataFrame, text: Column): DataFrame =
+    df.withColumn("simhash", simhash(text))
 
   /** Near-dup pairs via 4×16-bit banding: candidates collide on ANY band
     * (pigeonhole: hamming ≤ 3 guarantees a clean band; larger distances are
     * caught with high probability), then exact hamming filters. At scale this
     * is an equi-join on (band_idx, band_bits) — never a cross join.
-    * `family` selects the token hash (default md5 for oracle derivability).
     */
-  def nearDupPairs(docs: DataFrame, maxHamming: Int,
-      family: HashFamily = HashFamily.Md5): DataFrame = {
-    val banded = withSimHash(docs, col("text"), family)
+  def nearDupPairs(docs: DataFrame, maxHamming: Int): DataFrame = {
+    val banded = withSimHash(docs, col("text"))
       .select(col("doc_id"), col("simhash"),
         explode(transform(sequence(lit(0), lit(3)), b =>
           struct(b.as("band_idx"),

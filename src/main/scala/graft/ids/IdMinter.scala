@@ -37,22 +37,6 @@ object IdMinter {
     spark.createDataFrame(indexed, schema)
   }
 
-  /** Mint dense ids keyed by a UNIQUE, narrow column (file path) without
-    * ever moving the payload columns: ids are minted over `select(keyCol)`
-    * only, so the sort carries ~100 bytes/row, and the (key → id) map —
-    * key-cardinality rows, i.e. files per batch — is broadcast-joined back.
-    * The wide rows (whole-file text) stay where the scan put them: the
-    * broadcast hash join streams them with zero exchange.
-    *
-    * The key projection is a second pass over `df`'s source; at file-count
-    * scale that pass reads only the path column and is shuffle-free, vs the
-    * alternative of shuffling the full payload to sort it.
-    */
-  def mintIdsByKey(df: DataFrame, base: Long, idCol: String, keyCol: String): DataFrame = {
-    val idMap = mintIds(df.select(col(keyCol)).distinct(), base, idCol, col(keyCol))
-    df.join(broadcast(idMap), Seq(keyCol))
-  }
-
   /** Dictionary-encode a name column (reference problem_data map, I2):
     * returns a (name, id) dimension where previously-seen names keep their
     * ids (from `existing`) and new names extend densely past the max.

@@ -57,8 +57,7 @@ object EcjPipeline {
       .select($"value", $"_metadata.file_path".as("path"))
     // ids + sizes driver-side via the shared FileIndex helper (paths in
     // _metadata's rendering, stat-fallback included — see
-    // LogPipeline.listStatuses): dense by sorted path, identical to the
-    // previous distributed mintIdsByKey outcome
+    // LogPipeline.listStatuses): dense by sorted path
     val statuses = LogPipeline.listStatuses(spark, raw)
     val idOf = statuses.map(_._1).zipWithIndex
       .map { case (p, i) => (p, baseId + i + 1L) }.toMap

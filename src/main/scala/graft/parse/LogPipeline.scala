@@ -17,10 +17,9 @@ import org.apache.spark.sql.functions._
   *    come from file metadata columns, not driver-side File calls;
   *  - `.gz` logs decompress transparently in the source (no gunzip shell-out,
   *    reference src/db_loader.clj:339-341);
-  *  - ids are minted deterministically per batch (IdMinter.mintIdsByKey):
-  *    the sort sees only the path column (file-level cardinality AND
-  *    file-path-sized rows), and the (path → id) map broadcast-joins back,
-  *    so file payloads never shuffle;
+  *  - ids are minted deterministically per batch, driver-side, from the
+  *    scan's own sorted file listing (dense by path, no Spark job), and the
+  *    (path → id) map broadcast-joins back, so file payloads never shuffle;
   *  - problem ids come from dictionary encoding (reference problem_data map,
   *    src/db_loader.clj:82-84) as a broadcast-joined dimension.
   */
@@ -56,10 +55,6 @@ object LogPipeline {
 
   private val DateFmt = "yyyy-MM-dd HH:mm:ss"
 
-  /** One parsed file with its provenance + minted id. */
-  private final case class FileRun(
-      id: Long, path: String, mtime: String, run: ParsedRun)
-
   /** Flat single-pass parse output: one narrow row per fact, tagged by
     * `kind` (0 = file header, 1 = experiment param, 2 = generation cell,
     * 3 = summary). Unused fields are ""/0/false — the columnar cache
@@ -90,51 +85,6 @@ object LogPipeline {
     }
   }
 
-  /** Read + parse every `*.log` / `*.log.gz` under `logDir` — no ids yet:
-    * (path, mtime, run). One scan, zero shuffles.
-    */
-  def parseRaw(spark: SparkSession, logDir: String, cfg: LoadConfig = LoadConfig())
-      : Dataset[(String, String, ParsedRun)] = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").text(logDir)
-      .select(
-        $"value",
-        $"_metadata.file_path".as("path"),
-        date_format($"_metadata.file_modification_time", DateFmt).as("mtime"))
-      .as[(String, String, String)]
-      .map { case (content, path, mtime) =>
-        (path, mtime, LogParser.parseClojush(content, cfg.skipNils))
-      }
-  }
-
-  /** Attach dense deterministic ids: path → id minted from a collected,
-    * sorted path list and broadcast-joined back — whole-file payloads /
-    * parsed structs never enter a sort or shuffle. Collecting paths adds
-    * no new scale bound: Spark's file-source listing already materializes
-    * every FileStatus in the driver's InMemoryFileIndex, so a path list is
-    * strictly smaller than state the scan itself holds. (The distributed
-    * alternative for unbounded keys is IdMinter.mintIdsByKey.) The id
-    * branch re-traverses `noId` once, so callers that can should cache it
-    * first (`load` does).
-    */
-  def withIds(noId: Dataset[(String, String, ParsedRun)], base: Long)
-      : Dataset[(Long, String, String, ParsedRun)] = {
-    val spark = noId.sparkSession
-    import spark.implicits._
-    val df = noId.toDF("path", "mtime", "run")
-    val paths = df.select($"path").as[String].collect().sorted
-    val idMap = paths.zipWithIndex.toSeq
-      .map { case (p, i) => (p, base + i + 1L) }.toDF("path", "id")
-    df.join(broadcast(idMap), Seq("path"))
-      .select($"id", $"path", $"mtime", $"run")
-      .as[(Long, String, String, ParsedRun)]
-  }
-
-  /** Read + parse every `*.log` / `*.log.gz` under `logDir`, with ids. */
-  def parse(spark: SparkSession, logDir: String, cfg: LoadConfig = LoadConfig())
-      : Dataset[(Long, String, String, ParsedRun)] =
-    withIds(parseRaw(spark, logDir, cfg), cfg.baseId)
-
   /** Full load: the four Clojush tables (reference src/db_loader.clj:36-39).
     * Ids AND the problem dictionary are minted driver-side from
     * the scan's file listing, rendered as `_metadata.file_path` renders
@@ -142,7 +92,7 @@ object LogPipeline {
     * spaces and `%`) at zero extra Spark jobs,
     * since the file-source listing already materialized every FileStatus
     * in the driver's InMemoryFileIndex. The corpus is then scanned, parsed
-    * and flattened exactly once (see [[tablesFromParsed]]).
+    * and flattened exactly once (see [[tablesFromFlat]]).
     */
   def load(spark: SparkSession, logDir: String, cfg: LoadConfig = LoadConfig())
       : LoadedTables = {
@@ -298,24 +248,6 @@ object LogPipeline {
       parts(parts.length - 2)
     }
 
-  /** The four tables from an already-parsed Dataset — shared by the batch
-    * `load` and the streaming per-micro-batch path (IngestStream), so row
-    * semantics cannot diverge between them. `parsed` is traversed ONCE:
-    * the parse output is flattened to narrow tagged rows ([[FlatRow]]) and
-    * cached; each output table is a filter + projection over that cache.
-    * Call `release()` once the tables are consumed.
-    *
-    * @param prebuiltProblemDim a COMPLETE (problem_name, problem_id)
-    *        dictionary covering every name in `parsed` — callers that
-    *        already hold the path list build it driver-side for free
-    *        (`load`, IngestStream); None dictionary-encodes fresh
-    */
-  def tablesFromParsed(
-      parsed: Dataset[(Long, String, String, ParsedRun)],
-      cfg: LoadConfig,
-      prebuiltProblemDim: Option[DataFrame] = None): LoadedTables =
-    tablesFromFlat(flatten(parsed), cfg, prebuiltProblemDim)
-
   /** The four tables from an already-flattened Dataset — the common tail of
     * the wholetext, chunked-big-file and streaming paths. Caches `flat`;
     * `release()` unpersists it. */
@@ -378,11 +310,14 @@ object LogPipeline {
     * `index.clj` next to the logs (driver-side — one tiny file per folder),
     * join command-map argmaps to runs by filename-embedded uuid, and emit the
     * extra `experiment` EAV rows.
+    *
+    * @param experiments [[load]]'s `experiments` table (its `id` and
+    *        `logfile_location` columns)
     */
   def sidecarParams(
       spark: SparkSession,
       logDir: String,
-      parsed: Dataset[(Long, String, String, ParsedRun)]): DataFrame = {
+      experiments: DataFrame): DataFrame = {
     import spark.implicits._
     val indexFile = new java.io.File(logDir, "index.clj")
     val cms: Seq[CommandMap] =
@@ -394,9 +329,10 @@ object LogPipeline {
 
     val sidecar = cms.flatMap(cm => cm.argmap.map { case (k, v) => (cm.uuid, k, v) })
       .toDF("uuid", "parameter", "value")
-    val runs = parsed.map { case (id, path, _, _) =>
-      (id, LogParser.uuidFromFilename(path).getOrElse(""))
-    }.toDF("id", "uuid")
+    val runs = experiments.select($"id", $"logfile_location").as[(Long, String)]
+      .map { case (id, path) =>
+        (id, LogParser.uuidFromFilename(path).getOrElse(""))
+      }.toDF("id", "uuid")
 
     runs.join(broadcast(sidecar), Seq("uuid"))
       .select(col("id"), col("parameter"), col("value"))

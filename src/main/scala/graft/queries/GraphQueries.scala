@@ -38,8 +38,8 @@ object GraphQueries {
     md5EdgesUncached(docs).cache()
 
   /** The md5 link-graph derivation WITHOUT the cache — for callers that
-    * persist the edge list to an at-rest layout (Bench's EdgeStore leg)
-    * instead of iterating over it in-session. */
+    * persist the edge list to an at-rest layout (the EdgeStore prep of
+    * `BenchTune headlinebk`) instead of iterating over it in-session. */
   def md5EdgesUncached(
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._

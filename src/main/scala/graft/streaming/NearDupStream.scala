@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ext.{HashFamily, MinHashDedup}
+import graft.ext.MinHashDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,11 +42,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object NearDupStream {
 
-  /** MinHash-LSH family: `numHashes`-long signatures split into `bands`
-    * CSV-rendered slices. `family` selects the signature hash (md5 gate
-    * default / xx throughput — see [[HashFamily]]); the store's band keys
-    * are family-specific, so a store must be read and written under ONE
-    * family for its lifetime. */
+  /** MinHash-LSH family: `numHashes`-long md5-affine signatures
+    * ([[MinHashDedup.signature]]) split into `bands` CSV-rendered slices. */
   def run(
       spark: SparkSession,
       docsDir: String,
@@ -54,18 +51,17 @@ object NearDupStream {
       storeDir: String,
       numHashes: Int = 32,
       bands: Int = 8,
-      availableNow: Boolean = true,
-      family: HashFamily = HashFamily.Md5)(
+      availableNow: Boolean = true)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     runBanded(spark, docsDir, checkpointDir, storeDir, availableNow)(
-      minhashBandify(numHashes, bands, family))(sink)
+      minhashBandify(numHashes, bands))(sink)
   }
 
   /** The MinHash banding stage (shared by [[run]] and the torture
     * spec's direct [[processBanded]] driver). */
-  private[streaming] def minhashBandify(numHashes: Int, bands: Int,
-      family: HashFamily): DataFrame => DataFrame = { docs =>
+  private[streaming] def minhashBandify(numHashes: Int, bands: Int)
+      : DataFrame => DataFrame = { docs =>
     val rowsPerBand = numHashes / bands
     // materialize the signature ONCE PER DOC before banding: without the
     // barrier CollapseProject inlines the signature chain into the
@@ -73,8 +69,8 @@ object NearDupStream {
     val withSig = docs
       .withColumn("toks", split(col("value"), " "))
       .filter(size(col("toks")) >= 3)
-      .select(col("path"), MinHashDedup.signatureOf(
-        MinHashDedup.shinglesOfToks(col("toks")), numHashes, family).as("sig"))
+      .select(col("path"), MinHashDedup.signature(
+        MinHashDedup.shinglesOfToks(col("toks")), numHashes).as("sig"))
       .localCheckpoint(true)
     withSig
       .select(col("path"), explode(transform(
@@ -96,21 +92,18 @@ object NearDupStream {
       docsDir: String,
       checkpointDir: String,
       storeDir: String,
-      availableNow: Boolean = true,
-      family: HashFamily = HashFamily.Md5)(
+      availableNow: Boolean = true)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     runBanded(spark, docsDir, checkpointDir, storeDir, availableNow)(
-      simhashBandify(family))(sink)
+      simhashBandify)(sink)
 
   /** The SimHash banding stage (shared by [[runSimHash]] and the
     * batch-equivalence spec's direct [[processBanded]] driver). */
-  private[streaming] def simhashBandify(family: HashFamily):
-      DataFrame => DataFrame = { docs =>
+  private[streaming] def simhashBandify: DataFrame => DataFrame = { docs =>
     // same barrier rationale as the MinHash family: fingerprint once per
     // doc, not once per band
     val withFp = docs
-      .select(col("path"),
-        graft.ext.SimHash.simhashOf(col("value"), family).as("fp"))
+      .select(col("path"), graft.ext.SimHash.simhash(col("value")).as("fp"))
       .localCheckpoint(true)
     withFp
       .select(col("path"), explode(transform(

@@ -1,12 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev harness: the full-surface sweep, one generic per-query probe and the
-  * few probes that still carry an open number. The benchmark of record is
-  * `perfbench/`. A probe whose A/B
-  * is settled is deleted once its result is recorded in BENCH_SCALE.json
-  * (CHANGES.md lists each deleted probe beside its key).
+/** Dev harness: the full-surface sweep, one generic per-query probe, the
+  * bucketed-layout rewrite and its probe, and the LSH guard margin. The
+  * benchmark of record is `perfbench/`. A probe whose A/B is settled is
+  * deleted once its result is recorded in BENCH_SCALE.json (CHANGES.md
+  * lists each deleted probe beside its key).
   *
   * Usage: `runMain graft.tools.BenchTune <probe> [arg]` — see [[Probes]].
   * Reads SPARK_GRAFT_SF_DIR (the corpus directory),
@@ -19,11 +19,12 @@ object BenchTune {
   /** Probe name → argument synopsis, in the order usage lists them. */
   val Probes: Seq[(String, String)] = Seq(
     "all" -> "", "probe" -> "<q1,q2,...>|bench", "headlinebk" -> "[q1,q2,...]",
-    "bucketwrite" -> "[layout]", "lshmargin" -> "", "cosine" -> "",
-    "a6" -> "", "minhash" -> "", "recallprobe" -> "", "etl" -> "[nLogs]",
-    "etlsweep" -> "", "etlprofile" -> "")
+    "bucketwrite" -> "[layout]", "lshmargin" -> "")
 
-  /** Single-pass wall time of EVERY declared query (cold then warm).
+  /** Single-pass wall time of EVERY declared query, forced through
+    * [[graft.BenchProtocol.force]] (the noop sink) like every other
+    * measuring tool — `count()` strips aggregates and sorts, so sweeps
+    * before BENCH_SCALE `allquery_noop_force_break` are not comparable.
     * SPARK_GRAFT_SKIP=q1,q2 names queries to skip — for corpora where a
     * gate-form query is KNOWN infeasible by contract (x4_ann_lsh_pairs'
     * fixed 8-bit bands at ≥200k vectors spill unboundedly; its scale
@@ -48,7 +49,7 @@ object BenchTune {
       if (skip(n)) println(f"[all] $n%-24s  SKIPPED (SPARK_GRAFT_SKIP)")
       else {
         val t0 = System.nanoTime()
-        val res = try { fn(spark, sfDir).count(); "" }
+        val res = try { graft.BenchProtocol.force(fn(spark, sfDir)); "" }
           catch {
             // d_semdedup_auto gates the FLAT-assignment default, which by
             // contract only exists below CoarseDispatchK — at sweep scales
@@ -183,7 +184,7 @@ object BenchTune {
       println(f"[headline-bk] prep $what%-18s ${(System.nanoTime() - t0) / 1e9}%8.1f s (untimed)")
       r
     }
-    prep("bucketed_tables") { BenchLegPrep.writeBucketedTables(spark, sfDir, "orderkey") }
+    prep("bucketed_tables") { writeBucketedTables(spark, sfDir, "orderkey") }
     prep("edge_store") {
       graft.queries.GraphQueries.writeBenchEdgeStore(spark, sfDir) }
     val bm25Terms = prep("bm25_postings") {
@@ -231,190 +232,35 @@ object BenchTune {
     }
   }
 
-  /** Compare native CosineSim vs HOF cosine on a full self-join scan. */
-  def cosineShootout(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val emb = graft.Tables.embeddings(spark, sfDir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("ev"))
-      .cache()
-    emb.count()
-    val q = emb.filter($"vec_id" < 8).select($"vec_id".as("qid"), $"ev".as("qv"))
-    def time(tag: String, c: (Column, Column) => Column): Unit = {
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        emb.crossJoin(broadcast(q)).select(sum(c($"ev", $"qv"))).collect()
-        println(f"[$tag] iter$i ${(System.nanoTime() - t0) / 1e9}%.3f s")
+  /** Drop-and-rewrite the bucketed catalog tables for `layout` over the
+    * corpus at `sfDir` — ALWAYS a fresh write, never reuse: the test
+    * corpus regenerates at the same path between rounds, and a stale
+    * bucketed copy would silently serve old rows (dirTag only disambiguates
+    * PATHS, not generations). Shared by the bucketwrite probe and
+    * [[headlineBk]]. */
+  def writeBucketedTables(spark: SparkSession,
+      sfDir: String, layout: String): Unit = {
+    val keys = graft.Tables.BucketedLayouts(layout)
+    keys.foreach { case (table, key) =>
+      val t = graft.Tables.bucketedName(layout, table, sfDir)
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      val loc = java.nio.file.Paths.get("spark-warehouse", t)
+      if (java.nio.file.Files.exists(loc)) {
+        import scala.jdk.CollectionConverters._
+        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
+          .foreach(java.nio.file.Files.delete)
       }
+      val t0 = System.nanoTime()
+      // events persists ADAPTED and sorted by (user_id, ts) — bucketed
+      // event reads skip the ts dispatch and arrive in per-user event
+      // order (Tables.BucketedLayouts scaladoc); the source frame is the
+      // shared Tables.bucketedSource definition
+      val sortCols = if (table == "events") Seq(key, "ts") else Seq(key)
+      graft.sources.Bucketing.writeBucketedSorted(
+        graft.Tables.bucketedSource(spark, sfDir, table), t, key, sortCols, 32)
+      println(f"[bucketwrite] $t by $key " +
+        f"${(System.nanoTime() - t0) / 1e9}%.2f s (32 buckets)")
     }
-    time("hof", graft.queries.Similarity.cosineHof)
-    time("native", graft.queries.Similarity.cosine)
-  }
-
-  /** A/B the a6_revenue_by_nation join order: current (join all, aggregate
-    * once at the end) vs partial-aggregating lineitem revenue by l_orderkey
-    * BELOW the orders join (decimal sums are exact, so two-level summing is
-    * bit-identical). The pre-agg shuffles one (orderkey, decimal, long) row
-    * per order instead of one wide row per lineitem through the join.
-    */
-  def a6Shootout(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    def rev = ($"l_extendedprice" * (lit(1) - $"l_discount")).cast("decimal(18,6)")
-    def byNation(df: DataFrame) = df
-      .join(graft.Tables.orders(spark, sfDir), $"l_orderkey" === $"o_orderkey")
-      .join(graft.Tables.customer(spark, sfDir), $"o_custkey" === $"c_custkey")
-      .join(broadcast(graft.Tables.nation(spark, sfDir)),
-        $"c_nationkey" === $"n_nationkey")
-      .groupBy($"n_name")
-    def current = byNation(graft.Tables.lineitem(spark, sfDir))
-      .agg(sum(rev).cast("double").as("revenue"), count(lit(1)).as("n_items"))
-      .orderBy($"n_name")
-    def preAgg = byNation(graft.Tables.lineitem(spark, sfDir)
-        .groupBy($"l_orderkey")
-        .agg(sum(rev).as("o_rev"), count(lit(1)).as("o_items")))
-      .agg(sum($"o_rev").cast("double").as("revenue"),
-        sum($"o_items").as("n_items"))
-      .orderBy($"n_name")
-    // results must be identical before timings mean anything
-    println(s"[a6] results identical = ${current.collect().toSeq == preAgg.collect().toSeq}")
-    def med(tag: String, f: => DataFrame): Unit = {
-      val times = (1 to 5).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime(); f.collect(); (System.nanoTime() - t0) / 1e9
-      }.sorted
-      println(f"[a6] $tag%-8s median=${times(2)}%.3f min=${times.head}%.3f")
-    }
-    for (_ <- 1 to 2) { med("current", current); med("preagg", preAgg) }
-  }
-
-  /** Profile the MinHash LSH stages: banded row count, raw candidate pairs. */
-  def minhashProbe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val docs = graft.Tables.documents(spark, sfDir)
-    val sig = docs.filter(size(split($"text", " ")) >= 3)
-      .select($"doc_id",
-        graft.ext.MinHashDedup.signature(
-          graft.ext.MinHashDedup.shingles($"text"), 32).as("sig")).cache()
-    var t0 = System.nanoTime()
-    println(s"[probe] docs=${sig.count()} sigTime=${(System.nanoTime()-t0)/1e9}")
-    val banded = sig.select($"doc_id",
-      explode(transform(sequence(lit(0), lit(7)), b =>
-        struct(b.as("band_idx"),
-          hash(slice($"sig", b * 4 + 1, lit(4))).as("band_hash")))).as("band"))
-      .select($"doc_id", $"band.band_idx", $"band.band_hash").cache()
-    t0 = System.nanoTime()
-    println(s"[probe] banded=${banded.count()} t=${(System.nanoTime()-t0)/1e9}")
-    val buckets = banded.groupBy($"band_idx", $"band_hash").count()
-    println("[probe] top buckets:")
-    buckets.orderBy($"count".desc).limit(5).collect()
-      .foreach(r => println(s"[probe]   ${r.getLong(2)}"))
-    t0 = System.nanoTime()
-    val pairs = banded.as("a").join(banded.as("b"),
-      Seq("band_idx", "band_hash")).filter($"a.doc_id" < $"b.doc_id")
-    println(s"[probe] rawPairs=${pairs.count()} t=${(System.nanoTime()-t0)/1e9}")
-  }
-
-  /** Stage-by-stage wall time of d_minhash_recall's plan pieces. */
-  def recallProbe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[probe] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-    }
-    val docs = graft.Tables.documents(spark, sfDir).filter($"doc_id" < 600)
-    t("docs count") { docs.count() }
-    val cand = t("candidatePairs build+count") {
-      val c = graft.ext.MinHashDedup.candidatePairs(docs, 32, 8)
-        .select($"a", $"b", lit(true).as("found"))
-      c.count(); c
-    }
-    val sh = t("shingles checkpoint") {
-      docs.withColumn("toks", split($"text", " "))
-        .filter(size($"toks") >= 3)
-        .select($"doc_id",
-          graft.queries.DedupQueries.shinglesOfToks($"toks").as("sh"))
-        .localCheckpoint(true)
-    }
-    val a = sh.select($"doc_id".as("a"), $"sh".as("sha"))
-    val b = sh.select($"doc_id".as("b"), $"sh".as("shb"))
-    val strong = t("exact pair scan") {
-      val s = a.join(broadcast(b), $"a" < $"b")
-        .select($"a", $"b",
-          round(size(array_intersect($"sha", $"shb")).cast("double") /
-            size(array_union($"sha", $"shb")), 6).as("jaccard"))
-        .filter($"jaccard" >= 0.9)
-      s.count(); s
-    }
-    // the two single-intersect forms: plain, then size-pruned (Jaccard ≥
-    // 0.9 needs min(|A|,|B|) ≥ 0.9·max(|A|,|B|))
-    def singleIntersect(pruned: Boolean): Long = {
-      val aa = sh.select($"doc_id".as("a"), $"sh".as("sha"), size($"sh").as("na"))
-      val bb = sh.select($"doc_id".as("b"), $"sh".as("shb"), size($"sh").as("nb"))
-      val on = $"a" < $"b" &&
-        (if (pruned) least($"na", $"nb") >= greatest($"na", $"nb") * 0.899
-         else lit(true))
-      aa.join(broadcast(bb), on)
-        .select($"a", $"b", $"na", $"nb",
-          size(array_intersect($"sha", $"shb")).as("inter"))
-        .select($"a", $"b",
-          round($"inter".cast("double") / ($"na" + $"nb" - $"inter"), 6).as("jaccard"))
-        .filter($"jaccard" >= 0.9).count()
-    }
-    t("exact pair scan, single-intersect") { singleIntersect(pruned = false) }
-    t("exact pair scan, size-pruned") { singleIntersect(pruned = true) }
-    t("left join + order") {
-      strong.join(cand, Seq("a", "b"), "left")
-        .select($"a", $"b", $"jaccard",
-          coalesce($"found", lit(false)).as("recalled"))
-        .orderBy($"a", $"b").count()
-    }
-  }
-
-  /** ETL throughput: `nLogs` synthetic Clojush logs, the full
-    * LogPipeline.load + count of all four tables, twice. The reference
-    * processes one log per sequential JVM subprocess; this measures the
-    * parallel file-per-task path. */
-  def etlThroughput(spark: SparkSession, nLogs: Int): Unit = {
-    val glob = BenchLegPrep.genEtlLogs(nLogs)
-    (1 to 2).foreach { iter =>
-      val (rows, sec) = BenchLegPrep.timedLoad(spark, glob)
-      println(f"[etl] iter$iter $nLogs logs, $rows rows in $sec%.2f s " +
-        f"(${nLogs / sec}%.0f logs/s)")
-    }
-  }
-
-  /** ETL throughput vs shuffle-partition count (the load path's shuffles
-    * are file-count scale, so it wants far fewer than the query engine).
-    */
-  def etlShuffleSweep(spark: SparkSession, nLogs: Int = 500): Unit = {
-    val glob = BenchLegPrep.genEtlLogs(nLogs)
-    Seq(4, 8, 16).foreach { sp =>
-      spark.conf.set("spark.sql.shuffle.partitions", sp.toString)
-      BenchLegPrep.timedLoad(spark, glob) // warm
-      val secs = (1 to 2).map(_ => BenchLegPrep.timedLoad(spark, glob)._2)
-      println(f"[etlsweep] sp=$sp%-3d best=${nLogs / secs.min}%.0f logs/s")
-    }
-  }
-
-  /** Stage-by-stage timing of one warm load (JIT warmed by 3 full loads). */
-  def etlProfile(spark: SparkSession, nLogs: Int = 200): Unit = {
-    val glob = BenchLegPrep.genEtlLogs(nLogs)
-    (1 to 3).foreach(_ => BenchLegPrep.timedLoad(spark, glob))
-    def t[A](tag: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[prof] $tag%-28s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-    }
-    val tables = t("load (plan + driver-side ids/dim)") {
-      graft.parse.LogPipeline.load(spark, glob)
-    }
-    t("experiments.count (flat fill)")(tables.experiments.count())
-    t("experiment.count")(tables.experiment.count())
-    t("generations.count")(tables.generations.count())
-    t("summary.count")(tables.summary.count())
-    tables.release()
   }
 
   private def namesArg(arg: Option[String]): Seq[String] =
@@ -435,16 +281,9 @@ object BenchTune {
         run("query-probe")(probe(_, "probe", names, graft.SparkEntry.queries, sfDir))
       case "headlinebk" => run("headline-bk-probe")(headlineBk(_, sfDir, namesArg(arg)))
       case "bucketwrite" =>
-        run("bucket-write")(BenchLegPrep.writeBucketedTables(_, sfDir,
+        run("bucket-write")(writeBucketedTables(_, sfDir,
           arg.getOrElse("orderkey")))
       case "lshmargin" => run("lsh-margin")(lshMargin(_, sfDir))
-      case "cosine" => run("cosine-shootout")(cosineShootout(_, sfDir))
-      case "a6" => run("a6-shootout")(a6Shootout(_, sfDir))
-      case "minhash" => run("minhash-probe")(minhashProbe(_, sfDir))
-      case "recallprobe" => run("recallprobe")(recallProbe(_, sfDir))
-      case "etl" => run("etl-bench")(etlThroughput(_, arg.fold(500)(_.toInt)))
-      case "etlsweep" => run("etl-sweep")(etlShuffleSweep(_))
-      case "etlprofile" => run("etl-profile")(etlProfile(_))
       case other =>
         System.err.println(s"unknown probe '$other'; probes:\n" +
           Probes.map { case (n, a) => s"  $n $a".stripTrailing }.mkString("\n"))

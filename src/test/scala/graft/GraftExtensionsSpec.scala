@@ -47,7 +47,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val viaCol = Seq("hello world spark").toDF("text")
-      .select(graft.ext.SimHash.simhashXx($"text")).head().getLong(0)
+      .select(graft.functions.SimHash64.simhash64(split($"text", " ")))
+      .head().getLong(0)
     assert(viaSql == viaCol)
   }
 

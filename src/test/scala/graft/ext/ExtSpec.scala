@@ -11,22 +11,20 @@ class ExtSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  test("MinHash-LSH surfaces planted near-duplicates first (both families)") {
+  test("MinHash-LSH surfaces planted near-duplicates first") {
     val base = "the quick brown fox jumps over the lazy dog again and again " * 5
     val nearDup = base.replace("lazy", "sleepy") // one token changed
     val unrelated = "completely different words forming another document " +
       "with nothing shared at all between the two texts " * 3
     val docs = Seq((0L, base), (1L, nearDup), (2L, unrelated), (3L, base + " tail"))
       .toDF("doc_id", "text")
-    for (family <- Seq(HashFamily.Md5, HashFamily.Xx)) {
-      val pairs = MinHashDedup
-        .candidatePairs(docs, numHashes = 32, bands = 8, family)
-        .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-      assert(pairs.contains((0L, 1L)), s"$family: near-dup pair must collide")
-      assert(pairs.contains((0L, 3L)), s"$family")
-      assert(pairs((0L, 1L)) > 0.5, s"$family")
-      assert(!pairs.contains((0L, 2L)) || pairs((0L, 2L)) < 0.2, s"$family")
-    }
+    val pairs = MinHashDedup
+      .candidatePairs(docs, numHashes = 32, bands = 8)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    assert(pairs.contains((0L, 1L)), "near-dup pair must collide")
+    assert(pairs.contains((0L, 3L)))
+    assert(pairs((0L, 1L)) > 0.5)
+    assert(!pairs.contains((0L, 2L)) || pairs((0L, 2L)) < 0.2)
   }
 
   test("collapse-first pairs equal representative-level pairs on a cloned corpus") {
@@ -64,7 +62,7 @@ class ExtSpec extends AnyFunSuite {
       .filter(col("doc_id") < 50)
     val sh = MinHashDedup.shingles(col("text"))
     val both = docs.select(
-      MinHashDedup.signatureXx(sh, 32).as("native_xx"),
+      graft.functions.MinHashSignature.minhash_signature(sh, 32).as("native_xx"),
       MinHashDedup.signatureHof(sh, 32).as("hof_xx"),
       MinHashDedup.signature(sh, 32).as("native_md5"),
       MinHashDedup.signatureHofMd5(sh, 32).as("hof_md5")).collect()
@@ -90,7 +88,8 @@ class ExtSpec extends AnyFunSuite {
   test("native SimHash64s are bit-identical to their HOF folds (both families)") {
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 50)
-    docs.select(SimHash.simhashXx(col("text")).as("native_xx"),
+    docs.select(
+      graft.functions.SimHash64.simhash64(split(col("text"), " ")).as("native_xx"),
       SimHash.simhashHof(col("text")).as("hof_xx"),
       SimHash.simhash(col("text")).as("native_md5"),
       SimHash.simhashHofMd5(col("text")).as("hof_md5"))
@@ -108,12 +107,10 @@ class ExtSpec extends AnyFunSuite {
     val near = unit * 9 + unit.replace("zeta", "rho")
     val df = Seq((0L, base.trim), (1L, near.trim),
       (2L, ("other thing entirely unrelated words " * 10).trim)).toDF("doc_id", "text")
-    for (family <- Seq(HashFamily.Md5, HashFamily.Xx)) {
-      val pairs = SimHash.nearDupPairs(df, maxHamming = 16, family)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      assert(pairs.contains((0L, 1L)), s"$family")
-      assert(!pairs.contains((0L, 2L)), s"$family")
-    }
+    val pairs = SimHash.nearDupPairs(df, maxHamming = 16)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.contains((0L, 1L)))
+    assert(!pairs.contains((0L, 2L)))
   }
 
   test("SemDedup drops the near-identical twin, keeps the canonical id") {

@@ -79,8 +79,8 @@ class LogPipelineSpec extends AnyFunSuite {
   }
 
   test("sidecar EDN uuid join emits extra EAV rows (S4/J6)") {
-    val parsed = LogPipeline.parse(spark, dir.toString + "/*.log*")
-    val extra = LogPipeline.sidecarParams(spark, dir.toString, parsed).collect()
+    val extra = LogPipeline.sidecarParams(spark, dir.toString, tables.experiments)
+      .collect()
       .map(r => (r.getString(1), r.getString(2))).toSet
     assert(extra == Set("max-generations" -> "100", "seed" -> "77"))
   }
@@ -158,19 +158,21 @@ class LogPipelineSpec extends AnyFunSuite {
     // the r2 judge's #1 scale-killer: row_number over an unpartitioned
     // window dragged every whole-file row through ONE task. The fixed plan
     // must contain NO window at all, and the (path → id) map must come back
-    // via broadcast so the payload side streams with zero exchange.
-    val p = LogPipeline.parse(spark, dir.toString + "/*.log*")
-      .queryExecution.executedPlan.toString
+    // via broadcast so the payload side streams with zero exchange. The
+    // generations table joins nothing else, so its one broadcast is the
+    // id map's (the cached parse plan prints inside its scan).
+    val p = tables.generations.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), s"global window re-introduced:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"id map must broadcast back:\n$p")
   }
 
   test("ids are stable across sessions (I1)") {
-    val a = LogPipeline.parse(spark, dir.toString + "/*.log*")
-      .collect().map(t => (t._1, t._2)).toSet
-    val b = LogPipeline.parse(
-      spark.newSession(), dir.toString + "/*.log*")
-      .collect().map(t => (t._1, t._2)).toSet
+    def ids(t: LogPipeline.LoadedTables) =
+      try t.experiments.select("id", "logfile_location").collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+      finally t.release()
+    val a = ids(LogPipeline.load(spark, dir.toString + "/*.log*"))
+    val b = ids(LogPipeline.load(spark.newSession(), dir.toString + "/*.log*"))
     assert(a == b)
   }
 }

@@ -383,7 +383,7 @@ class EpochTortureSpec extends AnyFunSuite {
       (b, id, st, sink) => DedupStream.processBatch(b, id, st, sink)),
     SinkMember("neardup", dedupDocBatches,
       (b, id, st, sink) => NearDupStream.processBanded(b, id, st,
-        NearDupStream.minhashBandify(32, 8, graft.ext.HashFamily.Md5),
+        NearDupStream.minhashBandify(32, 8),
         sink)),
     SinkMember("semdedup", semVecBatches,
       (b, id, st, sink) =>
@@ -457,7 +457,7 @@ class EpochTortureSpec extends AnyFunSuite {
   test("seen-store compaction killed at EVERY step — readBelow stays " +
       "consistent, recovery converges, verdicts unchanged, leaks collected") {
     val bandify =
-      NearDupStream.minhashBandify(32, 8, graft.ext.HashFamily.Md5)
+      NearDupStream.minhashBandify(32, 8)
     val noSink = (_: DataFrame, _: Long) => ()
     def build(st: String): Unit = (0 to 2).foreach(i =>
       NearDupStream.processBanded(

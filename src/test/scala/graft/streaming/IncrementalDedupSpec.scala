@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import graft.{SparkTestSession, Tables}
-import graft.ext.{HashFamily, IncrementalDedup, MinHashDedup}
+import graft.ext.{IncrementalDedup, MinHashDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -65,7 +65,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       NearDupStream.processBanded(
         streamed.filter($"wave" === w).select($"value", $"path"),
         w.toLong, store,
-        NearDupStream.minhashBandify(32, 8, HashFamily.Md5), sink)
+        NearDupStream.minhashBandify(32, 8), sink)
 
     val streamKept = (for ((id, paths) <- keptPaths.toSeq; p <- paths)
       yield (p.stripPrefix("d").toLong, id.toInt)).toSet
@@ -98,7 +98,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       NearDupStream.processBanded(
         streamed.filter($"wave" === w).select($"value", $"path"),
         w.toLong, store,
-        NearDupStream.simhashBandify(HashFamily.Md5), sink)
+        NearDupStream.simhashBandify, sink)
     val streamKept = (for ((id, paths) <- keptPaths.toSeq; p <- paths)
       yield (p.stripPrefix("d").toLong, id.toInt)).toSet
     assert(streamKept == batchKept,

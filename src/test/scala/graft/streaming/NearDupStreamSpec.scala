@@ -144,7 +144,7 @@ class NearDupStreamSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val bandify =
-      NearDupStream.minhashBandify(32, 8, graft.ext.HashFamily.Md5)
+      NearDupStream.minhashBandify(32, 8)
     val topic2 = ("orchestra rehearsals feature brass woodwind strings " +
       "percussion sections tuning carefully before the conductor arrives " +
       "onstage for tonight ") * 5
