@@ -172,14 +172,6 @@ object Bpe {
         s"replace($acc, '$Boundary${m.l}$BB${m.r}$Boundary', " +
           s"'$Boundary${m.merged}$Boundary')")
 
-  /** DuckDB mirror of [[tokenCount]]. */
-  def tokenCountSql(textExpr: String,
-      merges: Seq[Merge] = FixedMerges): String = {
-    val s = segmentSql(textExpr, merges)
-    s"((length($s) - length(replace($s, '$BB', ''))) // 2 - 1" +
-      s" - (length($textExpr) - length(replace($textExpr, ' ', ''))))"
-  }
-
   // ---- form 2: the iterative lowest-rank-first encoder (plain Scala) -----
 
   /** Merge every left-to-right occurrence of (l, r) in one pass — the

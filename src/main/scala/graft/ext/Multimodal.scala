@@ -309,19 +309,6 @@ object Multimodal {
   private def lumaOf(img: JpegCodec.JpegImage): Double =
     meanLuma(img.width, img.height, img.r, img.g, img.b)
 
-  /** Real nearest-neighbor resize for BMP payloads; rows whose bytes do
-    * not parse as 24bpp BMP pass through UNCHANGED (resize semantics are
-    * format-specific — callers wanting the format-agnostic byte-stride
-    * shrink use [[resizeStub]] explicitly). */
-  def resizeMedia(media: Dataset[MediaRow], newW: Int, newH: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.map { r =>
-      MediaCodecs.resizeBmpNearest(r.bytes, newW, newH)
-        .map(b => r.copy(bytes = b))
-        .getOrElse(r)
-    }
-  }
-
   /** Frame sampling: pick every `stride`-th chunk of `frameSize` bytes —
     * the real plumbing of video frame-sampling with a stub "frame". Output
     * explodes into (media_id, frame_idx, frame_bytes).

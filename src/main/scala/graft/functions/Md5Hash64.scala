@@ -47,9 +47,6 @@ object Md5Hash64 {
   /** = DuckDB md5_number_upper(s), reinterpreted as signed BIGINT. */
   def hashUpper(s: UTF8String): Long = le64(digest(s), 0)
 
-  /** = DuckDB md5_number_lower(s), reinterpreted as signed BIGINT. */
-  def hashLower(s: UTF8String): Long = le64(digest(s), 8)
-
   def md5_le64(c: Column): Column =
     CatalystBridge.column(Md5Le64(CatalystBridge.expression(c)))
 }

@@ -95,8 +95,8 @@ object IdMinter {
   }
 
   /** Pure driver-side twin of [[dictionaryEncode]] for callers that already
-    * hold the name list (LogPipeline.load, IngestStream — both derive names
-    * from an already-collected path list): same get-or-create contract,
+    * hold the name list (LogPipeline.tablesFromStatuses derives names from
+    * the listed paths): same get-or-create contract,
     * same ordering (UTF8-binary), ZERO Spark jobs. The DataFrame arm costs
     * 3-4 jobs per call (distinct, anti-join, max, sort-collect) — pure
     * fixed overhead when the dictionary is name-cardinality tiny, which it

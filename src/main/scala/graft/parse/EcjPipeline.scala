@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * step is a DataFrame transform: dimensions are broadcast get-or-create
   * (J5 = anti-join + union), the problem lookup is the reference's
   * `probname LIKE '%<folder-leaf>%'` theta join (J3), and the parse path is
-  * per-file in-task (zero shuffle), like the Clojush pipeline.
+  * the Clojush load's file dispatch (LogPipeline.dispatch): per-file
+  * in-task (zero shuffle), oversized files chunked (BigLogParse).
   */
 object EcjPipeline {
 
@@ -45,76 +46,41 @@ object EcjPipeline {
 
   /** Parse every ECJ stat file under `glob` into generations EAV:
     * (expid, gennum, parameter, value); expid is minted per file, dense by
-    * sorted path from `baseId`. Files above `bigFileBytes` bypass the
-    * one-task wholetext read and parse chunked
+    * sorted path from `baseId`. Files above `bigFileBytes` (default: the
+    * Clojush load's) bypass the one-task wholetext read and parse chunked
     * (BigLogParse.ecjGenerations) — the reference's cluster-folder stat
     * files are exactly this multi-GB shape (src/parse_logs_ecj.clj:11-18).
     */
   def loadGenerations(spark: SparkSession, glob: String, baseId: Long = 0L,
-      bigFileBytes: Long = 256L * 1024 * 1024): DataFrame = {
-    import spark.implicits._
+      bigFileBytes: Long = LogPipeline.LoadConfig().bigFileBytes): DataFrame = {
     val raw = spark.read.option("wholetext", "true").text(glob)
-      .select($"value", $"_metadata.file_path".as("path"))
-    // ids + sizes driver-side via the shared FileIndex helper (paths in
-    // _metadata's rendering, stat-fallback included — see
-    // LogPipeline.listStatuses): dense by sorted path
-    val statuses = LogPipeline.listStatuses(spark, raw)
-    val idOf = statuses.map(_._1).zipWithIndex
-      .map { case (p, i) => (p, baseId + i + 1L) }.toMap
-    gensFromStatuses(spark, statuses, idOf, bigFileBytes, prelisted = Some(raw))
+    gensFromStatuses(spark, LogPipeline.listStatuses(raw), baseId,
+      bigFileBytes, prelisted = Some(raw))
   }
 
-  /** Generations EAV for an explicit, sorted (path, size, mtimeMillis)
-    * listing with caller-minted expids — the big/small dispatch shared by
-    * the batch [[loadGenerations]] and the streaming per-micro-batch path
-    * (IngestStream.runEcj). Mirrors LogPipeline.flatFromStatuses.
+  /** Generations EAV for a sorted (path, size, mtimeMillis) listing, expids
+    * dense by path from `base + 1`, for [[loadGenerations]] and each
+    * micro-batch of IngestStream.runEcj: LogPipeline.dispatch with the
+    * per-file parser (`LogParser.parseEcj`) and `BigLogParse.ecjGenerations`.
     */
   private[graft] def gensFromStatuses(
       spark: SparkSession,
       statuses: Seq[(String, Long, Long)],
-      idOf: Map[String, Long],
+      base: Long,
       bigFileBytes: Long,
       prelisted: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    val paths = statuses.map(_._1)
-    if (paths.isEmpty)
-      return spark.emptyDataset[(Long, Int, String, String)]
-        .toDF("expid", "gennum", "parameter", "value")
-    val big = statuses
-      .filter(s => LogPipeline.effectiveSize(s._1, s._2) > bigFileBytes)
-      .map(_._1)
-    val small = paths.diff(big)
-
-    val smallRows =
-      if (small.isEmpty) None
-      else {
-        val idMap = small.map(p => (p, idOf(p))).toDF("path", "expid")
-        val src = prelisted
-          .filter(_ => small == paths) // same scan the ids came from: parity by construction
-          .getOrElse {
-            val reread = spark.read.option("wholetext", "true")
-              .text(small.map(LogPipeline.hadoopPath): _*)
-            // drift guard for the re-listed scan: its FileIndex rendering
-            // must reproduce the id map's keys exactly, else the inner
-            // broadcast join below would silently drop whole files.
-            // Driver-side (the listing is already materialized): zero jobs.
-            val rerePaths = LogPipeline.listStatuses(spark, reread).map(_._1)
-            require(rerePaths.toSet == small.toSet,
-              s"re-read path rendering drift: ${rerePaths.toSet.diff(small.toSet).take(3)}" +
-                s" vs ${small.toSet.diff(rerePaths.toSet).take(3)}")
-            reread.select($"value", $"_metadata.file_path".as("path"))
-          }
-        Some(
-          src
-            .join(broadcast(idMap), Seq("path"))
-            .select($"expid", $"value")
-            .as[(Long, String)]
-            .flatMap { case (expid, content) =>
-              LogParser.parseEcj(content).flatMap(genRows(expid, _))
-            })
-      }
-    val bigRows = big.map(p => BigLogParse.ecjGenerations(spark, p, idOf(p)))
-    (smallRows.toSeq ++ bigRows).reduce(_ union _)
+    LogPipeline.dispatch[(Long, Int, String, String)](
+      spark, statuses, base, bigFileBytes, prelisted, "expid")(
+      wholetext = (src, idMap) => src
+        .select($"value", $"_metadata.file_path".as("path"))
+        .join(broadcast(idMap), Seq("path"))
+        .select($"expid", $"value")
+        .as[(Long, String)]
+        .flatMap { case (expid, content) =>
+          LogParser.parseEcj(content).flatMap(genRows(expid, _))
+        },
+      chunked = (path, expid, _) => BigLogParse.ecjGenerations(spark, path, expid))
       .toDF("expid", "gennum", "parameter", "value")
   }
 

@@ -40,9 +40,6 @@ object LogParser {
   private val trailingInt: Regex = "(\\d+)\\s*$".r
   private val summaryLine: Regex = "(SUCCESS|FAILURE) at generation (\\d+)".r
 
-  /** Unescape escaped spaces in paths (reference src/db_loader.clj:229). */
-  def unescapeSpaces(s: String): String = s.replace("\\ ", " ")
-
   /** Is this line a Clojush segment delimiter? Shared by [[parseClojush]]
     * and the chunked big-file path (BigLogParse) so segmentation cannot
     * diverge between them. */

@@ -3,7 +3,7 @@ package graft.parse
 import graft.ids.IdMinter
 import graft.model._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark wrapper for the Clojush log-load pipeline (reference
@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   *  - ids are minted deterministically per batch, driver-side, from the
   *    scan's own sorted file listing (dense by path, no Spark job), and the
   *    (path → id) map broadcast-joins back, so file payloads never shuffle;
+  *  - one ingest core, [[dispatch]] (ids, big/small split, wholetext
+  *    re-read), serves this load, the ECJ load and IngestStream;
   *  - problem ids come from dictionary encoding (reference problem_data map,
   *    src/db_loader.clj:82-84) as a broadcast-joined dimension.
   */
@@ -40,8 +42,8 @@ object LogPipeline {
       bigFileBytes: Long = 256L * 1024 * 1024)
 
   /** @param problemDim the (problem_name, problem_id) dictionary this load
-    *                    used — incremental callers (IngestStream) thread it
-    *                    into the next batch so ids stay stable across batches
+    *                    used — a restarted stream seeds IngestStream.run's
+    *                    `initialProblemDim` with it so ids stay stable
     * @param release returns cached intermediates to the block manager —
     *                 call once the tables have been consumed (sunk/collected)
     */
@@ -67,85 +69,91 @@ object LogPipeline {
       id: Long, kind: Int, gennum: Int, parameter: String, value: String,
       path: String, mtime: String, version: String, successp: Boolean)
 
-  private def flatten(parsed: Dataset[(Long, String, String, ParsedRun)])
-      : Dataset[FlatRow] = {
-    val spark = parsed.sparkSession
-    import spark.implicits._
-    parsed.flatMap { case (id, path, mtime, run) =>
-      val header = FlatRow(id, 0, 0, "", "", path, mtime,
-        run.clojushVersion.getOrElse(""), successp = false)
-      val params = run.headerParams.iterator.map { case (k, v) =>
-        FlatRow(id, 1, 0, k, v, "", "", "", successp = false) }
-      val gens = run.generations.iterator.flatMap { case (gennum, kvs) =>
-        kvs.iterator.map { case (k, v) =>
-          FlatRow(id, 2, gennum, k, v, "", "", "", successp = false) } }
-      val sum = run.summary.iterator.map { case (s, maxgen) =>
-        FlatRow(id, 3, maxgen, "", "", "", "", "", successp = s) }
-      Iterator.single(header) ++ params ++ gens ++ sum
-    }
-  }
-
   /** Full load: the four Clojush tables (reference src/db_loader.clj:36-39).
-    * Ids AND the problem dictionary are minted driver-side from
-    * the scan's file listing, rendered as `_metadata.file_path` renders
-    * it ([[listStatuses]]; LogPipelineSpec pins the parity for names with
-    * spaces and `%`) at zero extra Spark jobs,
-    * since the file-source listing already materialized every FileStatus
-    * in the driver's InMemoryFileIndex. The corpus is then scanned, parsed
-    * and flattened exactly once (see [[tablesFromFlat]]).
+    * Ids AND the problem dictionary are minted driver-side from the scan's
+    * own file listing ([[listStatuses]]) at zero extra Spark jobs, since
+    * the file-source listing already materialized every FileStatus in the
+    * driver's InMemoryFileIndex. The corpus is then scanned, parsed and
+    * flattened exactly once (see [[tablesFromStatuses]]).
     */
   def load(spark: SparkSession, logDir: String, cfg: LoadConfig = LoadConfig())
       : LoadedTables = {
-    import spark.implicits._
     val df = spark.read.option("wholetext", "true").text(logDir)
-    val statuses = listStatuses(spark, df)
-    val paths = statuses.map(_._1)
-    val idOf = paths.zipWithIndex
-      .map { case (p, i) => (p, cfg.baseId + i + 1L) }.toMap
-    // dictionary minted fully driver-side (zero jobs) — ordering parity
-    // with the DataFrame arm is pinned by IdMinterSpec
-    val dim = IdMinter
-      .dictionaryEncodeLocal(paths.map(problemNameOf(_, cfg)))
-      .toDF("problem_name", "problem_id")
-
-    val flat = flatFromStatuses(spark, statuses, idOf, cfg, prelisted = Some(df))
-    tablesFromFlat(flat, cfg, Some(dim), expectedFiles = Some(paths.length))
+    tablesFromStatuses(spark, listStatuses(df), cfg.baseId, cfg,
+      knownDim = Nil, prelisted = Some(df))._1
   }
 
-  /** Flat parse rows for an explicit, sorted (path, size, mtimeMillis)
-    * listing with caller-minted ids — the big/small dispatch shared by the
-    * batch `load` and the streaming per-micro-batch path (IngestStream):
-    * files over `cfg.bigFileBytes` (gz-adjusted, [[effectiveSize]]) parse
-    * chunked via BigLogParse, the rest ride one wholetext task per file.
-    * Paths must be in the `_metadata.file_path` rendering ([[renderPath]])
-    * so the id-map join keys match byte-for-byte.
+  /** The one file dispatch of the ingest path, shared by both log formats
+    * in batch and streaming (`load`, `EcjPipeline.loadGenerations`,
+    * `IngestStream.run`/`runEcj`). For a sorted (path, size, mtimeMillis)
+    * listing it mints the ids, dense by path from `base + 1`, then splits
+    * the files: those over `bigFileBytes` (gz-adjusted, [[effectiveSize]])
+    * go one by one to `chunked` (BigLogParse) as (path, id, mtimeMillis),
+    * and the rest ride one wholetext task per file through `wholetext`,
+    * which gets the wholetext frame and the (path, `idCol`) id map to
+    * broadcast-join. Paths must be in the `_metadata.file_path` rendering
+    * ([[renderPath]]) so the id-map join keys match byte-for-byte.
     *
     * @param prelisted the already-listed wholetext frame covering EXACTLY
-    *        the listed paths, if the caller has one (batch `load`) — reused
-    *        so the no-big-files fast path re-lists nothing
+    *        the listed paths, if the caller has one (the batch loads) —
+    *        reused so the no-big-files fast path re-lists nothing
+    */
+  private[graft] def dispatch[R: Encoder](
+      spark: SparkSession,
+      statuses: Seq[(String, Long, Long)],
+      base: Long,
+      bigFileBytes: Long,
+      prelisted: Option[DataFrame],
+      idCol: String)(
+      wholetext: (DataFrame, DataFrame) => Dataset[R],
+      chunked: (String, Long, Long) => Dataset[R]): Dataset[R] = {
+    import spark.implicits._
+    val paths = statuses.map(_._1)
+    if (paths.isEmpty) return spark.emptyDataset[R]
+    val idOf = paths.zipWithIndex.map { case (p, i) => (p, base + i + 1L) }.toMap
+
+    // big-file dispatch: the rare oversized log must not ride the one-task
+    // wholetext path
+    val big = statuses.filter(s => effectiveSize(s._1, s._2) > bigFileBytes)
+    val small = paths.diff(big.map(_._1))
+    val smallRows = if (small.isEmpty) None else Some {
+      val src = prelisted
+        .filter(_ => small == paths) // same scan the ids came from: parity by construction
+        .getOrElse {
+          val reread = spark.read.option("wholetext", "true")
+            .text(small.map(hadoopPath): _*)
+          // drift guard for the re-listed scan: its FileIndex rendering
+          // must reproduce the id map's keys exactly, else the inner
+          // broadcast join would silently drop whole files.
+          // Driver-side (the listing is already materialized): zero jobs.
+          val rerePaths = listStatuses(reread).map(_._1)
+          require(rerePaths.toSet == small.toSet, "re-read path rendering drift: " +
+            s"${rerePaths.diff(small).take(3)} vs ${small.diff(rerePaths).take(3)}")
+          reread
+        }
+      wholetext(src, small.map(p => (p, idOf(p))).toDF("path", idCol))
+    }
+    val bigRows = big.map { case (p, _, mtimeMillis) =>
+      chunked(p, idOf(p), mtimeMillis) }
+    (smallRows.toSeq ++ bigRows).reduce(_ union _)
+  }
+
+  /** Flat Clojush parse rows for a sorted listing: [[dispatch]] with the
+    * per-file parser (`LogParser.parseClojush`) and the chunked one
+    * (`BigLogParse.flatRows`).
     */
   private[graft] def flatFromStatuses(
       spark: SparkSession,
       statuses: Seq[(String, Long, Long)],
-      idOf: Map[String, Long],
+      base: Long,
       cfg: LoadConfig,
       prelisted: Option[DataFrame] = None): Dataset[FlatRow] = {
     import spark.implicits._
-    val paths = statuses.map(_._1)
-    if (paths.isEmpty) return spark.emptyDataset[FlatRow]
-
-    // big-file dispatch: the rare oversized log must not ride the one-task
-    // wholetext path
-    val big = statuses
-      .filter(s => effectiveSize(s._1, s._2) > cfg.bigFileBytes).map(_._1)
-
-    def wholetextFlat(input: Seq[String]): Dataset[FlatRow] = {
-      val src = prelisted
-        .filter(_ => input == paths) // unchanged fast path: no re-listing
-        .getOrElse(spark.read.option("wholetext", "true")
-          .text(input.map(hadoopPath): _*))
-      val idMap = input.map(p => (p, idOf(p))).toDF("path", "id")
-      val parsed = src
+    lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(DateFmt)
+      .withZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
+        java.util.TimeZone.getDefault.getID)))
+    dispatch[FlatRow](spark, statuses, base, cfg.bigFileBytes, prelisted, "id")(
+      wholetext = (src, idMap) => src
         .select(
           $"value",
           $"_metadata.file_path".as("path"),
@@ -158,27 +166,20 @@ object LogPipeline {
         .join(broadcast(idMap), Seq("path"))
         .select($"id", $"path", $"mtime", $"run")
         .as[(Long, String, String, ParsedRun)]
-      flatten(parsed)
-    }
-
-    if (big.isEmpty) wholetextFlat(paths)
-    else {
-      val tz = java.time.ZoneId.of(
-        spark.conf.get("spark.sql.session.timeZone",
-          java.util.TimeZone.getDefault.getID))
-      val fmt = java.time.format.DateTimeFormatter
-        .ofPattern(DateFmt).withZone(tz)
-      val mtimeMillis = statuses.map(s => s._1 -> s._3).toMap
-      val bigFlats = big.map { p =>
-        val mtime = fmt.format(
-          java.time.Instant.ofEpochMilli(mtimeMillis(p)))
-        BigLogParse.flatRows(spark, p, idOf(p), mtime, cfg)
-      }
-      val small = paths.diff(big)
-      val parts =
-        (if (small.nonEmpty) Seq(wholetextFlat(small)) else Nil) ++ bigFlats
-      parts.reduce(_ union _)
-    }
+        .flatMap { case (id, path, mtime, run) =>
+          val header = FlatRow(id, 0, 0, "", "", path, mtime,
+            run.clojushVersion.getOrElse(""), successp = false)
+          val params = run.headerParams.iterator.map { case (k, v) =>
+            FlatRow(id, 1, 0, k, v, "", "", "", successp = false) }
+          val gens = run.generations.iterator.flatMap { case (gennum, kvs) =>
+            kvs.iterator.map { case (k, v) =>
+              FlatRow(id, 2, gennum, k, v, "", "", "", successp = false) } }
+          val sum = run.summary.iterator.map { case (s, maxgen) =>
+            FlatRow(id, 3, maxgen, "", "", "", "", "", successp = s) }
+          Iterator.single(header) ++ params ++ gens ++ sum
+        },
+      chunked = (path, id, mtimeMillis) => BigLogParse.flatRows(spark, path, id,
+        fmt.format(java.time.Instant.ofEpochMilli(mtimeMillis)), cfg))
   }
 
   /** (path, size, mtime-millis) for every file behind `df`, sorted by
@@ -186,25 +187,13 @@ object LogPipeline {
     * zero per-file stat RPCs (a 500-file re-stat loop cost ~0.5s). Paths
     * are rendered by [[renderPath]], the form `_metadata.file_path`
     * yields, so id-map join keys match byte-for-byte (LogPipelineSpec
-    * pins the parity for names with spaces and `%`).
-    * Falls back to inputFiles + stat for non-HadoopFsRelation plans.
-    * Shared by the Clojush and ECJ load paths.
+    * pins the parity for names with spaces and `%`). Every caller passes
+    * a `wholetext` text scan, so the plan always holds a HadoopFsRelation.
     */
-  private[parse] def listStatuses(spark: SparkSession, df: DataFrame)
-      : Seq[(String, Long, Long)] = {
-    val fromIndex = org.apache.spark.sql.graft.CatalystBridge.fileStatuses(df)
-    val statuses =
-      if (fromIndex.nonEmpty || df.inputFiles.isEmpty) fromIndex
-      else {
-        val conf = spark.sessionState.newHadoopConf()
-        df.inputFiles.toSeq.map { u =>
-          val hp = new Path(new java.net.URI(u))
-          hp.getFileSystem(conf).getFileStatus(hp)
-        }
-      }
-    statuses.map(st => (renderPath(st.getPath), st.getLen, st.getModificationTime))
+  private[parse] def listStatuses(df: DataFrame): Seq[(String, Long, Long)] =
+    org.apache.spark.sql.graft.CatalystBridge.fileStatuses(df)
+      .map(st => (renderPath(st.getPath), st.getLen, st.getModificationTime))
       .sortBy(_._1)
-  }
 
   /** A file's path as `_metadata.file_path` renders it: the URL-encoded
     * URI string (`file:/d/run%20B_u2.log` for the file `run B_u2.log`),
@@ -248,38 +237,50 @@ object LogPipeline {
       parts(parts.length - 2)
     }
 
-  /** The four tables from an already-flattened Dataset — the common tail of
-    * the wholetext, chunked-big-file and streaming paths. Caches `flat`;
-    * `release()` unpersists it. */
-  private[graft] def tablesFromFlat(
-      flatIn: Dataset[FlatRow],
+  /** The four tables for a sorted listing, ids dense by path from
+    * `base + 1` — the one body of the batch `load` and of each streaming
+    * micro-batch (IngestStream.run). Parses through [[flatFromStatuses]],
+    * caches the flat rows; `release()` unpersists them.
+    *
+    * @param knownDim (problem_name, problem_id) rows from earlier batches
+    * @return the tables and the problem dictionary extended past
+    *         `knownDim` with this listing's names
+    */
+  private[graft] def tablesFromStatuses(
+      spark: SparkSession,
+      statuses: Seq[(String, Long, Long)],
+      base: Long,
       cfg: LoadConfig,
-      prebuiltProblemDim: Option[DataFrame] = None,
-      expectedFiles: Option[Int] = None): LoadedTables = {
-    val spark = flatIn.sparkSession
+      knownDim: Seq[(String, Long)],
+      prelisted: Option[DataFrame]): (LoadedTables, Seq[(String, Long)]) = {
     import spark.implicits._
+    val paths = statuses.map(_._1)
+    // get-or-create the problem dictionary (I2/J1): the tables below need a
+    // COMPLETE dim — a stale one silently drops new problems' rows at the
+    // inner broadcast join. Names come free from the listed paths
+    // (problemNameOf is the driver-side twin of problemNameCol), and the
+    // get-or-create runs driver-side (zero jobs): seen names keep their
+    // ids, new names extend past the max. Ordering parity with the
+    // DataFrame arm is pinned by IdMinterSpec.
+    val dimSeq = IdMinter.dictionaryEncodeLocal(
+      paths.map(problemNameOf(_, cfg)), knownDim)
+    val problemDim = dimSeq.toDF("problem_name", "problem_id")
 
-    val flat = flatIn.cache()
+    val flat = flatFromStatuses(spark, statuses, base, cfg, prelisted).cache()
 
     // runtime drift guard: every listed file must surface as exactly one
     // kind=0 row — a silent mismatch between the driver-minted id map's
     // path rendering and `_metadata.file_path` would otherwise drop whole
     // files at the inner broadcast join. Costs one scan of the cache the
     // first table consumption was about to build anyway.
-    expectedFiles.foreach { n =>
-      val got = flat.filter($"kind" === 0).count()
-      require(got == n,
-        s"parsed file-row count $got != listed file count $n — path " +
-          "rendering drift between the driver id map and _metadata.file_path")
-    }
+    val got = flat.filter($"kind" === 0).count()
+    require(got == paths.length,
+      s"parsed file-row count $got != listed file count ${paths.length} — path " +
+        "rendering drift between the driver id map and _metadata.file_path")
 
     val files = flat.filter($"kind" === 0)
       .select($"id", $"path", $"mtime", $"version")
       .withColumn("problem_name", problemNameCol(cfg))
-
-    // dictionary-encode problem names (I2/J1): tiny dim, broadcast join
-    val problemDim = prebuiltProblemDim.getOrElse(
-      IdMinter.dictionaryEncode(files, "problem_name", "problem_id"))
 
     val experiments = files
       .join(broadcast(problemDim), Seq("problem_name"))
@@ -302,8 +303,8 @@ object LogPipeline {
     val summary = flat.filter($"kind" === 3)
       .select($"id", $"successp", $"gennum".as("maxgen"))
 
-    LoadedTables(experiments, experiment, generations, summary, problemDim,
-      release = () => { flat.unpersist(); () })
+    (LoadedTables(experiments, experiment, generations, summary, problemDim,
+      release = () => { flat.unpersist(); () }), dimSeq)
   }
 
   /** EDN sidecar join (S4/J6, reference src/db_loader.clj:269-298): read

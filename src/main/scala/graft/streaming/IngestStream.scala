@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.ids.IdMinter
 import graft.parse.{EcjPipeline, LogPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,15 +23,14 @@ object IngestStream {
     * four tables to `sink`. Runs until no files remain (AvailableNow) when
     * `availableNow = true`.
     *
-    * The stream carries file LISTINGS, not file contents: a `binaryFile`
-    * source projected to (path, length, modificationTime) — column pruning
-    * reaches the scan, so bytes are never read by the source (BinaryFile
-    * only opens a file when `content` is in the required schema). The
-    * exactly-once spine stays the file-source checkpoint; the per-batch
-    * read + parse goes through the SAME big/small dispatch as the batch
-    * path (`LogPipeline.flatFromStatuses`): an oversized log in the watch
-    * folder parses chunked (BigLogParse) instead of materializing as one
-    * multi-GB wholetext row — the skew/OOM door the previous
+    * The stream carries file LISTINGS, not file contents
+    * ([[listingStream]], shared with [[runEcj]]). The exactly-once spine
+    * stays the file-source checkpoint; each micro-batch's listing runs
+    * through the SAME body as the batch `load`
+    * (`LogPipeline.tablesFromStatuses`, whose file dispatch
+    * `LogPipeline.dispatch` both formats share): an oversized log in the
+    * watch folder parses chunked (BigLogParse) instead of materializing as
+    * one multi-GB wholetext row — the skew/OOM door the previous
     * content-carrying source documented as an open caveat.
     *
     * @param initialProblemDim seed (problem_name, problem_id) rows, e.g.
@@ -48,16 +46,6 @@ object IngestStream {
       availableNow: Boolean = true,
       initialProblemDim: Option[DataFrame] = None)(
       sink: (LogPipeline.LoadedTables, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-
-    val stream = spark.readStream
-      .format("binaryFile")
-      // binaryFile's own fixed schema — the streaming source demands it
-      // spelled out; `content` is pruned away below and therefore never read
-      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
-      .load(logDir)
-      .select($"path", $"length", $"modificationTime")
-
     // problem dictionary accumulated across micro-batches (get-or-create,
     // reference problem_data map): same name → same id in every batch, new
     // names extend past the max. Threaded DRIVER-SIDE as a plain Seq —
@@ -69,119 +57,90 @@ object IngestStream {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
       .getOrElse(Nil)
 
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val (tables, nextDim) =
-          tablesFromBatch(spark, batch, cfg, batchId, dimSeq)
-        dimSeq = nextDim
-        // the cached per-batch Dataset must not outlive the batch — under the
-        // ProcessingTime daemon an un-released cache grows without bound
-        try sink(tables, batchId) finally tables.release()
-        ()
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
+    listingStream(spark, logDir, checkpointDir, availableNow) { (statuses, batchId) =>
+      // the file-count drift guard also catches a listed-but-unparsed file
+      // loudly (e.g. deleted between the source's listing and this batch's
+      // read — logs are immutable by contract, so that is corruption, not churn)
+      val (tables, nextDim) = LogPipeline.tablesFromStatuses(spark, statuses,
+        cfg.baseId + batchId * idWindow, cfg, dimSeq, prelisted = None)
+      dimSeq = nextDim
+      // the cached per-batch Dataset must not outlive the batch — under the
+      // ProcessingTime daemon an un-released cache grows without bound
+      try sink(tables, batchId) finally tables.release()
+    }
   }
 
   /** Streaming twin of `EcjPipeline.loadGenerations` (the reference's
     * multi-GB cluster-folder stat workload): watch `statDir` for ECJ stat
     * files, parse each micro-batch into generations EAV and hand it to
-    * `sink`. Same metadata-only listing source and same big/small dispatch
-    * as [[run]] — an oversized stat file parses chunked
-    * (BigLogParse.ecjGenerations) with exactly-once from the file-source
-    * checkpoint. Expids are unique across batches via the batchId window.
+    * `sink`. Same listing stream as [[run]] and the same file dispatch as
+    * the batch path (`EcjPipeline.gensFromStatuses`) — an oversized stat
+    * file parses chunked (BigLogParse.ecjGenerations) with exactly-once
+    * from the file-source checkpoint. Expids are unique across batches via
+    * the batchId window.
     */
   def runEcj(
       spark: SparkSession,
       statDir: String,
       checkpointDir: String,
       baseId: Long = 0L,
-      bigFileBytes: Long = 256L * 1024 * 1024,
+      bigFileBytes: Long = LogPipeline.LoadConfig().bigFileBytes,
       availableNow: Boolean = true)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-    val stream = spark.readStream
-      .format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
-      .load(statDir)
-      .select($"path", $"length", $"modificationTime")
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    listingStream(spark, statDir, checkpointDir, availableNow) { (statuses, batchId) =>
+      sink(EcjPipeline.gensFromStatuses(spark, statuses,
+        baseId + batchId * idWindow, bigFileBytes), batchId)
+    }
 
-    val writer = stream.writeStream
+  /** The listing-only file stream both watchers share: a `binaryFile`
+    * source projected to (path, length, modificationTime) — column pruning
+    * reaches the scan, so bytes are never read by the source (BinaryFile
+    * only opens a file when `content` is in the required schema). Each
+    * micro-batch reaches `onBatch` as a driver-side (path, size,
+    * mtimeMillis) listing sorted by path, with its batchId; binaryFile's
+    * `path` column is Hadoop's unescaped `Path.toString`, so
+    * `LogPipeline.renderPath` turns it into the `_metadata.file_path` form
+    * the id map must match. The trigger is `AvailableNow` (drain, then
+    * stop) or a 10 s `ProcessingTime` daemon.
+    */
+  private def listingStream(
+      spark: SparkSession,
+      dir: String,
+      checkpointDir: String,
+      availableNow: Boolean)(
+      onBatch: (Seq[(String, Long, Long)], Long) => Unit): StreamingQuery = {
+    import spark.implicits._
+    spark.readStream
+      .format("binaryFile")
+      // binaryFile's own fixed schema — the streaming source demands it
+      // spelled out; `content` is pruned away below and therefore never read
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+      .load(dir)
+      .select($"path", $"length", $"modificationTime")
+      .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val statuses = collectStatuses(batch)
-        val base = baseId + batchId * idWindow
-        val idOf = statuses.map(_._1).zipWithIndex
-          .map { case (p, i) => (p, base + i + 1L) }.toMap
-        sink(EcjPipeline.gensFromStatuses(spark, statuses, idOf, bigFileBytes),
-          batchId)
-        ()
+        // the batch frame IS the listing (metadata-only rows), file-count
+        // bounded by construction (maxFilesPerTrigger-sized)
+        val statuses = batch.collect().map { r =>
+          (LogPipeline.renderPath(new org.apache.hadoop.fs.Path(r.getString(0))),
+            r.getLong(1), r.getTimestamp(2).getTime)
+        }
+        onBatch(statuses.distinct.sortBy(_._1).toSeq, batchId)
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
+      .trigger(if (availableNow) Trigger.AvailableNow()
+        else Trigger.ProcessingTime("10 seconds"))
+      .start()
   }
 
-  /** Driver-side (path, size, mtimeMillis) listing from a metadata-only
-    * micro-batch, sorted by path. binaryFile's `path` column is Hadoop's
-    * unescaped `Path.toString`; `LogPipeline.renderPath` turns it into the
-    * `_metadata.file_path` form the id map must match.
-    */
-  private def collectStatuses(batch: DataFrame): Seq[(String, Long, Long)] =
-    batch.collect()
-      .map { r =>
-        (LogPipeline.renderPath(new org.apache.hadoop.fs.Path(r.getString(0))),
-          r.getLong(1), r.getTimestamp(2).getTime)
-      }
-      .distinct.sortBy(_._1).toSeq
-
-  /** Batch-local table construction; ids are unique across batches by
-    * offsetting with the batchId (deterministic per batch: path-ordered).
-    * The per-batch id window is 1e12: a backlog drained by AvailableNow is
-    * one micro-batch, so the window must exceed any plausible file count —
-    * at 1e12 ids per batch, Long overflows only after ~9.2M batches (years
-    * of a 10s daemon trigger).
+  /** Ids are unique across batches by offsetting with the batchId
+    * (deterministic per batch: path-ordered). The per-batch id window is
+    * 1e12: a backlog drained by AvailableNow is one micro-batch, so the
+    * window must exceed any plausible file count — at 1e12 ids per batch,
+    * Long overflows only after ~9.2M batches (years of a 10s daemon
+    * trigger).
     */
   private val idWindow = 1000000000000L
-  private def tablesFromBatch(
-      spark: SparkSession,
-      batch: DataFrame,
-      cfg: LogPipeline.LoadConfig,
-      batchId: Long,
-      dimSeq: Seq[(String, Long)])
-      : (LogPipeline.LoadedTables, Seq[(String, Long)]) = {
-    import spark.implicits._
-    val base = cfg.baseId + batchId * idWindow
-
-    // one driver-side (path, size, mtime) listing per micro-batch — the
-    // batch frame IS the listing (metadata-only rows), file-count bounded
-    // by construction (maxFilesPerTrigger-sized)
-    val statuses = collectStatuses(batch)
-    val paths = statuses.map(_._1)
-    val idOf = paths.zipWithIndex
-      .map { case (p, i) => (p, base + i + 1L) }.toMap
-
-    // get-or-create the problem dictionary for THIS batch: the threaded dim
-    // only covers names from earlier batches, and `tablesFromFlat` demands
-    // a COMPLETE dim — a stale one silently drops new problems' rows at the
-    // inner broadcast join. Batch names come free from the collected path
-    // list (problemNameOf is the driver-side twin of problemNameCol); the
-    // get-or-create itself runs driver-side (zero jobs): seen names keep
-    // their ids, new names extend past the max.
-    val nextDim = IdMinter.dictionaryEncodeLocal(
-      paths.map(LogPipeline.problemNameOf(_, cfg)), dimSeq)
-    val dim = nextDim.toDF("problem_name", "problem_id")
-
-    // same read + parse + dispatch as the batch path: small files one
-    // wholetext task each, oversized files chunked (BigLogParse). The
-    // file-count guard catches a listed-but-unparsed file loudly (e.g.
-    // deleted between the source's listing and this batch's read — logs
-    // are immutable by contract, so that is corruption, not churn).
-    val flat = LogPipeline.flatFromStatuses(spark, statuses, idOf, cfg)
-    (LogPipeline.tablesFromFlat(flat, cfg, Some(dim),
-      expectedFiles = Some(paths.length)), nextDim)
-  }
 
   /** Event-time windowed streaming aggregation (T4): watermarked tumbling
     * count per event_type — the streaming twin of the batch-oracle-checked

@@ -1,6 +1,8 @@
 package graft.parse
 
 import graft.SparkTestSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.CatalystBridge
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.GZIPOutputStream
@@ -107,17 +109,16 @@ class LogPipelineSpec extends AnyFunSuite {
     // the file's REAL mtime: the wholetext arm reads _metadata mtime, so a
     // fabricated wall-clock timestamp would race across a second boundary
     val statuses = Seq((hp.toString, size, Files.getLastModifiedTime(p).toMillis))
-    val idOf = Map(hp.toString -> 1L)
 
     // threshold above the file: wholetext FileScan, no RDD arm
     val small = LogPipeline.flatFromStatuses(
-      spark, statuses, idOf, LogPipeline.LoadConfig(bigFileBytes = size + 1))
+      spark, statuses, 0L, LogPipeline.LoadConfig(bigFileBytes = size + 1))
     val smallPlan = small.queryExecution.executedPlan.toString
     assert(smallPlan.contains("FileScan text"), s"expected wholetext scan:\n$smallPlan")
 
     // threshold below the file: chunked BigLogParse (RDD-backed, no text scan)
     val big = LogPipeline.flatFromStatuses(
-      spark, statuses, idOf, LogPipeline.LoadConfig(bigFileBytes = size - 1))
+      spark, statuses, 0L, LogPipeline.LoadConfig(bigFileBytes = size - 1))
     val bigPlan = big.queryExecution.executedPlan.toString
     assert(!bigPlan.contains("FileScan text"), s"big file rode wholetext:\n$bigPlan")
     // both arms parse identically (BigFileParitySpec pins this broadly)
@@ -152,6 +153,22 @@ class LogPipelineSpec extends AnyFunSuite {
         assert(t.summary.collect().map(_.getInt(2)).sorted.toSeq == Seq(2, 4, 9))
       } finally t.release()
     }
+
+    // the ECJ load shares the dispatch: the same names as stat files, the
+    // plain (padded) one chunked on the second pass
+    def stat(gens: Int) = ((0 until gens).flatMap(g =>
+      Seq(s"Generation: $g", s"Best Individual: Fitness: 0.$g")) :+
+      "End of Run: done").mkString("\n")
+    Files.writeString(d.resolve("runA.stat"), stat(6))
+    Files.writeString(d.resolve("run B.stat"), stat(2))
+    Files.writeString(d.resolve("r%41.stat"), stat(2))
+    val statSize = Files.size(d.resolve("runA.stat"))
+    for (bigFileBytes <- Seq(LogPipeline.LoadConfig().bigFileBytes, statSize - 1)) {
+      val gens = EcjPipeline.loadGenerations(spark, d.toString + "/*.stat",
+        bigFileBytes = bigFileBytes).collect()
+      assert(gens.map(_.getLong(0)).toSet == Set(1L, 2L, 3L), s"bigFileBytes=$bigFileBytes")
+      assert(gens.count(_.getString(2) == "EndofRun") == 3)
+    }
   }
 
   test("id minting never windows or shuffles file payloads (scale guard)") {
@@ -174,5 +191,43 @@ class LogPipelineSpec extends AnyFunSuite {
     val a = ids(LogPipeline.load(spark, dir.toString + "/*.log*"))
     val b = ids(LogPipeline.load(spark.newSession(), dir.toString + "/*.log*"))
     assert(a == b)
+  }
+  test("load plus its four tables runs a pinned number of Spark jobs") {
+    // pins the zero-job listing and id minting, the one drift-guard
+    // count and one job per consumed table; the chunked arm adds its
+    // counting pass and its summary lookup. Only jobs this thread tags
+    // count, so a job from any other thread cannot skew the number.
+    val tagKey = "graft.test.jobcount"
+    def jobsOf(glob: String, cfg: LogPipeline.LoadConfig): Int = {
+      val tag = java.util.UUID.randomUUID().toString
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty(tagKey) == tag) {
+            started.incrementAndGet(); ()
+          }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setLocalProperty(tagKey, tag)
+      try {
+        val t = LogPipeline.load(spark, glob, cfg)
+        try Seq(t.experiments, t.experiment, t.generations, t.summary)
+          .foreach(_.collect())
+        finally t.release()
+        CatalystBridge.drainListenerBus(spark)
+        started.get
+      } finally {
+        spark.sparkContext.setLocalProperty(tagKey, null)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    }
+    val d = Files.createTempDirectory(Paths.get("target"), "jobcount")
+    writeFixtures(d)
+    val glob = d.toString + "/*.log*"
+    // all small: the prelisted scan
+    assert(jobsOf(glob, LogPipeline.LoadConfig()) == 7)
+    // the .gz (×10 effective size) chunked, the two plain logs re-read
+    val plainSize = Files.size(d.resolve("runA_u1.log"))
+    assert(jobsOf(glob, LogPipeline.LoadConfig(bigFileBytes = plainSize)) == 9)
   }
 }
