@@ -100,7 +100,7 @@ object IdMinter {
     * same ordering (UTF8-binary), ZERO Spark jobs. The DataFrame arm costs
     * 3-4 jobs per call (distinct, anti-join, max, sort-collect) — pure
     * fixed overhead when the dictionary is name-cardinality tiny, which it
-    * is by contract (every consumer broadcast-joins it).
+    * is by contract (LogPipeline inlines it as a map literal).
     */
   def dictionaryEncodeLocal(
       names: Seq[String],

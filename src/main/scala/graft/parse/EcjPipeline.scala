@@ -62,6 +62,8 @@ object EcjPipeline {
     * dense by path from `base + 1`, for [[loadGenerations]] and each
     * micro-batch of IngestStream.runEcj: LogPipeline.dispatch with the
     * per-file parser (`LogParser.parseEcj`) and `BigLogParse.ecjGenerations`.
+    * The frame may be consumed long after this returns, so its id broadcast
+    * is left to Spark's ContextCleaner.
     */
   private[graft] def gensFromStatuses(
       spark: SparkSession,
@@ -71,17 +73,16 @@ object EcjPipeline {
       prelisted: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
     LogPipeline.dispatch[(Long, Int, String, String)](
-      spark, statuses, base, bigFileBytes, prelisted, "expid")(
-      wholetext = (src, idMap) => src
+      spark, statuses, base, bigFileBytes, prelisted)(
+      wholetext = (src, ids) => src
         .select($"value", $"_metadata.file_path".as("path"))
-        .join(broadcast(idMap), Seq("path"))
-        .select($"expid", $"value")
-        .as[(Long, String)]
-        .flatMap { case (expid, content) =>
+        .as[(String, String)]
+        .flatMap { case (content, path) =>
+          val expid = LogPipeline.idFor(ids.value, path)
           LogParser.parseEcj(content).flatMap(genRows(expid, _))
         },
       chunked = (path, expid, _) => BigLogParse.ecjGenerations(spark, path, expid))
-      .toDF("expid", "gennum", "parameter", "value")
+      ._1.toDF("expid", "gennum", "parameter", "value")
   }
 
   /** Parse a flat `key=value` parameter file (the reference's broken

@@ -3,7 +3,8 @@ package graft.parse
 import graft.ids.IdMinter
 import graft.model._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Spark wrapper for the Clojush log-load pipeline (reference
@@ -18,12 +19,14 @@ import org.apache.spark.sql.functions._
   *  - `.gz` logs decompress transparently in the source (no gunzip shell-out,
   *    reference src/db_loader.clj:339-341);
   *  - ids are minted deterministically per batch, driver-side, from the
-  *    scan's own sorted file listing (dense by path, no Spark job), and the
-  *    (path → id) map broadcast-joins back, so file payloads never shuffle;
+  *    scan's own sorted file listing (dense by path, no Spark job); the
+  *    (path → id) map ships as a broadcast variable that each parse task
+  *    looks up, so file payloads never join or shuffle;
   *  - one ingest core, [[dispatch]] (ids, big/small split, wholetext
   *    re-read), serves this load, the ECJ load and IngestStream;
   *  - problem ids come from dictionary encoding (reference problem_data map,
-  *    src/db_loader.clj:82-84) as a broadcast-joined dimension.
+  *    src/db_loader.clj:82-84), built from the listing and looked up as a
+  *    map literal ([[problemIdCol]]), not joined.
   */
 object LogPipeline {
 
@@ -89,27 +92,30 @@ object LogPipeline {
     * listing it mints the ids, dense by path from `base + 1`, then splits
     * the files: those over `bigFileBytes` (gz-adjusted, [[effectiveSize]])
     * go one by one to `chunked` (BigLogParse) as (path, id, mtimeMillis),
-    * and the rest ride one wholetext task per file through `wholetext`,
-    * which gets the wholetext frame and the (path, `idCol`) id map to
-    * broadcast-join. Paths must be in the `_metadata.file_path` rendering
-    * ([[renderPath]]) so the id-map join keys match byte-for-byte.
+    * and the rest ride one wholetext task per file through `wholetext`.
+    * Paths must be in the `_metadata.file_path` rendering ([[renderPath]])
+    * so the id-map keys match byte-for-byte.
     *
     * @param prelisted the already-listed wholetext frame covering EXACTLY
     *        the listed paths, if the caller has one (the batch loads) —
     *        reused so the no-big-files fast path re-lists nothing
+    * @param wholetext gets the wholetext frame of the small files and the
+    *        broadcast (path → id) map, which each task reads through
+    *        [[idFor]] — no join, no broadcast job
+    * @return the rows, and the id broadcast if the wholetext arm ran, for
+    *         the caller to unpersist once the rows are consumed
     */
   private[graft] def dispatch[R: Encoder](
       spark: SparkSession,
       statuses: Seq[(String, Long, Long)],
       base: Long,
       bigFileBytes: Long,
-      prelisted: Option[DataFrame],
-      idCol: String)(
-      wholetext: (DataFrame, DataFrame) => Dataset[R],
-      chunked: (String, Long, Long) => Dataset[R]): Dataset[R] = {
-    import spark.implicits._
+      prelisted: Option[DataFrame])(
+      wholetext: (DataFrame, Broadcast[Map[String, Long]]) => Dataset[R],
+      chunked: (String, Long, Long) => Dataset[R])
+      : (Dataset[R], Option[Broadcast[Map[String, Long]]]) = {
     val paths = statuses.map(_._1)
-    if (paths.isEmpty) return spark.emptyDataset[R]
+    if (paths.isEmpty) return (spark.emptyDataset[R], None)
     val idOf = paths.zipWithIndex.map { case (p, i) => (p, base + i + 1L) }.toMap
 
     // big-file dispatch: the rare oversized log must not ride the one-task
@@ -123,20 +129,30 @@ object LogPipeline {
           val reread = spark.read.option("wholetext", "true")
             .text(small.map(hadoopPath): _*)
           // drift guard for the re-listed scan: its FileIndex rendering
-          // must reproduce the id map's keys exactly, else the inner
-          // broadcast join would silently drop whole files.
+          // must reproduce the id map's keys exactly, else every parse
+          // task of a drifted file would fail its id lookup.
           // Driver-side (the listing is already materialized): zero jobs.
           val rerePaths = listStatuses(reread).map(_._1)
           require(rerePaths.toSet == small.toSet, "re-read path rendering drift: " +
             s"${rerePaths.diff(small).take(3)} vs ${small.diff(rerePaths).take(3)}")
           reread
         }
-      wholetext(src, small.map(p => (p, idOf(p))).toDF("path", idCol))
+      val ids = spark.sparkContext.broadcast(small.map(p => p -> idOf(p)).toMap)
+      (wholetext(src, ids), ids)
     }
     val bigRows = big.map { case (p, _, mtimeMillis) =>
       chunked(p, idOf(p), mtimeMillis) }
-    (smallRows.toSeq ++ bigRows).reduce(_ union _)
+    ((smallRows.map(_._1).toSeq ++ bigRows).reduce(_ union _), smallRows.map(_._2))
   }
+
+  /** The id minted for `path` by [[dispatch]]. A path the listing did not
+    * mint — its rendering drifted from `_metadata.file_path` — fails the
+    * task and names the file; it is never dropped or given a stand-in id.
+    */
+  private[parse] def idFor(ids: Map[String, Long], path: String): Long =
+    ids.getOrElse(path, throw new IllegalStateException(
+      s"no id minted for $path: path rendering drift between the listing " +
+        "and _metadata.file_path"))
 
   /** Flat Clojush parse rows for a sorted listing: [[dispatch]] with the
     * per-file parser (`LogParser.parseClojush`) and the chunked one
@@ -147,26 +163,33 @@ object LogPipeline {
       statuses: Seq[(String, Long, Long)],
       base: Long,
       cfg: LoadConfig,
-      prelisted: Option[DataFrame] = None): Dataset[FlatRow] = {
+      prelisted: Option[DataFrame] = None): Dataset[FlatRow] =
+    flatDispatch(spark, statuses, base, cfg, prelisted)._1
+
+  /** [[flatFromStatuses]] plus the id broadcast [[dispatch]] made. */
+  private def flatDispatch(
+      spark: SparkSession,
+      statuses: Seq[(String, Long, Long)],
+      base: Long,
+      cfg: LoadConfig,
+      prelisted: Option[DataFrame])
+      : (Dataset[FlatRow], Option[Broadcast[Map[String, Long]]]) = {
     import spark.implicits._
     lazy val fmt = java.time.format.DateTimeFormatter.ofPattern(DateFmt)
       .withZone(java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone",
         java.util.TimeZone.getDefault.getID)))
-    dispatch[FlatRow](spark, statuses, base, cfg.bigFileBytes, prelisted, "id")(
-      wholetext = (src, idMap) => src
+    val skipNils = cfg.skipNils
+    dispatch[FlatRow](spark, statuses, base, cfg.bigFileBytes, prelisted)(
+      // one typed pass: look the id up, parse, emit the flat rows
+      wholetext = (src, ids) => src
         .select(
           $"value",
           $"_metadata.file_path".as("path"),
           date_format($"_metadata.file_modification_time", DateFmt).as("mtime"))
         .as[(String, String, String)]
-        .map { case (content, path, mtime) =>
-          (path, mtime, LogParser.parseClojush(content, cfg.skipNils))
-        }
-        .toDF("path", "mtime", "run")
-        .join(broadcast(idMap), Seq("path"))
-        .select($"id", $"path", $"mtime", $"run")
-        .as[(Long, String, String, ParsedRun)]
-        .flatMap { case (id, path, mtime, run) =>
+        .flatMap { case (content, path, mtime) =>
+          val id = idFor(ids.value, path)
+          val run = LogParser.parseClojush(content, skipNils)
           val header = FlatRow(id, 0, 0, "", "", path, mtime,
             run.clojushVersion.getOrElse(""), successp = false)
           val params = run.headerParams.iterator.map { case (k, v) =>
@@ -186,7 +209,7 @@ object LogPipeline {
     * path — straight from the scan's own FileIndex: zero extra jobs AND
     * zero per-file stat RPCs (a 500-file re-stat loop cost ~0.5s). Paths
     * are rendered by [[renderPath]], the form `_metadata.file_path`
-    * yields, so id-map join keys match byte-for-byte (LogPipelineSpec
+    * yields, so id-map keys match byte-for-byte (LogPipelineSpec
     * pins the parity for names with spaces and `%`). Every caller passes
     * a `wholetext` text scan, so the plan always holds a HadoopFsRelation.
     */
@@ -237,10 +260,22 @@ object LogPipeline {
       parts(parts.length - 2)
     }
 
+  /** `problem_id` for the `problem_name` column: a lookup in the
+    * dictionary `dim` built from the listing, inlined as a map literal. A
+    * name the dictionary lacks fails the query and names the problem —
+    * never a null id, never a dropped row.
+    */
+  private[parse] def problemIdCol(dim: Seq[(String, Long)]): Column =
+    coalesce(element_at(typedLit(dim.toMap), col("problem_name")),
+      raise_error(concat(lit("problem name missing from the dictionary: "),
+        col("problem_name"))))
+
   /** The four tables for a sorted listing, ids dense by path from
     * `base + 1` — the one body of the batch `load` and of each streaming
-    * micro-batch (IngestStream.run). Parses through [[flatFromStatuses]],
-    * caches the flat rows; `release()` unpersists them.
+    * micro-batch (IngestStream.run). Parses through [[flatFromStatuses]]
+    * and caches the flat rows in at most one partition per core, so each
+    * table over the cache runs as one wave of tasks; `release()`
+    * unpersists the cache and the id broadcast.
     *
     * @param knownDim (problem_name, problem_id) rows from earlier batches
     * @return the tables and the problem dictionary extended past
@@ -256,8 +291,8 @@ object LogPipeline {
     import spark.implicits._
     val paths = statuses.map(_._1)
     // get-or-create the problem dictionary (I2/J1): the tables below need a
-    // COMPLETE dim — a stale one silently drops new problems' rows at the
-    // inner broadcast join. Names come free from the listed paths
+    // COMPLETE dim — a stale one fails the problemIdCol lookup. Names come
+    // free from the listed paths
     // (problemNameOf is the driver-side twin of problemNameCol), and the
     // get-or-create runs driver-side (zero jobs): seen names keep their
     // ids, new names extend past the max. Ordering parity with the
@@ -266,13 +301,13 @@ object LogPipeline {
       paths.map(problemNameOf(_, cfg)), knownDim)
     val problemDim = dimSeq.toDF("problem_name", "problem_id")
 
-    val flat = flatFromStatuses(spark, statuses, base, cfg, prelisted).cache()
+    // coalesce only merges: a corpus packed into fewer bins keeps its count
+    val (parsed, ids) = flatDispatch(spark, statuses, base, cfg, prelisted)
+    val flat = parsed.coalesce(spark.sparkContext.defaultParallelism).cache()
 
     // runtime drift guard: every listed file must surface as exactly one
-    // kind=0 row — a silent mismatch between the driver-minted id map's
-    // path rendering and `_metadata.file_path` would otherwise drop whole
-    // files at the inner broadcast join. Costs one scan of the cache the
-    // first table consumption was about to build anyway.
+    // kind=0 row (a file listed but gone by read time, say). This count is
+    // the action that builds the cache the tables then scan.
     val got = flat.filter($"kind" === 0).count()
     require(got == paths.length,
       s"parsed file-row count $got != listed file count ${paths.length} — path " +
@@ -283,13 +318,12 @@ object LogPipeline {
       .withColumn("problem_name", problemNameCol(cfg))
 
     val experiments = files
-      .join(broadcast(problemDim), Seq("problem_name"))
       .select(
         col("id"),
         lit(cfg.user).as("user"),
         col("mtime").as("rundate"),
         col("problem_name"),
-        col("problem_id"),
+        problemIdCol(dimSeq).as("problem_id"),
         col("version").as("clojush_version"),
         col("path").as("logfile_location"),
         date_format(current_timestamp(), DateFmt).as("csv_write_time"))
@@ -304,7 +338,7 @@ object LogPipeline {
       .select($"id", $"successp", $"gennum".as("maxgen"))
 
     (LoadedTables(experiments, experiment, generations, summary, problemDim,
-      release = () => { flat.unpersist(); () }), dimSeq)
+      release = () => { flat.unpersist(); ids.foreach(_.unpersist()) }), dimSeq)
   }
 
   /** EDN sidecar join (S4/J6, reference src/db_loader.clj:269-298): read

@@ -2,6 +2,9 @@ package graft.parse
 
 import graft.SparkTestSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.window.WindowExecBase
 import org.apache.spark.sql.graft.CatalystBridge
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
@@ -127,8 +130,8 @@ class LogPipelineSpec extends AnyFunSuite {
 
   test("names with a space or % load every file, on both dispatch arms") {
     // the listing that mints ids must render paths exactly as
-    // _metadata.file_path does (URL-encoded), or the id-map join drops the
-    // file and the drift guard refuses the whole load
+    // _metadata.file_path does (URL-encoded), or the per-task id lookup
+    // fails the whole load
     val d = Files.createTempDirectory(Paths.get("target"), "pathrender")
     val pad = (1 to 40).map(k => s"pad-$k = $k").mkString("\n", "\n", "")
     Files.writeString(d.resolve("runA_u1.log"),
@@ -171,16 +174,94 @@ class LogPipelineSpec extends AnyFunSuite {
     }
   }
 
+  /** Every node of `p`, with the plans it holds inside (the cached parse
+    * plan under an InMemoryTableScan). */
+  def planNodes(p: QueryPlan[_]): Seq[QueryPlan[_]] =
+    p +: (p.children.map(_.asInstanceOf[QueryPlan[_]]) ++ p.innerChildren)
+      .flatMap(planNodes)
+
   test("id minting never windows or shuffles file payloads (scale guard)") {
-    // the r2 judge's #1 scale-killer: row_number over an unpartitioned
-    // window dragged every whole-file row through ONE task. The fixed plan
-    // must contain NO window at all, and the (path → id) map must come back
-    // via broadcast so the payload side streams with zero exchange. The
-    // generations table joins nothing else, so its one broadcast is the
-    // id map's (the cached parse plan prints inside its scan).
-    val p = tables.generations.queryExecution.executedPlan.toString
-    assert(!p.contains("Window"), s"global window re-introduced:\n$p")
-    assert(p.contains("BroadcastHashJoin"), s"id map must broadcast back:\n$p")
+    // a row_number over an unpartitioned window once dragged every
+    // whole-file row through ONE task. Ids are now a per-task lookup in a
+    // broadcast variable, so the generations plan, cached parse included,
+    // holds no window and no exchange of any kind: the payload streams
+    // from the file scan to the cache.
+    val plan = tables.generations.queryExecution.executedPlan
+    val bad = planNodes(plan).collect {
+      case n: WindowExecBase => n
+      case n: ShuffleExchangeLike => n
+      case n: BroadcastExchangeLike => n
+    }
+    assert(bad.isEmpty, s"window or exchange in the load plan:\n$plan")
+  }
+
+  /** The messages along `e`'s cause chain. */
+  def messages(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+
+  test("a listing path not in _metadata.file_path form fails, naming the file") {
+    // the listing renders `run B_u2.log` unescaped (Hadoop's Path.toString)
+    // where the scan yields `run%20B_u2.log`: the id lookup must throw on
+    // both arms, never drop the file or give it a stand-in id
+    def drifted(ext: String, body: String) = {
+      val d = Files.createTempDirectory(Paths.get("target"), "drift")
+      Seq("runA_u1", "run B_u2").foreach(n => Files.writeString(d.resolve(n + ext), body))
+      val df = spark.read.option("wholetext", "true").text(s"$d/*$ext")
+      val listing = LogPipeline.listStatuses(df).map { case (p, n, m) =>
+        (if (p.contains("B_u2")) LogPipeline.hadoopPath(p) else p, n, m) }
+      assert(listing.exists(_._1.endsWith("/run B_u2" + ext)))
+      (listing, df)
+    }
+    val (logs, logDf) = drifted(".log", fixtureLog("1.2.3", true, 4))
+    val e1 = intercept[Exception](LogPipeline.flatFromStatuses(spark, logs, 0L,
+      LogPipeline.LoadConfig(), prelisted = Some(logDf)).collect())
+    assert(messages(e1).exists(_.contains("run%20B_u2.log")), messages(e1))
+
+    val (stats, statDf) = drifted(".stat",
+      "Generation: 0\nBest Individual: Fitness: 0.5\nEnd of Run: done")
+    val e2 = intercept[Exception](EcjPipeline.gensFromStatuses(spark, stats, 0L,
+      LogPipeline.LoadConfig().bigFileBytes, prelisted = Some(statDf)).collect())
+    assert(messages(e2).exists(_.contains("run%20B_u2.stat")), messages(e2))
+  }
+
+  test("problem ids come from the dictionary; a name it lacks fails loudly") {
+    import spark.implicits._
+    val idOf = LogPipeline.problemIdCol(Seq("p1" -> 7L, "p2" -> 9L))
+    def ids(names: String*) = names.toDF("problem_name").select(idOf)
+      .as[Long].collect().toSeq
+    assert(ids("p2", "p1", "p2") == Seq(9L, 7L, 9L))
+    val e = intercept[Exception](ids("p1", "p3"))
+    assert(messages(e).exists(_.contains("p3")), messages(e))
+  }
+
+  test("tables over the cache run one wave: at most one partition per core") {
+    // with maxPartitionBytes below the 4 MB per-file open cost, every file
+    // packs into a scan partition of its own: 12 partitions, more than the
+    // session has cores
+    val d = Files.createTempDirectory(Paths.get("target"), "onewave")
+    (1 to 12).foreach(k =>
+      Files.writeString(d.resolve(s"r${k}_u$k.log"), fixtureLog("1.2.3", k % 2 == 0, k)))
+    val glob = d.toString + "/*.log"
+    val narrow = spark.newSession()
+    narrow.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    val cores = spark.sparkContext.defaultParallelism
+
+    val df = narrow.read.option("wholetext", "true").text(glob)
+    val flat = LogPipeline.flatFromStatuses(narrow, LogPipeline.listStatuses(df), 0L,
+      LogPipeline.LoadConfig(), prelisted = Some(df))
+    assert(flat.rdd.getNumPartitions > cores)
+    val want = flat.groupBy("kind").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+    val t = LogPipeline.load(narrow, glob)
+    try {
+      Seq(0 -> t.experiments, 1 -> t.experiment, 2 -> t.generations, 3 -> t.summary)
+        .foreach { case (kind, table) =>
+          assert(table.rdd.getNumPartitions <= cores, s"kind $kind")
+          assert(table.count() == want(kind), s"kind $kind")
+        }
+    } finally t.release()
   }
 
   test("ids are stable across sessions (I1)") {
@@ -194,7 +275,9 @@ class LogPipelineSpec extends AnyFunSuite {
   }
   test("load plus its four tables runs a pinned number of Spark jobs") {
     // pins the zero-job listing and id minting, the one drift-guard
-    // count and one job per consumed table; the chunked arm adds its
+    // count and one job per consumed table: the id map and the problem
+    // dictionary are looked up, not broadcast-joined, so neither costs a
+    // collect job. The chunked arm adds its
     // counting pass and its summary lookup. Only jobs this thread tags
     // count, so a job from any other thread cannot skew the number.
     val tagKey = "graft.test.jobcount"
@@ -225,9 +308,9 @@ class LogPipelineSpec extends AnyFunSuite {
     writeFixtures(d)
     val glob = d.toString + "/*.log*"
     // all small: the prelisted scan
-    assert(jobsOf(glob, LogPipeline.LoadConfig()) == 7)
+    assert(jobsOf(glob, LogPipeline.LoadConfig()) == 5)
     // the .gz (×10 effective size) chunked, the two plain logs re-read
     val plainSize = Files.size(d.resolve("runA_u1.log"))
-    assert(jobsOf(glob, LogPipeline.LoadConfig(bigFileBytes = plainSize)) == 9)
+    assert(jobsOf(glob, LogPipeline.LoadConfig(bigFileBytes = plainSize)) == 7)
   }
 }
