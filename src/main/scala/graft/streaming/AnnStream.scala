@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ext.IvfAnn
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental IVF index maintenance — the vector-side mirror of
   * [[IndexStream]]: embeddings arrive in micro-batches and a persisted,
@@ -43,29 +43,21 @@ object AnnStream {
 
   /** Watch `vecsDir` for parquet files with (vec_id LONG, ev
     * ARRAY<DOUBLE>); per micro-batch, assign against the fixed
-    * `centroids` codebook and extend the index at `indexPath`.
-    * `AvailableNow` drains pending files then stops; pass
-    * `availableNow = false` to keep watching. */
+    * `centroids` codebook and extend the index at `indexPath`. */
   def run(
       spark: SparkSession,
       vecsDir: String,
       checkpointDir: String,
       indexPath: String,
-      centroids: Array[(Int, Seq[Double])],
-      availableNow: Boolean = true): StreamingQuery = {
+      centroids: Array[(Int, Seq[Double])]): StreamingQuery = {
 
     val cents = codebook(centroids)
     val stream = spark.readStream
       .schema("vec_id LONG, ev ARRAY<DOUBLE>")
       .parquet(vecsDir)
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexPath, cents)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, indexPath, cents)
+    }
   }
 
   /** One epoch: assign the batch against the fixed codebook and append

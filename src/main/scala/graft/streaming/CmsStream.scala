@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming Count-Min maintenance — the FREQUENCY member of the
   * sketch-stream family, completing it ([[SketchStream]] = quantiles,
@@ -52,19 +52,13 @@ object CmsStream {
       spark: SparkSession,
       docsDir: String,
       checkpointDir: String,
-      storePath: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      storePath: String): StreamingQuery = {
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .parquet(docsDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, storePath)
+    }
   }
 
   /** One batch: tokenize, build the batch's own cells, append

@@ -40,8 +40,7 @@ object DeconStream {
       docsDir: String,
       checkpointDir: String,
       benchmark: DataFrame,
-      n: Int = 5,
-      availableNow: Boolean = true)(
+      n: Int = 5)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     import spark.implicits._
 
@@ -49,14 +48,8 @@ object DeconStream {
       .select(explode(distinctGrams(col("text"), n)).as("g")).distinct()
       .localCheckpoint(true)
 
-    val stream = spark.readStream
-      .option("wholetext", "true")
-      .text(docsDir)
-      .select($"value", input_file_name().as("path"))
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    MicroBatch.drain(MicroBatch.docs(spark, docsDir), checkpointDir) {
+      (batch, batchId) =>
         val docs = batch.localCheckpoint(true)
         val hits = docs
           .select($"path", explode(distinctGrams($"value", n)).as("g"))
@@ -66,9 +59,6 @@ object DeconStream {
           .select($"path", $"value",
             coalesce($"n_shared", lit(0L)).as("n_shared"))
         sink(flagged, batchId)
-      }
-    (if (availableNow) writer.trigger(
-      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 }

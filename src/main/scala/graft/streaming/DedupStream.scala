@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental exact deduplication over a document stream (north-star
   * dedup pillar, streaming form): new files arrive in a watch folder; only
@@ -36,27 +36,11 @@ object DedupStream {
       spark: SparkSession,
       docsDir: String,
       checkpointDir: String,
-      storeDir: String,
-      availableNow: Boolean = true)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-
-    // documents are file-sized (not multi-GB logs), so contents may ride
-    // the stream; one row per file
-    val stream = spark.readStream
-      .option("wholetext", "true")
-      .text(docsDir)
-      .select($"value", input_file_name().as("path"))
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, sink)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
-  }
+      storeDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.drain(MicroBatch.docs(spark, docsDir), checkpointDir) {
+      (batch, batchId) => processBatch(batch, batchId, storeDir, sink)
+    }
 
   /** One epoch: in-batch winners → anti-join the seen store STRICTLY
     * below this batch ([[EpochStore.readBelow]] — own and later

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ext.Graphs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming graph maintenance (r13 verdict item 3): edge micro-batches
   * arrive via the file source, an exactly-once at-rest edge store grows
@@ -63,27 +63,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 object GraphStream {
 
   /** Watch `edgesDir` for parquet files with (src LONG, dst LONG);
-    * per micro-batch, extend the edge store and re-converge ranks.
-    * `AvailableNow` drains pending files then stops. */
+    * per micro-batch, extend the edge store and re-converge ranks. */
   def run(
       spark: SparkSession,
       edgesDir: String,
       checkpointDir: String,
       storePath: String,
       maxIters: Int = 100,
-      scale: Long = 1000000000L,
-      availableNow: Boolean = true): StreamingQuery = {
+      scale: Long = 1000000000L): StreamingQuery = {
     val stream = spark.readStream
       .schema("src LONG, dst LONG")
       .parquet(edgesDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(spark, batch, batchId, storePath, maxIters, scale)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(spark, batch, batchId, storePath, maxIters, scale)
+      ()
+    }
   }
 
   /** One epoch: persist the batch's edges exactly-once, then re-converge

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ext.Hll
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming cardinality maintenance — the HLL twin of [[SketchStream]]:
   * per-window distinct-user estimates over an event stream with NO
@@ -41,19 +41,13 @@ object HllStream {
       spark: SparkSession,
       eventsDir: String,
       checkpointDir: String,
-      storePath: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      storePath: String): StreamingQuery = {
     val stream = spark.readStream
       .schema("ts TIMESTAMP, user_id LONG")
       .parquet(eventsDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, storePath)
+    }
   }
 
   def processBatch(batch: DataFrame, batchId: Long,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental inverted-index maintenance — the streaming form of
   * [[graft.sources.InvertedIndex.buildPostings]]: the corpus arrives in
@@ -48,60 +48,54 @@ object IndexStream {
 
   /** Watch `docsDir` for parquet files with (doc_id LONG, text STRING);
     * per micro-batch, tokenize and append live postings to `table` and a
-    * (batch_id, nd, sum_dl) row to `<table>_stats`. `AvailableNow` drains
-    * pending files then stops; pass `availableNow = false` to keep
-    * watching. Tokenization (split on single space, drop empty) is the
-    * SAME expression as the sealed build and the `x_bm25_topk` QueryDef.
+    * (batch_id, nd, sum_dl) row to `<table>_stats`. Tokenization (split
+    * on single space, drop empty) is the SAME expression as the sealed
+    * build and the `x_bm25_topk` QueryDef.
     */
   def run(
       spark: SparkSession,
       docsDir: String,
       checkpointDir: String,
       table: String,
-      buckets: Int,
-      availableNow: Boolean = true): StreamingQuery = {
+      buckets: Int): StreamingQuery = {
 
     val stream = spark.readStream
       .schema("doc_id LONG, text STRING")
       .parquet(docsDir)
 
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val statsTable = table + "_stats"
-        val committed = spark.catalog.tableExists(statsTable) &&
-          !spark.table(statsTable)
-            .filter(col("batch_id") === batchId).isEmpty
-        if (!committed) {
-          // one tokenization of the batch: tf is the materialization
-          // barrier, dl (= sum of tf per doc) derives from it — the same
-          // single-pass shape as the sealed buildPostings
-          val tf = batch.localCheckpoint(true)
-            .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-            .filter(length(col("term")) > 0)
-            .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-            .localCheckpoint(true)
-          val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-          val postings = tf
-            .join(dl, "doc_id")
-            .select("term", "doc_id", "tf", "dl")
-          postings.write
-            .bucketBy(buckets, "term").sortBy("term")
-            .mode(SaveMode.Append).format("parquet").saveAsTable(table)
-          // stats row LAST: it doubles as the idempotence commit marker
-          dl.agg(lit(batchId).as("batch_id"), count(lit(1)).as("nd"),
-              sum(col("dl")).as("sum_dl"))
-            .write.mode(SaveMode.Append).format("parquet")
-            .saveAsTable(statsTable)
-          // the appends run through the micro-batch's CLONED session
-          // (batch's lineage), whose saveAsTable refreshes only the
-          // clone's relation cache — invalidate the outer session's too,
-          // or its readers keep the pre-append file listing
-          spark.catalog.refreshTable(table)
-          spark.catalog.refreshTable(statsTable)
-        }
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      val statsTable = table + "_stats"
+      val committed = spark.catalog.tableExists(statsTable) &&
+        !spark.table(statsTable)
+          .filter(col("batch_id") === batchId).isEmpty
+      if (!committed) {
+        // one tokenization of the batch: tf is the materialization
+        // barrier, dl (= sum of tf per doc) derives from it — the same
+        // single-pass shape as the sealed buildPostings
+        val tf = batch.localCheckpoint(true)
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+          .filter(length(col("term")) > 0)
+          .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+          .localCheckpoint(true)
+        val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
+        val postings = tf
+          .join(dl, "doc_id")
+          .select("term", "doc_id", "tf", "dl")
+        postings.write
+          .bucketBy(buckets, "term").sortBy("term")
+          .mode(SaveMode.Append).format("parquet").saveAsTable(table)
+        // stats row LAST: it doubles as the idempotence commit marker
+        dl.agg(lit(batchId).as("batch_id"), count(lit(1)).as("nd"),
+            sum(col("dl")).as("sum_dl"))
+          .write.mode(SaveMode.Append).format("parquet")
+          .saveAsTable(statsTable)
+        // the appends run through the micro-batch's CLONED session
+        // (batch's lineage), whose saveAsTable refreshes only the
+        // clone's relation cache — invalidate the outer session's too,
+        // or its readers keep the pre-append file listing
+        spark.catalog.refreshTable(table)
+        spark.catalog.refreshTable(statsTable)
       }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.parse.{EcjPipeline, LogPipeline}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental ingest (SURVEY.md §2.12 T1–T3): the reference's folder-watch +
   * size-threshold-flush shell loop (scripts/load_csv_to_cloud.sh:107-148)
@@ -12,16 +12,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - T1 new-file detection: the streaming file source's checkpoint replaces
   *    the grep/SQL-count dedup — a file is processed exactly once;
   *  - T2 flush unit: the micro-batch replaces the 500 MB CSV buffer;
-  *    `Trigger.AvailableNow` drains everything pending then stops (the batch
-  *    driver), `ProcessingTime` keeps watching (the daemon);
+  *    [[MicroBatch.drain]] runs everything pending, then stops; re-running
+  *    it on the same checkpoint picks up only the files that arrived since;
   *  - T3 exactly-once: checkpoint + idempotent `foreachBatch` (batchId guard
   *    or upsert sink) replaces the reserve-id/sentinel-delete dance.
   */
 object IngestStream {
 
   /** Watch `logDir` for Clojush logs; per micro-batch, parse and hand the
-    * four tables to `sink`. Runs until no files remain (AvailableNow) when
-    * `availableNow = true`.
+    * four tables to `sink`. Runs until no files remain.
     *
     * The stream carries file LISTINGS, not file contents
     * ([[listingStream]], shared with [[runEcj]]). The exactly-once spine
@@ -34,7 +33,7 @@ object IngestStream {
     * content-carrying source documented as an open caveat.
     *
     * @param initialProblemDim seed (problem_name, problem_id) rows, e.g.
-    *        read back from the dimension table on daemon restart, so ids
+    *        read back from the dimension table before a re-run, so ids
     *        stay stable across PROCESS restarts too (within one run the
     *        dictionary is threaded batch-to-batch automatically)
     */
@@ -43,7 +42,6 @@ object IngestStream {
       logDir: String,
       checkpointDir: String,
       cfg: LogPipeline.LoadConfig = LogPipeline.LoadConfig(),
-      availableNow: Boolean = true,
       initialProblemDim: Option[DataFrame] = None)(
       sink: (LogPipeline.LoadedTables, Long) => Unit): StreamingQuery = {
     // problem dictionary accumulated across micro-batches (get-or-create,
@@ -57,15 +55,15 @@ object IngestStream {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq)
       .getOrElse(Nil)
 
-    listingStream(spark, logDir, checkpointDir, availableNow) { (statuses, batchId) =>
+    listingStream(spark, logDir, checkpointDir) { (statuses, batchId) =>
       // the file-count drift guard also catches a listed-but-unparsed file
       // loudly (e.g. deleted between the source's listing and this batch's
       // read — logs are immutable by contract, so that is corruption, not churn)
       val (tables, nextDim) = LogPipeline.tablesFromStatuses(spark, statuses,
         cfg.baseId + batchId * idWindow, cfg, dimSeq, prelisted = None)
       dimSeq = nextDim
-      // the cached per-batch Dataset must not outlive the batch — under the
-      // ProcessingTime daemon an un-released cache grows without bound
+      // the cached per-batch Dataset must not outlive the batch — over a
+      // many-batch drain an un-released cache grows with every batch
       try sink(tables, batchId) finally tables.release()
     }
   }
@@ -84,10 +82,9 @@ object IngestStream {
       statDir: String,
       checkpointDir: String,
       baseId: Long = 0L,
-      bigFileBytes: Long = LogPipeline.LoadConfig().bigFileBytes,
-      availableNow: Boolean = true)(
+      bigFileBytes: Long = LogPipeline.LoadConfig().bigFileBytes)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    listingStream(spark, statDir, checkpointDir, availableNow) { (statuses, batchId) =>
+    listingStream(spark, statDir, checkpointDir) { (statuses, batchId) =>
       sink(EcjPipeline.gensFromStatuses(spark, statuses,
         baseId + batchId * idWindow, bigFileBytes), batchId)
     }
@@ -100,45 +97,38 @@ object IngestStream {
     * mtimeMillis) listing sorted by path, with its batchId; binaryFile's
     * `path` column is Hadoop's unescaped `Path.toString`, so
     * `LogPipeline.renderPath` turns it into the `_metadata.file_path` form
-    * the id map must match. The trigger is `AvailableNow` (drain, then
-    * stop) or a 10 s `ProcessingTime` daemon.
+    * the id map must match. [[MicroBatch.drain]] runs it.
     */
   private def listingStream(
       spark: SparkSession,
       dir: String,
-      checkpointDir: String,
-      availableNow: Boolean)(
+      checkpointDir: String)(
       onBatch: (Seq[(String, Long, Long)], Long) => Unit): StreamingQuery = {
     import spark.implicits._
-    spark.readStream
+    val listing = spark.readStream
       .format("binaryFile")
       // binaryFile's own fixed schema — the streaming source demands it
       // spelled out; `content` is pruned away below and therefore never read
       .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
       .load(dir)
       .select($"path", $"length", $"modificationTime")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the batch frame IS the listing (metadata-only rows), file-count
-        // bounded by construction (maxFilesPerTrigger-sized)
-        val statuses = batch.collect().map { r =>
-          (LogPipeline.renderPath(new org.apache.hadoop.fs.Path(r.getString(0))),
-            r.getLong(1), r.getTimestamp(2).getTime)
-        }
-        onBatch(statuses.distinct.sortBy(_._1).toSeq, batchId)
+    MicroBatch.drain(listing, checkpointDir) { (batch, batchId) =>
+      // the batch frame IS the listing (metadata-only rows): one row per
+      // new file; no maxFilesPerTrigger is set, so a backlog is one batch
+      val statuses = batch.collect().map { r =>
+        (LogPipeline.renderPath(new org.apache.hadoop.fs.Path(r.getString(0))),
+          r.getLong(1), r.getTimestamp(2).getTime)
       }
-      .trigger(if (availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime("10 seconds"))
-      .start()
+      onBatch(statuses.distinct.sortBy(_._1).toSeq, batchId)
+    }
   }
 
   /** Ids are unique across batches by offsetting with the batchId
     * (deterministic per batch: path-ordered). The per-batch id window is
     * 1e12: a backlog drained by AvailableNow is one micro-batch, so the
     * window must exceed any plausible file count — at 1e12 ids per batch,
-    * Long overflows only after ~9.2M batches (years of a 10s daemon
-    * trigger).
+    * Long overflows only after ~9.2M batches (a re-run drain every 10 s
+    * for years).
     */
   private val idWindow = 1000000000000L
 

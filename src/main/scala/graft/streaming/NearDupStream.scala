@@ -4,7 +4,7 @@ import graft.ext.MinHashDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental NEAR-duplicate suppression over a document stream — the
   * streaming form of banded LSH dedup, in BOTH signature families:
@@ -50,11 +50,10 @@ object NearDupStream {
       checkpointDir: String,
       storeDir: String,
       numHashes: Int = 32,
-      bands: Int = 8,
-      availableNow: Boolean = true)(
+      bands: Int = 8)(
       sink: (DataFrame, Long) => Unit): StreamingQuery = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    runBanded(spark, docsDir, checkpointDir, storeDir, availableNow)(
+    runBanded(spark, docsDir, checkpointDir, storeDir)(
       minhashBandify(numHashes, bands))(sink)
   }
 
@@ -91,10 +90,9 @@ object NearDupStream {
       spark: SparkSession,
       docsDir: String,
       checkpointDir: String,
-      storeDir: String,
-      availableNow: Boolean = true)(
+      storeDir: String)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    runBanded(spark, docsDir, checkpointDir, storeDir, availableNow)(
+    runBanded(spark, docsDir, checkpointDir, storeDir)(
       simhashBandify)(sink)
 
   /** The SimHash banding stage (shared by [[runSimHash]] and the
@@ -137,8 +135,8 @@ object NearDupStream {
     * RE-ENTERS the kept stream. That is the stated trade (bounded store
     * vs unbounded memory of every document ever seen); run without a
     * TTL when exact long-horizon suppression is required. Call between
-    * micro-batches (single compactor, no concurrent writer — e.g. from
-    * the AvailableNow drain's completion hook or a maintenance cron). */
+    * micro-batches (single compactor, no concurrent writer — e.g. after
+    * a [[MicroBatch.drain]] returns, or from a maintenance cron). */
   def compactStore(spark: SparkSession, storeDir: String,
       ttlEpochs: Option[Long] = None): Unit =
     EpochStore.compactSeen(spark, storeDir,
@@ -155,26 +153,12 @@ object NearDupStream {
       spark: SparkSession,
       docsDir: String,
       checkpointDir: String,
-      storeDir: String,
-      availableNow: Boolean)(
+      storeDir: String)(
       bandify: DataFrame => DataFrame)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-
-    val stream = spark.readStream
-      .option("wholetext", "true")
-      .text(docsDir)
-      .select($"value", input_file_name().as("path"))
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBanded(batch, batchId, storeDir, bandify, sink)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.drain(MicroBatch.docs(spark, docsDir), checkpointDir) {
+      (batch, batchId) => processBanded(batch, batchId, storeDir, bandify, sink)
+    }
 
   /** One epoch of the banded skeleton: in-batch bucket winners →
     * anti-match bands registered STRICTLY below this batch

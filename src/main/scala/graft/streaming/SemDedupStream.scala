@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental SEMANTIC deduplication over an embedding stream — the
   * streaming form of [[graft.ext.SemDedup]], completing batch/streaming
@@ -84,25 +84,12 @@ object SemDedupStream {
       checkpointDir: String,
       storeDir: String,
       centroids: Array[Array[Double]],
-      tau: Double,
-      availableNow: Boolean = true)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-
-    val stream = spark.readStream
-      .option("wholetext", "true")
-      .text(vecsDir)
-      .select($"value", input_file_name().as("path"))
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      tau: Double)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.drain(MicroBatch.docs(spark, vecsDir), checkpointDir) {
+      (batch, batchId) =>
         processBatch(batch, batchId, storeDir, centroids, tau, sink)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
-  }
+    }
 
   /** Auto-k entry point: codebook derived from `bootstrap` under the
     * batch auto-k rule via [[bootstrapCodebook]], then the explicit-
@@ -116,11 +103,10 @@ object SemDedupStream {
       storeDir: String,
       bootstrap: DataFrame,
       targetClusterSize: Int,
-      tau: Double,
-      availableNow: Boolean)(
+      tau: Double)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
     run(spark, vecsDir, checkpointDir, storeDir,
-      bootstrapCodebook(bootstrap, targetClusterSize), tau, availableNow)(sink)
+      bootstrapCodebook(bootstrap, targetClusterSize), tau)(sink)
 
   /** One epoch: parse + quantize → in-batch suppression → anti-match
     * kept vectors registered STRICTLY below this batch

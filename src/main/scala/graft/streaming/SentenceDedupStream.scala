@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental SENTENCE-level deduplication over a document stream — the
   * streaming twin of the `d_sentence_dedup` batch gate (CCNet/RefinedWeb
@@ -31,25 +31,11 @@ object SentenceDedupStream {
       docsDir: String,
       checkpointDir: String,
       storeDir: String,
-      window: Int = 10,
-      availableNow: Boolean = true)(
-      sink: (DataFrame, Long) => Unit): StreamingQuery = {
-    import spark.implicits._
-
-    val stream = spark.readStream
-      .option("wholetext", "true")
-      .text(docsDir)
-      .select($"value", input_file_name().as("path"))
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, window, sink)
-      }
-
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer.trigger(Trigger.ProcessingTime("10 seconds"))).start()
-  }
+      window: Int = 10)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    MicroBatch.drain(MicroBatch.docs(spark, docsDir), checkpointDir) {
+      (batch, batchId) => processBatch(batch, batchId, storeDir, window, sink)
+    }
 
   /** One epoch: sentence-split + hash → in-batch winners → anti-join
     * the seen store STRICTLY below this batch ([[EpochStore.readBelow]]

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming quantile-sketch maintenance — the incremental form of
   * x_quantile_sketch, and the payoff of choosing a MERGEABLE sketch:
@@ -44,19 +44,13 @@ object SketchStream {
       spark: SparkSession,
       eventsDir: String,
       checkpointDir: String,
-      storePath: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      storePath: String): StreamingQuery = {
     val stream = spark.readStream
       .schema("ts TIMESTAMP, value DOUBLE")
       .parquet(eventsDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, storePath)
+    }
   }
 
   /** One batch: cents-quantize, bucket, append cells exactly-once

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming per-window top-k maintenance — the ORDER-STATISTICS member
   * of the sketch-stream family ([[SketchStream]] = quantiles,
@@ -64,19 +64,13 @@ object TopKStream {
       spark: SparkSession,
       eventsDir: String,
       checkpointDir: String,
-      storePath: String,
-      availableNow: Boolean = true): StreamingQuery = {
+      storePath: String): StreamingQuery = {
     val stream = spark.readStream
       .schema("event_id LONG, ts TIMESTAMP, value DOUBLE")
       .parquet(eventsDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow())
-     else writer).start()
+    MicroBatch.drain(stream, checkpointDir) { (batch, batchId) =>
+      processBatch(batch, batchId, storePath)
+    }
   }
 
   /** One batch: window, bounded-heap top-k, append exactly-once.

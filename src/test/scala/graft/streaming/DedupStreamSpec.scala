@@ -58,6 +58,32 @@ class DedupStreamSpec extends AnyFunSuite {
     val hashes = spark.read.parquet(store)
       .select("content_hash").collect().map(_.getLong(0)).toSeq
     assert(hashes.length == 3 && hashes.distinct.length == 3, s"store: $hashes")
+
+    // a re-run with no new files returns and changes nothing: the folder
+    // watch is a re-run of the drain on the same checkpoint
+    val emittedBefore = emitted.toList
+    drain()
+    assert(emitted.toList == emittedBefore, s"empty re-run emitted: $emitted")
+    assert(spark.read.parquet(store).count() == 3L, "empty re-run wrote the store")
+  }
+
+  test("path is _metadata.file_path, the form the batch loads key on") {
+    val dir = tmp("dpath")
+    val ckpt = tmp("dpath_ck")
+    val store = tmp("dpath_store") + "/store"
+    // a space and a `%` are where input_file_name() and _metadata differ
+    Files.writeString(Paths.get(dir, "a.txt"), "alpha")
+    Files.writeString(Paths.get(dir, "run B.txt"), "beta")
+    Files.writeString(Paths.get(dir, "r%41.txt"), "gamma")
+    val emitted = mutable.ArrayBuffer.empty[String]
+    DedupStream.run(spark, dir, ckpt, store) { (fresh, _) =>
+      emitted ++= fresh.select("path").collect().map(_.getString(0))
+    }.awaitTermination()
+    val batchPaths = spark.read.option("wholetext", "true").text(dir)
+      .select("_metadata.file_path").collect().map(_.getString(0)).toSet
+    assert(batchPaths.size == 3, s"batch paths: $batchPaths")
+    assert(emitted.toSet == batchPaths && emitted.size == 3,
+      s"stream paths $emitted != batch paths $batchPaths")
   }
 
   test("re-fired batch re-emits identically; store partition overwrite, not append") {

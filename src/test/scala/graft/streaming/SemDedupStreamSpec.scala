@@ -242,7 +242,7 @@ class SemDedupStreamSpec extends AnyFunSuite {
       }
       val q =
         if (useAuto) SemDedupStream.run(spark, dir, ckpt, store,
-          boot, 50, 0.95, availableNow = true)(sink)
+          boot, 50, 0.95)(sink)
         else SemDedupStream.run(spark, dir, ckpt, store, cents, 0.95)(sink)
       q.awaitTermination()
       emitted.toSeq.sorted
